@@ -26,6 +26,26 @@ object SparkEntry {
       ops.SearchOps.queries ++ ops.StatOps.queries ++
       ops.SpanOps.queries ++ ops.ScrubOps.queries ++ ops.BpeOps.queries
 
+  /** The catalog query a name or prefix stands for: the exact key first,
+    * then the `qNN_` boundary match (`q10` is `q10_json_props`, not
+    * `q100_…`/`q101_…`), then a unique prefix. No match or an ambiguous
+    * prefix is an error.
+    */
+  def resolve(prefix: String): (String, (SparkSession, String) => DataFrame) = {
+    val qs = queries
+    qs.get(prefix).map(prefix -> _).getOrElse {
+      val hits = qs.toSeq.filter(_._1.startsWith(prefix)).sortBy(_._1)
+      (hits.filter(_._1.startsWith(prefix + "_")), hits) match {
+        case (Seq(q), _) => q
+        case (_, Seq(q)) => q
+        case (_, Seq()) =>
+          throw new IllegalArgumentException(s"no query named $prefix")
+        case (_, many) => throw new IllegalArgumentException(
+          s"ambiguous prefix $prefix: ${many.map(_._1).mkString(", ")}")
+      }
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → weaker rows-only check.
     */

@@ -90,7 +90,7 @@ object Tables {
     * leaf files, not an empty signature an in-place rewrite would never
     * change. The ONE key definition for every per-directory memo in the
     * engine (dupMultForDir, CorpusStats.forDir): a directory regenerated
-    * within one JVM — a ScaleUp rerun, a Scratch corpus rewrite — or
+    * within one JVM — a ScaleUp rerun, an in-place corpus rewrite — or
     * reached via an aliasing relative path changes the key, so the memo
     * re-probes without anyone calling an invalidation hook. MD5 of the
     * full fold, not String.hashCode: a 32-bit hash can collide between
@@ -175,7 +175,7 @@ object Tables {
     * eviction: inserting a fresh snapshot's entry RETIRES the
     * group's prior entries (stale snapshots of the same canonical
     * directory) instead of stranding them — a long-lived JVM that
-    * regenerates a dir in a loop (ScaleUp reruns, a Scratch sweep
+    * regenerates a dir in a loop (ScaleUp reruns, a probe sweep
     * rewriting its corpus per arm) would otherwise grow the memo without
     * bound. The group is the canonical dir; the key is the snapshot key.
     * TrieMap iteration is snapshot-consistent, so concurrent

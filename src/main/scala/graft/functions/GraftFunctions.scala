@@ -160,12 +160,18 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotently register all graft functions into `spark`'s registry. */
+  /** Idempotently register all graft functions into `spark`'s registry:
+    * a name already bound to the same builder instance (an earlier call,
+    * or [[GraftExtensions]]) is left alone, so repeat calls register
+    * nothing.
+    */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name))
+          .exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

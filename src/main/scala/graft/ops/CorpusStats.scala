@@ -49,7 +49,7 @@ object CorpusStats {
   // Tables.pathSnapshotKey fold over BOTH inputs the answer derives from
   // (the documents part files and the persisted corpus_stats table), NOT
   // the raw dir string: a directory regenerated in place (ScaleUp rerun,
-  // Scratch corpus rewrite) or an aliasing relative path would otherwise
+  // in-place corpus rewrite) or an aliasing relative path would otherwise
   // serve stale stats and steer the stats-dispatched operators onto the
   // arm calibrated for the OLD corpus — the dupMultCache hazard class,
   // fixed with the same mechanism.
@@ -89,13 +89,19 @@ object CorpusStats {
   }
 
   /** Read previously-persisted stats; None if absent/unreadable (callers
-    * fall back to [[compute]] or let the operators probe).
+    * fall back to [[compute]] or let the operators probe). Absence is the
+    * normal case for an un-ANALYZEd corpus, so it is checked on the file
+    * system first instead of letting the parquet reader log a failed read.
     */
   def read(s: SparkSession, path: String): Option[CorpusStats] =
     try {
-      val r = s.read.parquet(path)
-        .select("n_rows", "n_distinct", "exact_dup_pair_floor").head()
-      Some(CorpusStats(r.getLong(0), r.getLong(1), r.getLong(2)))
+      val p = new org.apache.hadoop.fs.Path(path)
+      if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
+      else {
+        val r = s.read.parquet(path)
+          .select("n_rows", "n_distinct", "exact_dup_pair_floor").head()
+        Some(CorpusStats(r.getLong(0), r.getLong(1), r.getLong(2)))
+      }
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** ANALYZE: compute and persist in one step. Also refreshes the in-JVM

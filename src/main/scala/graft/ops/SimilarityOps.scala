@@ -366,7 +366,7 @@ object SimilarityOps {
     *
     * Keyed on (canonical path, file-listing signature) — name/length/mtime
     * of every part file — NOT the raw dir string: a directory regenerated
-    * within one JVM (ScaleUp reruns, Scratch corpus rewrites) or reached
+    * within one JVM (ScaleUp reruns, in-place corpus rewrites) or reached
     * via an aliasing relative path would otherwise serve a stale
     * multiplicity, and in the gated regime the two dispatch arms are not
     * output-equal (r09 ADVICE item, the lmSeen hazard class). A rewrite

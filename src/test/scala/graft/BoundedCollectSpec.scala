@@ -59,10 +59,10 @@ class BoundedCollectSpec extends SparkSpec {
       try {
         val multi = spark.range(64).toDF("id").repartition(16)
         multi.count() // materialize inputs outside the window
-        SparkSpec.waitForListenerBus(spark)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
         val j0 = jobs.get()
         val got = Tables.boundedCollect(multi, 1000, "one-job pin")
-        SparkSpec.waitForListenerBus(spark)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
         assert(got.length === 64)
         assert(jobs.get() - j0 === 1,
           s"boundedCollect must stay one job, ran ${jobs.get() - j0}")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Pins the round-10 fix for the r09 ADVICE staleness hazard: the
   * duplicate-multiplicity dispatch memo (`SimilarityOps.dupMultForDir`)
   * used to key on the raw directory STRING, so a directory regenerated
-  * within one JVM (ScaleUp reruns, Scratch corpus rewrites) served a stale
+  * within one JVM (ScaleUp reruns, in-place corpus rewrites) served a stale
   * multiplicity — and in the gated regime the two dispatch arms are not
   * output-equal, so stale dispatch could change q64/q132 results. The memo
   * now keys on (canonical path, part-file signature): a rewrite changes

@@ -245,6 +245,18 @@ class FunctionsSpec extends SparkSpec {
     assert(r.getDouble(0) === 11.0)
     assert(r.getLong(1) === 3L) // both inputs have bits 0,1 set -> majority 1s there
     assert(r.getInt(2) === 16)
+    // a repeat call registers nothing: each registration builds a fresh
+    // ExpressionInfo, so identical info instances mean no name was re-bound
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    def infos = GraftFunctions.builders.map { case (name, _) =>
+      registry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)).orNull }
+    val before = infos
+    assert(before.forall(_ != null))
+    GraftFunctions.ensureRegistered(spark)
+    assert(infos.zip(before).forall { case (a, b) => a eq b },
+      "a second ensureRegistered call re-registered a function")
   }
 
   test("non-integer literal band count is rejected, not truncated") {

@@ -19,31 +19,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
 
-  /** Drain the async listener bus so a SparkListener-counting assertion
-    * reads a settled value (SparkListener events are delivered on the
-    * AsyncEventQueue — a count read right after an action races late
-    * deliveries). `LiveListenerBus.waitUntilEmpty` is private[spark], so
-    * this goes through reflection; a bus that exposes neither spelling
-    * falls back to a short settle sleep rather than failing the test
-    * infrastructure.
-    */
-  def waitForListenerBus(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-      m match {
-        case Some(wm) => wm.invoke(bus); ()
-        case None =>
-          val timed = bus.getClass.getMethods.find(m =>
-            m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-          timed.foreach(_.invoke(bus, java.lang.Long.valueOf(10000L)))
-          if (timed.isEmpty) Thread.sleep(300)
-      }
-    } catch { case _: ReflectiveOperationException => Thread.sleep(300) }
-  }
-
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -548,6 +548,37 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(sink).count() === 9)
   }
 
+  test("live rate source: generated trades land exactly once across " +
+      "processing-time micro-batches") {
+    import graft.streaming.TradeSource
+    val sink = tmpDir("live_sink")
+    val q = IngestPipeline.runIngest(spark,
+      TradeSource.rate(spark, rowsPerSecond = 50), sink, tmpDir("live_ckpt"),
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(
+        "1 second"))
+    // an unbounded source never finishes processAllAvailable: poll for
+    // committed batch directories (a job commit writes _SUCCESS) instead
+    def committed: Seq[String] = Option(new java.io.File(sink).listFiles())
+      .toSeq.flatten
+      .filter(f => f.getName.startsWith("batch_id=") &&
+        new java.io.File(f, "_SUCCESS").exists())
+      .map(_.getPath)
+    val deadline = System.currentTimeMillis() + 60000
+    try {
+      while (committed.size < 2 && q.exception.isEmpty &&
+          System.currentTimeMillis() < deadline)
+        Thread.sleep(200)
+    } finally q.stop()
+    q.exception.foreach(e => fail(e))
+    val batches = committed
+    assert(batches.size >= 2,
+      s"expected two committed micro-batches within 60 s, got $batches")
+    val out = spark.read.option("basePath", sink).parquet(batches: _*)
+    val rows = out.count()
+    assert(rows > 0)
+    assert(rows === out.select("trade_id").distinct().count())
+  }
+
   test("jdbc sink arm converges to exactly-once across replays") {
     import graft.streaming.IngestPipeline.JdbcSink
     implicit val sqlCtx = spark.sqlContext
