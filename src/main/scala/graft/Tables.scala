@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Loaders for the driver's parquet testdata (TESTDATA.md) plus shared
   * determinism helpers used by every oracle-checked query.
@@ -22,10 +22,26 @@ object Tables {
     * scope would break any query planned later against a `t`-loaded
     * frame. Consequence: unrelated reads of nanos-timestamped parquet in
     * the same session decode those columns as bigint instead of erroring.
+    * The schema memo below leaves this side effect exactly as it was.
+    *
+    * The schema Parquet inference returns is memoized per table snapshot
+    * ([[snapshotMemo]] under [[memoGroup]] of the table path), so only the
+    * first call for a snapshot pays inference's footer-read Spark job;
+    * every later call reads with `spark.read.schema(memo)` and starts no
+    * job. The key is the table's [[pathSnapshotKey]] plus the session's
+    * values of the settings that change what inference returns
+    * ([[SchemaInferenceConfs]], `nanosAsLong` among them): a rewritten
+    * directory or a flipped setting misses and re-infers. Only a path
+    * whose snapshot walk sees at least one local file is memoized — any
+    * other path (a non-local URI, a missing table) would key on its name
+    * alone and never invalidate, so it keeps per-call inference. Each call
+    * still builds a fresh relation with fresh attribute ids; no DataFrame
+    * or file index is cached, so self-joins of two `t` reads resolve as
+    * they always did.
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     // normalize ts to a session-tz TIMESTAMP whatever the writer encoded:
     // the driver stores raw TIMESTAMP(NANOS) (read as long under
     // nanosAsLong), other writers may store TIMESTAMP or TIMESTAMP_NTZ
@@ -36,6 +52,37 @@ object Tables {
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _ => df
     } else df
+  }
+
+  /** Session settings that change the schema Parquet inference returns
+    * (the inputs of Spark's `ParquetToSparkSchemaConverter` plus schema
+    * merging and summary files) — part of every [[t]] schema-memo key.
+    */
+  private val SchemaInferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled")
+
+  private val schemaMemo =
+    scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val (snapshot, files) = pathSnapshot(path)
+    if (files == 0) spark.read.parquet(path)
+    else {
+      val key = (snapshot +: SchemaInferenceConfs.map(k =>
+        s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString("|")
+      val schema = snapshotMemo(schemaMemo, memoGroup(path), key)(
+        spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
   }
 
   val names: Seq[String] = Seq(
@@ -89,16 +136,19 @@ object Tables {
     * partitioned/nested layout (`label=0/part-*.parquet`) contributes its
     * leaf files, not an empty signature an in-place rewrite would never
     * change. The ONE key definition for every per-directory memo in the
-    * engine (dupMultForDir, CorpusStats.forDir): a directory regenerated
-    * within one JVM — a ScaleUp rerun, an in-place corpus rewrite — or
-    * reached via an aliasing relative path changes the key, so the memo
-    * re-probes without anyone calling an invalidation hook. MD5 of the
-    * full fold, not String.hashCode: a 32-bit hash can collide between
-    * two same-file-count snapshots, silently serving the stale entry the
-    * key exists to retire. A missing path keys on the canonical path
-    * alone — the subsequent read fails loud.
+    * engine (dupMultForDir, CorpusStats.forDir, the [[t]] schema memo): a
+    * directory regenerated within one JVM — a ScaleUp rerun, an in-place
+    * corpus rewrite — or reached via an aliasing relative path changes the
+    * key, so the memo re-probes without anyone calling an invalidation
+    * hook. MD5 of the full fold, not String.hashCode: a 32-bit hash can
+    * collide between two same-file-count snapshots, silently serving the
+    * stale entry the key exists to retire. A missing path keys on the
+    * canonical path alone — the subsequent read fails loud.
     */
-  def pathSnapshotKey(path: String): String = {
+  def pathSnapshotKey(path: String): String = pathSnapshot(path)._1
+
+  /** [[pathSnapshotKey]] together with the number of files its walk saw. */
+  private def pathSnapshot(path: String): (String, Int) = {
     val root = new java.io.File(path).getCanonicalFile
     // Only symlinked DIRECTORIES are skipped (a link cycle inside a
     // scratch/testdata tree must not turn the memo key into an infinite
@@ -131,7 +181,7 @@ object Tables {
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    s"${root.getPath}#${files.size}#$md5"
+    (s"${root.getPath}#${files.size}#$md5", files.size)
   }
 
   private val MemoSep = "\u0000" // NUL never appears in a canonical path

@@ -225,7 +225,11 @@ object CurationOps {
         // slice scan a third time over the corpus
         (acHits, probes.toSeq.toDF("eval_id", "needle"))
       }
-    broadcast(probesForJoin)
+    // no broadcast hint on the probes: they are the preserved side of the
+    // left join, which Spark cannot build, so a hint there is dropped with
+    // a HintErrorLogger warning; `hits` (one row per matched probe) is
+    // already small enough for the planner's own size-based choice
+    probesForJoin
       .join(hits, Seq("eval_id"), "left")
       .select(col("eval_id"), col("needle"),
         coalesce(col("n_hits"), lit(0L)).as("n_train_hits"),

@@ -345,8 +345,12 @@ object EventOps {
       .groupBy("event_type")
       .agg(count(col("user_id")).as("exact_users"),
         approx_count_distinct(col("user_id"), 0.02).as("approx_users"))
+    // the value side's key is renamed: both sides derive from eventsDf,
+    // so under one name the join key would compare an attribute with
+    // itself (a trivially true predicate Spark only repairs through its
+    // self-join rewrite)
     val vals = eventsDf
-      .groupBy("event_type")
+      .groupBy(col("event_type").as("v_event_type"))
       .agg(
         // one percentile aggregate with an array argument — a single
         // per-group value buffer serves all three ranks
@@ -356,7 +360,7 @@ object EventOps {
     // event_type group that the single-aggregation form (and the oracle's
     // GROUP BY) retains — both sides group the same input, so <=> keeps
     // the decomposition row-equivalent even with null keys
-    users.join(vals, users("event_type") <=> vals("event_type"))
+    users.join(vals, users("event_type") <=> vals("v_event_type"))
       .select(users("event_type").as("event_type"), col("exact_users"),
         round(element_at(col("ps"), 2), 4).as("exact_p50"),
         (abs(col("approx_users") - col("exact_users"))
