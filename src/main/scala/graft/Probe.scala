@@ -513,9 +513,11 @@ object Probe {
     gate("doremi_partials") {
       val p = s"$root/doremi_partials"
       ops.CurationOps.doremiBatchPartials(c1, lmPath)
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/batch_id=0")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(streaming.BatchDirs.segment(p, 0))
       ops.CurationOps.doremiBatchPartials(c2, lmPath)
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/batch_id=1")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(streaming.BatchDirs.segment(p, 1))
       ops.CurationOps.compactDoremiPartials(spark, p)
       require(dump(ops.CurationOps.doremiFromPartials(
           spark.read.parquet(p))) ==

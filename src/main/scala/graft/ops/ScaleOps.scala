@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.streaming.BatchDirs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -541,7 +542,8 @@ object ScaleOps {
           "keyed compactor instead")
     fs.delete(stagingPath, true)
     contract(live).write.mode("overwrite")
-      .parquet(if (batchSlot) staging + "/batch_id=-1" else staging)
+      .parquet(if (batchSlot) BatchDirs.segment(staging, BatchDirs.SeedId)
+        else staging)
     onStaged(staging)
     swapInto(s, staging, path)
   }
@@ -560,57 +562,66 @@ object ScaleOps {
     */
   def swapInto(spark: SparkSession, staging: String, dir: String): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(staging)
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
+    swapInto(hPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(staging), hPath,
+      new org.apache.hadoop.fs.Path(dir + ".old"))
+  }
+
+  /** [[swapInto]]'s file-system core with the parked name as an argument:
+    * `dir.old` beside a whole store, or a dot-prefixed name inside a keyed
+    * store for one segment (the privacy gate's `.old_N`, invisible to
+    * Spark's listing). The sequence is crashed-swap recovery → park →
+    * publish → rollback on failure → cleanup.
+    */
+  private[graft] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
+      staging: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
+      parked: org.apache.hadoop.fs.Path): Unit = {
     // crashed-swap recovery (the r13 privacy-gate ADVICE window, shared
     // by every store writer): a prior run that died between its two
-    // renames left `dir` missing and the ONLY prior copy parked at
-    // `dir.old` — restore it BEFORE the delete below can discard it, so
-    // a failed publish in THIS run still rolls back to populated state
-    // instead of reporting total loss. `old` alongside an intact `dir`
-    // is the other crash shape (died before the final cleanup) and is
-    // safe to drop.
-    if (fs.exists(old) && !fs.exists(hPath) && !fs.rename(old, hPath))
+    // renames left `dest` missing and the ONLY prior copy at `parked` —
+    // restore it BEFORE the delete below can discard it, so a failed
+    // publish in THIS run still rolls back to populated state instead of
+    // reporting total loss. `parked` alongside an intact `dest` is the
+    // other crash shape (died before the final cleanup) and is safe to
+    // drop.
+    if (fs.exists(parked) && !fs.exists(dest) && !fs.rename(parked, dest))
       throw new java.io.IOException(
-        s"swapInto: crashed-swap recovery $old -> $hPath failed")
-    fs.delete(old, true) // leftover from a crash AFTER publish
-    if (!fs.exists(hPath)) {
-      // first publish: nothing to park — one rename takes the path from
-      // absent to fully written (callers need no bootstrap special case)
-      if (!fs.rename(tmp, hPath))
-        throw new java.io.IOException(
-          s"swapInto: first-publish rename $tmp -> $hPath failed")
-      return
-    }
-    if (!fs.rename(hPath, old))
-      throw new java.io.IOException(s"swapInto: rename $hPath -> $old failed")
+        s"swapInto: crashed-swap recovery $parked -> $dest failed")
+    fs.delete(parked, true) // leftover from a crash AFTER publish
+    // park the live copy; a first publish has nothing to park — one
+    // rename takes the path from absent to fully written (callers need no
+    // bootstrap special case)
+    if (fs.exists(dest) && !fs.rename(dest, parked))
+      throw new java.io.IOException(
+        s"swapInto: park $dest -> $parked failed")
     // a publish failure may THROW rather than return false (local FS
     // raises FileNotFound on a missing staging dir; remote FS clients
     // can surface RuntimeExceptions) — every non-fatal shape must reach
     // the rollback below, or the live path stays missing with the prior
-    // copy parked under .old. The original exception rides along as the
-    // CAUSE so an operator can tell a missing staging dir from a
-    // permission error without FS-side logs.
+    // copy parked. The original exception rides along as the CAUSE so an
+    // operator can tell a missing staging dir from a permission error
+    // without FS-side logs.
     var publishErr: Throwable = null
     val published =
-      try fs.rename(tmp, hPath)
+      try fs.rename(staging, dest)
       catch {
         case scala.util.control.NonFatal(e) => publishErr = e; false
       }
     if (!published) {
-      // roll back so `dir` stays populated; if even that fails, say WHERE
-      // the data survives — a silent rollback failure would present as
-      // total data loss to the next reader
-      if (fs.rename(old, hPath))
-        throw new java.io.IOException(s"swapInto: rename $tmp -> $hPath " +
-          "failed (original restored)", publishErr)
-      else
-        throw new java.io.IOException(s"swapInto: rename $tmp -> $hPath " +
-          s"failed AND rollback failed — original data is intact at $old",
-          publishErr)
+      // roll back so `dest` stays populated (pollers keep reading the
+      // PRIOR state); if even that fails, say WHERE the data survives — a
+      // silent rollback failure would present as total data loss to the
+      // next reader
+      if (fs.exists(parked) && fs.rename(parked, dest))
+        throw new java.io.IOException(s"swapInto: rename $staging -> " +
+          s"$dest failed (prior segment restored)", publishErr)
+      throw new java.io.IOException(
+        s"swapInto: rename $staging -> $dest failed" +
+          (if (fs.exists(parked))
+             s" AND rollback failed — prior copy is intact at $parked"
+           else ""), publishErr)
     }
-    fs.delete(old, true)
+    fs.delete(parked, true)
     ()
   }
 }

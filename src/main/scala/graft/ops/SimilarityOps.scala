@@ -731,9 +731,9 @@ object SimilarityOps {
         "is a caller bug, not an empty curve")
     val e = embDf.select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("enorm", norm(col("embedding")))
-    val probes = broadcast(e.orderBy("vec_id").limit(pCount)
+    val probes = e.orderBy("vec_id").limit(pCount)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("enorm").as("qnorm")))
+        col("enorm").as("qnorm"))
 
     // centroid rank per (probe, label): which cells each nProbe arm scans
     // (annIvfOn's c_cos, ranked per probe instead of globally limited)
@@ -743,7 +743,8 @@ object SimilarityOps {
     // that cancel) must rank LAST as NULL like the oracle's nullif —
     // NaN under a raw divide would sort FIRST in desc order and probe
     // the empty-direction cell (r12 session-2 review finding)
-    val probedCells = broadcast(probes.crossJoin(broadcast(centroidFrame(e)))
+    val probedCells = broadcast(broadcast(probes)
+      .crossJoin(broadcast(centroidFrame(e)))
       .withColumn("c_cos", cosine(col("centroid"), col("q_emb")))
       .withColumn("cent_rank", row_number().over(w))
       .filter(col("cent_rank") <= maxProbe)
@@ -806,7 +807,7 @@ object SimilarityOps {
       val q = r.getSeq[Double](1).toArray
       (r.getLong(0), q.toSeq, math.sqrt(ddot(q, q)))
     }
-    val probes = broadcast(probeRows.toDF("q_id", "q_emb", "qnorm"))
+    val probes = probeRows.toDF("q_id", "q_emb", "qnorm")
     val probedCells = broadcast(probeRows.flatMap { case (qid, qs, _) =>
       probeRingLocal(qs.toArray, centroids, maxProbe).zipWithIndex
         .map { case (cell, p) => (qid, cell, p + 1) }
@@ -827,7 +828,7 @@ object SimilarityOps {
     // whole-stage-codegen'd project: a TypedImperativeAggregate's
     // children evaluate interpreted per row, so the aggregate inputs
     // must be bare column refs, not per-row CASE trees
-    val topks = assigned.crossJoin(probes)
+    val topks = assigned.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .join(probedCells, Seq("q_id", "cell"), "left")
       .select(col("q_id"), col("vec_id"), col("cent_rank"),
@@ -914,9 +915,9 @@ object SimilarityOps {
     val e = embDf.select(col("vec_id"), col("embedding"))
       .withColumn("sig", signature(col("embedding")))
       .withColumn("enorm", norm(col("embedding")))
-    val probes = broadcast(e.orderBy("vec_id").limit(pCount)
+    val probes = e.orderBy("vec_id").limit(pCount)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("sig").as("q_sig"), col("enorm").as("qnorm")))
+        col("sig").as("q_sig"), col("enorm").as("qnorm"))
     val radii = 0 to maxRadius
     val hi = bit_count(shiftrightunsigned(col("sig"), 8)
       .bitwiseXOR(shiftrightunsigned(col("q_sig"), 8)))
@@ -926,7 +927,7 @@ object SimilarityOps {
     // whole-stage-codegen'd project: a TypedImperativeAggregate's
     // children evaluate interpreted per row, so the aggregate inputs
     // must be bare column refs, not per-row CASE trees
-    val topks = e.crossJoin(probes)
+    val topks = e.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         round(try_divide(dot(col("embedding"), col("q_emb")),
@@ -1029,10 +1030,10 @@ object SimilarityOps {
     val e = embDf.select(col("vec_id") +: col("embedding") +:
       proj.as("p") +: norm(col("embedding")).as("enorm") +: Nil: _*)
       .select(col("*") +: prefixNorms("p", "pn_"): _*)
-    val probes = broadcast(e.orderBy("vec_id").limit(pCount)
+    val probes = e.orderBy("vec_id").limit(pCount)
       .select(col("vec_id").as("q_id") +: col("embedding").as("q_emb") +:
         col("p").as("qp") +: col("enorm").as("qnorm") +:
-        sortedGrid.map(d => col(s"pn_$d").as(s"qn_$d")): _*))
+        sortedGrid.map(d => col(s"pn_$d").as(s"qn_$d")): _*)
     val pairDots = sortedGrid.zip(0 +: sortedGrid.dropRight(1))
       .scanLeft((lit(0.0), 0)) { case ((acc, _), (d, prev)) =>
         (extendDot(acc, "p", "qp", prev + 1, d), d)
@@ -1041,7 +1042,7 @@ object SimilarityOps {
       round(try_divide(dt, col(s"pn_$d") * col(s"qn_$d")), 6)
         .as(s"sim_$d")
     }
-    val topks = e.crossJoin(probes)
+    val topks = e.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id") +: col("vec_id") +: (sims :+
         round(try_divide(dot(col("embedding"), col("q_emb")),
@@ -1159,11 +1160,11 @@ object SimilarityOps {
       norm(col("embedding")).as("enorm"),
       call_function("graft_pq_encode", col("embedding"),
         typedLit(full.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
-    val probes = broadcast(e.orderBy("vec_id").limit(pCount)
+    val probes = e.orderBy("vec_id").limit(pCount)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("enorm").as("qnorm"))
       .select(col("*") +:
-        (0 until PqSub).map(m => array(dists(m): _*).as(s"lut$m")): _*))
+        (0 until PqSub).map(m => array(dists(m): _*).as(s"lut$m")): _*)
     val sortedGrid = subGrid.sorted
     def piece(m: Int): Column =
       element_at(col(s"lut$m"), col("codes")(m) + 1)
@@ -1174,7 +1175,7 @@ object SimilarityOps {
       .scanLeft((lit(0.0), 0)) { case ((acc, _), (m, prev)) =>
         ((prev until m).foldLeft(acc)((c, i) => c + piece(i)), m)
       }.drop(1).map { case (adc, m) => round(adc, 6).as(s"adc_$m") }
-    val topks = e.crossJoin(probes)
+    val topks = e.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id") +: col("vec_id") +:
         round(try_divide(dot(col("embedding"), col("q_emb")),
@@ -2332,7 +2333,7 @@ object SimilarityOps {
       val q = r.getSeq[Double](1).toArray
       (r.getLong(0), q.toSeq, math.sqrt(ddot(q, q)))
     }
-    val probes = broadcast(probeRows.toDF("q_id", "q_emb", "qnorm"))
+    val probes = probeRows.toDF("q_id", "q_emb", "qnorm")
     // per-(probe, probed-cell) rows carrying that pair's ADC LUT
     val probedCells = broadcast(probeRows.flatMap { case (qid, qs, _) =>
       val q = qs.toArray
@@ -2345,7 +2346,7 @@ object SimilarityOps {
     val adc = round((0 until PqSub).map(m =>
         element_at(element_at(col("lut"), m + 1), col("codes")(m) + 1))
       .reduceLeft(_ + _), 6)
-    val topks = e.crossJoin(probes)
+    val topks = e.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("q_id"))
       .join(probedCells, Seq("q_id", "cell"), "left")
       .select(col("q_id"), col("vec_id"), col("cent_rank"),

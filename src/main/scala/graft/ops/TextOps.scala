@@ -1116,7 +1116,8 @@ object TextOps {
       batchId: Long): Unit =
     tokenCountsOn(batch)
       .repartition(col("token"))
-      .write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
+      .write.mode("overwrite")
+      .parquet(graft.streaming.BatchDirs.segment(path, batchId))
 
   /** Re-contract a keyed store's accumulated batch segments into one
     * `batch_id=-1` segment (checkpointed batch ids are non-negative, so

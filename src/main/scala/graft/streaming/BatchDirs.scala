@@ -1,16 +1,70 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Shared reader for the batch-id-keyed sink/store directories the
-  * streaming pipelines accrete (`<dir>/batch_id=N`): before the first
-  * micro-batch commits — a just-started stream, or one whose batches were
-  * all empty (the `!batch.isEmpty` guards skip the write) — the directory
-  * does not exist yet, and a dashboard polling a report rollup must get
-  * the empty report, not an AnalysisException from `read.parquet` on a
-  * missing path.
+/** The batch-id-keyed sink/store layout every keyed streaming pipeline
+  * writes (`<dir>/batch_id=N`), and its one writer and shared readers.
+  *
+  * Writing: [[runKeyed]] is the keyed micro-batch sink — the only
+  * `foreachBatch` in the library — and [[segment]] / [[SeedId]] are the
+  * one definition of the segment path and of the seed slot. The
+  * contract (the reference consumer's at-least-once delivery + keyed
+  * idempotent insert, consumer.py:78): every unit a batch writes is keyed
+  * on its micro-batch id and overwritten on replay, so a crashed-and-
+  * replayed batch rewrites its own segments instead of duplicating them,
+  * and an EMPTY batch writes nothing at all.
+  *
+  * Reading: before the first non-empty micro-batch commits — a
+  * just-started stream, or one whose batches were all empty — the
+  * directory does not exist yet, and a dashboard polling a report rollup
+  * must get the empty report, not an AnalysisException from
+  * `read.parquet` on a missing path ([[readIfExists]]).
   */
-private[streaming] object BatchDirs {
+private[graft] object BatchDirs {
+
+  /** The seed slot: segment id of a store bootstrapped from an existing
+    * corpus, or of a compaction's fold. Checkpointed micro-batch ids are
+    * non-negative, so the slot never collides with a live batch and
+    * sorts below every one of them (`batch_id < N` probes include it).
+    */
+  val SeedId: Long = -1L
+
+  /** The segment directory of batch `id` under a keyed store root. */
+  def segment(dir: String, id: Long): String = s"$dir/batch_id=$id"
+
+  /** Start a keyed micro-batch sink over `stream`: append output mode,
+    * `trigger`, checkpoint at `checkpointDir`, and `body(batch, batchId)`
+    * for every NON-EMPTY micro-batch. `body` keys every unit it writes on
+    * `batchId` — for a directory, [[segment]]`(dir, batchId)` written with
+    * `mode("overwrite")`.
+    *
+    *  - Replay idempotence: a failure between a plain append and the
+    *    offset commit would re-run the batch and duplicate every row;
+    *    keying each written unit on the batch id makes a replayed batch
+    *    rewrite its own output, so replays converge to exactly-once
+    *    state.
+    *  - Empty micro-batches (trailing AvailableNow ticks, idle triggers)
+    *    never reach `body`: writing one would clobber a same-numbered
+    *    segment from an earlier pipeline incarnation with nothing.
+    *  - The batch is persisted for the call, so the emptiness probe and
+    *    every write in `body` share one evaluation of the upstream plan
+    *    (and of the source read), and unpersisted when `body` returns or
+    *    throws. The per-batch job sequence is persist → isEmpty → the
+    *    body's own jobs, nothing after them.
+    */
+  def runKeyed(stream: DataFrame, checkpointDir: String, trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .trigger(trigger)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val b = batch.persist()
+        try { if (!b.isEmpty) body(b, batchId) }
+        finally { b.unpersist(); () }
+      }
+      .start()
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 

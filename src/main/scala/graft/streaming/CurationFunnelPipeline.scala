@@ -57,9 +57,11 @@ object CurationFunnelPipeline {
   def seedFunnelStores(corpus: DataFrame, normStoreDir: String,
       shingleStoreDir: String): Unit = {
     corpus.select(DedupOps.normText.as("norm")).distinct()
-      .write.mode("overwrite").parquet(s"$normStoreDir/batch_id=-1")
+      .write.mode("overwrite")
+      .parquet(BatchDirs.segment(normStoreDir, BatchDirs.SeedId))
     SpanOps.distinctShingleKeys(corpus, CurationOps.FunnelShingleK)
-      .write.mode("overwrite").parquet(s"$shingleStoreDir/batch_id=-1")
+      .write.mode("overwrite")
+      .parquet(BatchDirs.segment(shingleStoreDir, BatchDirs.SeedId))
     SpanOps.writeShingleMeta(corpus.sparkSession, shingleStoreDir,
       CurationOps.FunnelShingleK)
   }
@@ -110,7 +112,7 @@ object CurationFunnelPipeline {
         // live dir stays intact until the swap below
         s.read.parquet(dir).filter(col("batch_id") === newest)
           .select(keyCol)
-          .write.parquet(s"$staging/batch_id=$newest")
+          .write.parquet(BatchDirs.segment(staging, newest))
         extra.foreach(_(staging))
       })
   }
@@ -128,18 +130,10 @@ object CurationFunnelPipeline {
       shingleStoreDir: String, evalStoreDir: String, keepDir: String,
       reportDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty) routeBatch(b, batchId, normStoreDir,
-            shingleStoreDir, evalStoreDir, keepDir, reportDir)
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    BatchDirs.runKeyed(docStream, checkpointDir, trigger) { (b, batchId) =>
+      routeBatch(b, batchId, normStoreDir, shingleStoreDir, evalStoreDir,
+        keepDir, reportDir)
+    }
 
   /** One micro-batch through the shared core — factored out so the spec
     * can drive the exact per-batch routing without a stream.
@@ -165,18 +159,18 @@ object CurationFunnelPipeline {
       priorKeys, evalNorms, pin = true)
     val released = stages.last._2
     released.select(batch.columns.map(col): _*)
-      .write.mode("overwrite").parquet(s"$keepDir/batch_id=$batchId")
+      .write.mode("overwrite").parquet(BatchDirs.segment(keepDir, batchId))
     CurationOps.crawlFunnelReport(stages)
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"$reportDir/batch_id=$batchId")
+      .parquet(BatchDirs.segment(reportDir, batchId))
     // fold the batch's released contributions into the reference stores
     // (keyed overwrite — replay replaces, never duplicates)
     released.select(col("norm")).distinct()
       .write.mode("overwrite")
-      .parquet(s"$normStoreDir/batch_id=$batchId")
+      .parquet(BatchDirs.segment(normStoreDir, batchId))
     SpanOps.distinctShingleKeys(released, CurationOps.FunnelShingleK)
       .write.mode("overwrite")
-      .parquet(s"$shingleStoreDir/batch_id=$batchId")
+      .parquet(BatchDirs.segment(shingleStoreDir, batchId))
     // (re)stamp the width sidecar — idempotent one-row write, so even a
     // store bootstrapped by the first batch (no seed) carries its k
     SpanOps.writeShingleMeta(s, shingleStoreDir,

@@ -37,25 +37,13 @@ object DriftMonitorPipeline {
   def runDriftMonitor(docStream: DataFrame, storeDir: String,
       reportDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one source read per trigger (the sibling-pipeline convention):
-        // isEmpty and the store contraction reuse the cached batch
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty) {
-            TextOps.writeTokenCountBatch(b, storeDir, batchId)
-            TextOps.sourceDriftFromStore(b.sparkSession, storeDir)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$reportDir/batch_id=$batchId")
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    BatchDirs.runKeyed(docStream, checkpointDir, trigger) { (b, batchId) =>
+      TextOps.writeTokenCountBatch(b, storeDir, batchId)
+      TextOps.sourceDriftFromStore(b.sparkSession, storeDir)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(BatchDirs.segment(reportDir, batchId))
+    }
 
   /** The monitor's current answer: the report of the highest completed
     * batch id — cumulative drift over everything ingested so far,

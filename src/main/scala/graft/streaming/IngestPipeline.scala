@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * becomes
   *
   *   readStream → from_json(tradeSchema) → poison-record skip →
-  *   watermarked keyed dedup → foreachBatch idempotent parquet sink.
+  *   watermarked keyed dedup → batch-keyed idempotent parquet sink.
   *
   * Transforms are `DataFrame => DataFrame` so identical logic runs over a
   * MemoryStream in tests, a file source, or a Kafka source in production
@@ -127,57 +127,35 @@ object IngestPipeline {
     extends TradeSink
 
   /** End-to-end ingest job: parse → dedup → idempotent sink,
-    * 5-second micro-batches (the reference's default poll interval).
+    * 5-second micro-batches (the reference's default poll interval). Both
+    * arms key the written unit on the batch id ([[BatchDirs.runKeyed]]'s
+    * replay contract). No dropDuplicates in the sink: the upstream
+    * dropDuplicatesWithinWatermark already hands each batch unique
+    * trade_ids — repeating it would add a full shuffle per batch for no
+    * behavioral change.
     */
   def runIngest(spark: SparkSession, raw: DataFrame, sink: TradeSink,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    dedupTrades(parseTrades(raw))
-      .writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Idempotence on micro-batch replay: a failure between a plain
-        // append and the offset commit would re-run the batch and duplicate
-        // every row. Both arms key the written unit on batchId so a replayed
-        // batch rewrites its own output instead of appending — replays
-        // converge to exactly-once table state, matching the reference's
-        // PK-upsert guarantee.
-        // Empty micro-batches (trailing AvailableNow ticks, idle triggers)
-        // are skipped: writing one would clobber a same-numbered batch
-        // unit from an earlier pipeline incarnation with nothing.
-        // persist() so the emptiness probe and the write share one
-        // evaluation of the parse/dedup plan instead of running it twice.
-        // (No dropDuplicates here: the upstream dropDuplicatesWithinWatermark
-        // already hands each batch unique trade_ids — repeating it would add
-        // a full shuffle per 5-second batch for no behavioral change.)
-        val deduped = batch.persist()
-        try {
-          if (!deduped.isEmpty) sink match {
-            case ParquetSink(dir) =>
-              // batchId-keyed directory, overwritten on replay; trade_date
-              // stays a partition column inside each batch directory so the
-              // analytics side gets partition pruning off the sink root.
-              deduped.write.mode("overwrite")
-                .partitionBy("trade_date")
-                .parquet(s"$dir/batch_id=$batchId")
-            case JdbcSink(url, table, props) =>
-              // delete-own-rows-then-append keyed on batch_id: first attempt
-              // deletes nothing, a replay deletes the partial write. Spark's
-              // JDBC writer creates the table on first append.
-              deleteBatchRows(url, table, props, batchId)
-              deduped.withColumn("batch_id", lit(batchId))
-                .write.mode("append").jdbc(url, table, props)
-          }
-        } finally { deduped.unpersist(); () }
+    BatchDirs.runKeyed(dedupTrades(parseTrades(raw)), checkpointDir,
+        trigger) { (deduped, batchId) =>
+      sink match {
+        case ParquetSink(dir) =>
+          // trade_date stays a partition column inside each batch
+          // directory so the analytics side gets partition pruning off
+          // the sink root
+          deduped.write.mode("overwrite")
+            .partitionBy("trade_date")
+            .parquet(BatchDirs.segment(dir, batchId))
+        case JdbcSink(url, table, props) =>
+          // delete-own-rows-then-append keyed on batch_id: first attempt
+          // deletes nothing, a replay deletes the partial write. Spark's
+          // JDBC writer creates the table on first append.
+          deleteBatchRows(url, table, props, batchId)
+          deduped.withColumn("batch_id", lit(batchId))
+            .write.mode("append").jdbc(url, table, props)
       }
-      .start()
-
-  /** Back-compat parquet-path signature. */
-  def runIngest(spark: SparkSession, raw: DataFrame, sinkDir: String,
-      checkpointDir: String, trigger: Trigger): StreamingQuery =
-    runIngest(spark, raw, ParquetSink(sinkDir), checkpointDir, trigger)
+    }
 
   /** Delete a replayed batch's rows; a no-op when the table does not
     * exist yet (first batch creates it via the JDBC writer). The DELETE

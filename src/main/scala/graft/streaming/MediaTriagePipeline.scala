@@ -32,7 +32,8 @@ object MediaTriagePipeline {
     */
   def seedStore(corpus: DataFrame, storeDir: String): Unit =
     MultimodalOps.mediaPhashOn(corpus)
-      .write.mode("overwrite").parquet(s"$storeDir/batch_id=-1")
+      .write.mode("overwrite")
+      .parquet(BatchDirs.segment(storeDir, BatchDirs.SeedId))
 
   /** Run the ingest: keeps land under `sinkDir/batch_id=N`; duplicates
     * (against the index, or near-duplicate of a lower-id batchmate) and
@@ -46,86 +47,73 @@ object MediaTriagePipeline {
       sinkDir: String, quarantineDir: String, checkpointDir: String,
       maxHamming: Int = 3,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val s = rawBatch.sparkSession
-        // one source read per trigger: isEmpty, the hash pass, the two
-        // quarantine legs, and the sink join all reuse the cached batch
-        val batch = rawBatch.persist()
-        try {
-        if (!batch.isEmpty) {
-          import graft.ops.HammingBands
-          // hash once; the same frame feeds both screens and the store
-          // append (empty payloads hash to nothing — they surface in the
-          // quarantine routing below with reason "unhashable")
-          val hashed = MultimodalOps.mediaPhashOn(batch)
-            .localCheckpoint(eager = true)
-          // REPLAY SAFETY: a crashed attempt may have committed this
-          // batch's own store segment already — screening against it
-          // would self-match every previously-admitted doc and silently
-          // quarantine it on retry, so the batch's own segment is
-          // excluded from the index view. An absent store (never seeded,
-          // first-ever batch) reads as an empty index, not an error; a
-          // FLAT store layout (writePhashStore / analyzeCorpusStores —
-          // no batch_id partition) is rejected loudly because replay
-          // safety depends on segment exclusion.
-          val index = BatchDirs.readIfExists(s, storeDir) match {
-            case Some(df) =>
-              require(df.columns.contains("batch_id"),
-                s"runMediaIngest: the phash store at $storeDir has no " +
-                  "batch_id partition — only the batch-id-keyed layout " +
-                  "is accepted (seed with MediaTriagePipeline.seedStore, " +
-                  "not writePhashStore)")
-              df.filter(col("batch_id") =!= batchId)
-                .select("doc_id", "phash")
-            case None =>
-              import s.implicits._
-              Seq.empty[(Long, Long)].toDF("doc_id", "phash")
-          }
-          val storeDups = MultimodalOps
-            .phashHashedPairsAgainstStore(hashed, s, storeDir,
-              index = Some(index), maxHamming = maxHamming)
-            .select("doc_id")
-          // within-batch collapse at the SAME Hamming threshold as the
-          // store screen (exact-only grouping would admit co-batched
-          // near-dups that consecutive batches reject): survivors are
-          // docs with no lower-id near-dup batchmate
-          val chunked = HammingBands.chunked(hashed, "doc_id", "phash")
-          val batchDups = HammingBands.pairs(chunked, chunked, "phash",
-              maxHamming, col("x.doc_id") < col("y.doc_id"))
-            .select(col("y.doc_id").as("doc_id"))
-          // one materialization feeds all three routing writes (and
-          // breaks the read-storeDir-then-overwrite-a-segment cycle)
-          val dupIds = storeDups.unionByName(batchDups).distinct()
-            .localCheckpoint(eager = true)
-          // quarantine carries its reason (the VectorIngestPipeline
-          // reject_reason convention): near-dups of the index or of a
-          // lower-id batchmate as "duplicate", zero-length payloads —
-          // which have no fingerprint to screen and would otherwise be
-          // silently re-admitted every batch — as "unhashable". The two
-          // legs are disjoint: an unhashable doc is never in `hashed`,
-          // so it can never appear in dupIds.
-          batch.join(dupIds, Seq("doc_id"), "left_semi")
-            .withColumn("reason", lit("duplicate"))
-            .unionByName(
-              batch.join(hashed.select("doc_id"), Seq("doc_id"), "left_anti")
-                .withColumn("reason", lit("unhashable")))
-            .write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch_id=$batchId")
-          batch.join(hashed.select("doc_id"), Seq("doc_id"), "left_semi")
-            .join(dupIds, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-          hashed.join(dupIds, Seq("doc_id"), "left_anti")
+    BatchDirs.runKeyed(docStream, checkpointDir, trigger) { (batch, batchId) =>
+      val s = batch.sparkSession
+      import graft.ops.HammingBands
+      // hash once; the same frame feeds both screens and the store
+      // append (empty payloads hash to nothing — they surface in the
+      // quarantine routing below with reason "unhashable")
+      val hashed = MultimodalOps.mediaPhashOn(batch)
+        .localCheckpoint(eager = true)
+      // REPLAY SAFETY: a crashed attempt may have committed this
+      // batch's own store segment already — screening against it
+      // would self-match every previously-admitted doc and silently
+      // quarantine it on retry, so the batch's own segment is
+      // excluded from the index view. An absent store (never seeded,
+      // first-ever batch) reads as an empty index, not an error; a
+      // FLAT store layout (writePhashStore / analyzeCorpusStores —
+      // no batch_id partition) is rejected loudly because replay
+      // safety depends on segment exclusion.
+      val index = BatchDirs.readIfExists(s, storeDir) match {
+        case Some(df) =>
+          require(df.columns.contains("batch_id"),
+            s"runMediaIngest: the phash store at $storeDir has no " +
+              "batch_id partition — only the batch-id-keyed layout " +
+              "is accepted (seed with MediaTriagePipeline.seedStore, " +
+              "not writePhashStore)")
+          df.filter(col("batch_id") =!= batchId)
             .select("doc_id", "phash")
-            .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
-        }
-        } finally { batch.unpersist(); () }
-        ()
+        case None =>
+          import s.implicits._
+          Seq.empty[(Long, Long)].toDF("doc_id", "phash")
       }
-      .start()
+      val storeDups = MultimodalOps
+        .phashHashedPairsAgainstStore(hashed, s, storeDir,
+          index = Some(index), maxHamming = maxHamming)
+        .select("doc_id")
+      // within-batch collapse at the SAME Hamming threshold as the
+      // store screen (exact-only grouping would admit co-batched
+      // near-dups that consecutive batches reject): survivors are
+      // docs with no lower-id near-dup batchmate
+      val chunked = HammingBands.chunked(hashed, "doc_id", "phash")
+      val batchDups = HammingBands.pairs(chunked, chunked, "phash",
+          maxHamming, col("x.doc_id") < col("y.doc_id"))
+        .select(col("y.doc_id").as("doc_id"))
+      // one materialization feeds all three routing writes (and
+      // breaks the read-storeDir-then-overwrite-a-segment cycle)
+      val dupIds = storeDups.unionByName(batchDups).distinct()
+        .localCheckpoint(eager = true)
+      // quarantine carries its reason (the VectorIngestPipeline
+      // reject_reason convention): near-dups of the index or of a
+      // lower-id batchmate as "duplicate", zero-length payloads —
+      // which have no fingerprint to screen and would otherwise be
+      // silently re-admitted every batch — as "unhashable". The two
+      // legs are disjoint: an unhashable doc is never in `hashed`,
+      // so it can never appear in dupIds.
+      batch.join(dupIds, Seq("doc_id"), "left_semi")
+        .withColumn("reason", lit("duplicate"))
+        .unionByName(
+          batch.join(hashed.select("doc_id"), Seq("doc_id"), "left_anti")
+            .withColumn("reason", lit("unhashable")))
+        .write.mode("overwrite")
+        .parquet(BatchDirs.segment(quarantineDir, batchId))
+      batch.join(hashed.select("doc_id"), Seq("doc_id"), "left_semi")
+        .join(dupIds, Seq("doc_id"), "left_anti")
+        .write.mode("overwrite").parquet(BatchDirs.segment(sinkDir, batchId))
+      hashed.join(dupIds, Seq("doc_id"), "left_anti")
+        .select("doc_id", "phash")
+        .write.mode("overwrite").parquet(BatchDirs.segment(storeDir, batchId))
+    }
 
   /** Per-batch triage report off the accumulated routing dirs: documents
     * seen / kept / quarantined, the unhashable (empty-payload) share of

@@ -128,60 +128,48 @@ object MixGovernorPipeline {
       tokenStoreDir: String, partialsDir: String, reportDir: String,
       checkpointDir: String, alpha: Double = 0.3,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one source read per trigger: isEmpty, the token contraction,
-        // and the LM-score join all reuse the cached batch
-        val b = batch.persist()
+    BatchDirs.runKeyed(docStream, checkpointDir, trigger) { (b, batchId) =>
+      val s = b.sparkSession
+      TextOps.writeTokenCountBatch(b, tokenStoreDir, batchId)
+      // an absent reference LM must not kill the stream (the media
+      // triage absent-store convention): the batch's docs are all
+      // model-less — zero partial rows, DoReMi columns stay null in
+      // the report until the store is seeded. The batch's TOKEN
+      // segment above still lands, so seeding later loses nothing.
+      // Seed a live path with writeBigramStoreStaged (absent →
+      // fully written, never footer-less mid-job).
+      // probe-then-read still has a window (a live re-seed's staged
+      // swap can land between them) — if the LM read itself dies on
+      // exactly that window (path vanished / footer-less mid-swap),
+      // fall through to the model-less arm; the next trigger
+      // re-probes and scores again. ONLY the swap-window conditions
+      // map to model-less (mirroring BatchDirs.readIfExists's
+      // narrowed catch): any other scoring/write failure fails the
+      // trigger so checkpoint replay RE-SCORES this batch — a
+      // swallowed transient would commit an empty partial under this
+      // batch id and permanently lose its DoReMi evidence (sinks are
+      // batch-id-keyed; no later trigger revisits this batch).
+      val partialsOut = BatchDirs.segment(partialsDir, batchId)
+      val scored = lmReadable(s, lmStoreDir) && (
         try {
-          if (!b.isEmpty) {
-            val s = b.sparkSession
-            TextOps.writeTokenCountBatch(b, tokenStoreDir, batchId)
-            // an absent reference LM must not kill the stream (the media
-            // triage absent-store convention): the batch's docs are all
-            // model-less — zero partial rows, DoReMi columns stay null in
-            // the report until the store is seeded. The batch's TOKEN
-            // segment above still lands, so seeding later loses nothing.
-            // Seed a live path with writeBigramStoreStaged (absent →
-            // fully written, never footer-less mid-job).
-            // probe-then-read still has a window (a live re-seed's staged
-            // swap can land between them) — if the LM read itself dies on
-            // exactly that window (path vanished / footer-less mid-swap),
-            // fall through to the model-less arm; the next trigger
-            // re-probes and scores again. ONLY the swap-window conditions
-            // map to model-less (mirroring BatchDirs.readIfExists's
-            // narrowed catch): any other scoring/write failure fails the
-            // trigger so checkpoint replay RE-SCORES this batch — a
-            // swallowed transient would commit an empty partial under this
-            // batch id and permanently lose its DoReMi evidence (sinks are
-            // batch-id-keyed; no later trigger revisits this batch).
-            val partialsOut = s"$partialsDir/batch_id=$batchId"
-            val scored = lmReadable(s, lmStoreDir) && (
-              try {
-                CurationOps.doremiBatchPartials(b, lmStoreDir)
-                  .coalesce(1).write.mode("overwrite").parquet(partialsOut)
-                true
-              } catch {
-                case e: Throwable if isLmSwapWindow(e, lmStoreDir) =>
-                  log.warn(s"mix governor batch $batchId: reference LM at " +
-                    s"$lmStoreDir vanished mid-score (staged-swap rename " +
-                    s"window) — scoring model-less this trigger", e)
-                  false
-              })
-            if (!scored)
-              CurationOps.emptyDoremiPartials(s)
-                .coalesce(1).write.mode("overwrite").parquet(partialsOut)
-            mixReport(s, tokenStoreDir, partialsDir, alpha)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$reportDir/batch_id=$batchId")
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+          CurationOps.doremiBatchPartials(b, lmStoreDir)
+            .coalesce(1).write.mode("overwrite").parquet(partialsOut)
+          true
+        } catch {
+          case e: Throwable if isLmSwapWindow(e, lmStoreDir) =>
+            log.warn(s"mix governor batch $batchId: reference LM at " +
+              s"$lmStoreDir vanished mid-score (staged-swap rename " +
+              s"window) — scoring model-less this trigger", e)
+            false
+        })
+      if (!scored)
+        CurationOps.emptyDoremiPartials(s)
+          .coalesce(1).write.mode("overwrite").parquet(partialsOut)
+      mixReport(s, tokenStoreDir, partialsDir, alpha)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(BatchDirs.segment(reportDir, batchId))
+    }
 
   /** True when the reference LM at `path` is actually SCORABLE right
     * now: the dir must hold readable parquet with the bigram-store

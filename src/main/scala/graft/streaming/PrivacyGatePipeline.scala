@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.ScrubOps
+import graft.ops.{ScaleOps, ScrubOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -32,93 +32,45 @@ object PrivacyGatePipeline {
   def runPrivacyIngest(eventStream: DataFrame, storeDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    eventStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // staged write + two-rename publish: a REPLAYED batch must not
-          // leave the segment missing for the duration of a parquet
-          // write — a gate poller racing that window would transiently
-          // under-report small classes (this sink feeds a release gate,
-          // unlike the report sinks). Dot-prefixed staging/parked dirs
-          // are invisible to Spark's file listing, so a concurrent
-          // reader sees the old segment until the final rename; the
-          // unreadable window is two metadata renames, not a write.
-          val spark = batch.sparkSession
-          val fs = new org.apache.hadoop.fs.Path(storeDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val staging =
-            new org.apache.hadoop.fs.Path(s"$storeDir/.staging_$batchId")
-          val dest =
-            new org.apache.hadoop.fs.Path(s"$storeDir/batch_id=$batchId")
-          val old =
-            new org.apache.hadoop.fs.Path(s"$storeDir/.old_$batchId")
-          ScrubOps.classSketches(batch)
-            .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-          publishSegment(fs, staging, dest, old)
-        }
-      }
-      .start()
+    BatchDirs.runKeyed(eventStream, checkpointDir, trigger) { (b, batchId) =>
+      // staged write + two-rename publish: a REPLAYED batch must not
+      // leave the segment missing for the duration of a parquet write —
+      // a gate poller racing that window would transiently under-report
+      // small classes (this sink feeds a release gate, unlike the report
+      // sinks). Dot-prefixed staging/parked dirs are invisible to Spark's
+      // file listing, so a concurrent reader sees the old segment until
+      // the final rename; the unreadable window is two metadata renames,
+      // not a write.
+      val fs = new org.apache.hadoop.fs.Path(storeDir)
+        .getFileSystem(b.sparkSession.sparkContext.hadoopConfiguration)
+      val staging =
+        new org.apache.hadoop.fs.Path(s"$storeDir/.staging_$batchId")
+      ScrubOps.classSketches(b)
+        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      publishSegment(fs, staging,
+        new org.apache.hadoop.fs.Path(BatchDirs.segment(storeDir, batchId)),
+        new org.apache.hadoop.fs.Path(s"$storeDir/.old_$batchId"))
+    }
 
-  /** The two-rename publish: park the live segment, swap the staging dir
-    * in, drop the parked copy — with rollback (a failed publish restores
-    * the parked prior segment so pollers keep reading the PRIOR verdict;
-    * swapInto's discipline) and crashed-swap recovery (a prior run that
-    * died between the park and the publish left `dest` missing and the
-    * ONLY copy of the prior segment at `old` — restore it FIRST, before
-    * anything can delete it, so a failed publish in THIS run still has a
-    * prior verdict to roll back to; `old` alongside an intact `dest` is
-    * the other crash shape — died before the post-publish cleanup — and
-    * is safe to drop). Each successful publish also sweeps stale
-    * `.old_M` siblings of OTHER batches whose published segment exists:
-    * unlike swapInto's fixed `.old` name (self-cleaning — the next swap
-    * deletes it), the batch-scoped name is touched by no later batch, so
-    * a lost post-publish delete on a committed batch would leak a parked
-    * copy per crash forever. A parked copy WITHOUT a published twin is
-    * never swept — that is the crashed-swap shape, and it belongs to its
-    * own batch's replay recovery (batches serialize within the query, so
-    * no in-flight publish can be sweeping-visible here).
+  /** The two-rename publish ([[graft.ops.ScaleOps.swapInto]]'s core with
+    * the batch-scoped parked name `.old_N`: crashed-swap recovery, park,
+    * publish, rollback to the prior segment on failure so pollers keep
+    * reading the PRIOR verdict, cleanup). Each successful publish also
+    * sweeps stale `.old_M` siblings of OTHER batches whose published
+    * segment exists: unlike swapInto's fixed `.old` name (self-cleaning —
+    * the next swap deletes it), the batch-scoped name is touched by no
+    * later batch, so a lost post-publish delete on a committed batch
+    * would leak a parked copy per crash forever. A parked copy WITHOUT a
+    * published twin is never swept — that is the crashed-swap shape, and
+    * it belongs to its own batch's replay recovery (batches serialize
+    * within the query, so no in-flight publish can be sweeping-visible
+    * here).
     */
   private[graft] def publishSegment(fs: org.apache.hadoop.fs.FileSystem,
       staging: org.apache.hadoop.fs.Path, dest: org.apache.hadoop.fs.Path,
       old: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(old) && !fs.exists(dest) && !fs.rename(old, dest))
-      throw new java.io.IOException(
-        s"privacy gate: crashed-swap recovery $old -> $dest failed")
-    fs.delete(old, true) // leftover from a crash AFTER publish
-    if (fs.exists(dest) && !fs.rename(dest, old))
-      throw new java.io.IOException(
-        s"privacy gate: park $dest -> $old failed")
-    // a publish failure may THROW rather than return false (local FS
-    // raises FileNotFound on a missing staging dir; remote FS clients
-    // can surface RuntimeExceptions) — every non-fatal shape must reach
-    // the rollback below (swapInto's discipline), with the original
-    // exception riding along as the CAUSE
-    var publishErr: Throwable = null
-    val published =
-      try fs.rename(staging, dest)
-      catch {
-        case scala.util.control.NonFatal(e) => publishErr = e; false
-      }
-    if (!published) {
-      // roll the parked segment back so pollers keep reading the
-      // PRIOR verdict (leaving it parked under an invisible dot-dir
-      // would reopen the exact under-report window this staging
-      // exists to close)
-      if (fs.exists(old) && fs.rename(old, dest))
-        throw new java.io.IOException(s"privacy gate: publish " +
-          s"$staging -> $dest failed (prior segment restored)", publishErr)
-      throw new java.io.IOException(
-        s"privacy gate: publish $staging -> $dest failed" +
-          (if (fs.exists(old))
-             s" AND rollback failed — prior segment is at $old"
-           else ""), publishErr)
-    }
-    fs.delete(old, true)
+    ScaleOps.swapInto(fs, staging, dest, old)
     sweepStaleParked(fs, dest)
-    ()
   }
 
   /** Delete committed batches' leftover parked copies (see
@@ -135,8 +87,9 @@ object PrivacyGatePipeline {
     fs.listStatus(parent).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith(".old_") &&
-          fs.exists(new org.apache.hadoop.fs.Path(parent,
-            s"batch_id=${name.stripPrefix(".old_")}")))
+          name.stripPrefix(".old_").toLongOption.exists(m =>
+            fs.exists(new org.apache.hadoop.fs.Path(
+              BatchDirs.segment(parent.toString, m)))))
         fs.delete(st.getPath, true)
     }
   }

@@ -35,31 +35,22 @@ object QualityGatePipeline {
   def runQualityGate(docStream: DataFrame, keepDir: String,
       rejectDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one scoring of the batch feeds both routes. Routing is on
-        // coalesce(keep, false), NOT the raw keep column: an unscorable
-        // doc (null text → null token stats → null logit → NULL keep)
-        // would otherwise match NEITHER filter(keep) NOR filter(!keep)
-        // and silently vanish from both dirs — the two routes must
-        // PARTITION the batch (rejects are the quarantine trail), and
-        // "quality unknown" is not training data, so it rejects.
-        val b = scored(batch)
-          .withColumn("keep", coalesce(col("keep"), lit(false)))
-          .persist()
-        try {
-          if (!b.isEmpty) {
-            b.filter(col("keep")).write.mode("overwrite")
-              .parquet(s"$keepDir/batch_id=$batchId")
-            b.filter(!col("keep")).write.mode("overwrite")
-              .parquet(s"$rejectDir/batch_id=$batchId")
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    // scored on the stream, so the batch runKeyed persists is already
+    // scored and one scoring feeds both routes. Routing is on
+    // coalesce(keep, false), NOT the raw keep column: an unscorable doc
+    // (null text → null token stats → null logit → NULL keep) would
+    // otherwise match NEITHER filter(keep) NOR filter(!keep) and
+    // silently vanish from both dirs — the two routes must PARTITION the
+    // batch (rejects are the quarantine trail), and "quality unknown" is
+    // not training data, so it rejects.
+    BatchDirs.runKeyed(
+        scored(docStream).withColumn("keep", coalesce(col("keep"), lit(false))),
+        checkpointDir, trigger) { (b, batchId) =>
+      b.filter(col("keep")).write.mode("overwrite")
+        .parquet(BatchDirs.segment(keepDir, batchId))
+      b.filter(!col("keep")).write.mode("overwrite")
+        .parquet(BatchDirs.segment(rejectDir, batchId))
+    }
 
   /** The corpus-level acceptance report off the accumulated batch dirs:
     * per source, documents seen / kept and the realized keep rate — the

@@ -36,24 +36,13 @@ object ScrubPipeline {
   def runScrubIngest(docStream: DataFrame, sinkDir: String, auditDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one evaluation of the upstream plan feeds both writes
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty) {
-            ScrubOps.piiAuditOn(b).withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$auditDir/batch_id=$batchId")
-            ScrubOps.scrubOn(b).write.mode("overwrite")
-              .parquet(s"$sinkDir/batch_id=$batchId")
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    BatchDirs.runKeyed(docStream, checkpointDir, trigger) { (b, batchId) =>
+      ScrubOps.piiAuditOn(b).withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(BatchDirs.segment(auditDir, batchId))
+      ScrubOps.scrubOn(b).write.mode("overwrite")
+        .parquet(BatchDirs.segment(sinkDir, batchId))
+    }
 
   /** Roll the accumulated per-batch audit rows up to the corpus-level
     * q104 report: every count column is additive across batches, so the

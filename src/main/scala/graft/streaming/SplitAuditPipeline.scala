@@ -43,46 +43,33 @@ object SplitAuditPipeline {
   def runSplitAudit(docStream: DataFrame, heldStoreDir: String,
       reportDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    docStream.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one source read per trigger: isEmpty, the held segment, and the
-        // train audit all reuse the cached batch
-        val b = batch.persist()
-        try {
-          if (!b.isEmpty) {
-            val s = b.sparkSession
-            val split = CurationOps.withDefaultSplit(b)
-            // held segment FIRST, so the store read below already holds
-            // this batch's own held docs (within-batch leaks flag in the
-            // same trigger); zero held docs still land an empty segment —
-            // replay overwrites it either way
-            // NOT coalesce(1): unlike the <=|sources|-row report below,
-            // this segment is proportional to the batch's held text — the
-            // distinct's shuffle layout writes in parallel
-            CurationOps.heldoutNgramsOn(
-              split.filter(col("split") =!= "train"))
-              .write.mode("overwrite")
-              .parquet(s"$heldStoreDir/batch_id=$batchId")
-            // an absent/just-created store (possible only if THIS segment
-            // write raced a listing, or on replay edge states) reads as
-            // the empty reference — nothing held out yet, nothing leaks
-            val refNgrams = BatchDirs.readIfExists(s, heldStoreDir)
-              .map(_.select("ngram"))
-              .getOrElse(emptyNgrams(s))
-            CurationOps.leakageRollup(
-              CurationOps.decontaminationAgainstNgrams(
-                split.filter(col("split") === "train").drop("split"),
-                refNgrams))
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$reportDir/batch_id=$batchId")
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    BatchDirs.runKeyed(docStream, checkpointDir, trigger) { (b, batchId) =>
+      val s = b.sparkSession
+      val split = CurationOps.withDefaultSplit(b)
+      // held segment FIRST, so the store read below already holds this
+      // batch's own held docs (within-batch leaks flag in the same
+      // trigger); zero held docs still land an empty segment — replay
+      // overwrites it either way
+      // NOT coalesce(1): unlike the <=|sources|-row report below, this
+      // segment is proportional to the batch's held text — the
+      // distinct's shuffle layout writes in parallel
+      CurationOps.heldoutNgramsOn(split.filter(col("split") =!= "train"))
+        .write.mode("overwrite")
+        .parquet(BatchDirs.segment(heldStoreDir, batchId))
+      // an absent/just-created store (possible only if THIS segment
+      // write raced a listing, or on replay edge states) reads as the
+      // empty reference — nothing held out yet, nothing leaks
+      val refNgrams = BatchDirs.readIfExists(s, heldStoreDir)
+        .map(_.select("ngram"))
+        .getOrElse(emptyNgrams(s))
+      CurationOps.leakageRollup(
+        CurationOps.decontaminationAgainstNgrams(
+          split.filter(col("split") === "train").drop("split"),
+          refNgrams))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(BatchDirs.segment(reportDir, batchId))
+    }
 
   /** The audit of the highest completed batch (per-batch semantics — see
     * the object doc); the empty-schema report before anything commits.

@@ -34,7 +34,8 @@ object VectorIngestPipeline {
     */
   def seedStore(embDf: DataFrame, codebook: Array[Array[Double]],
       storeDir: String): Unit = {
-    SimilarityOps.writePqStore(embDf, codebook, s"$storeDir/batch_id=-1")
+    SimilarityOps.writePqStore(embDf, codebook,
+      BatchDirs.segment(storeDir, BatchDirs.SeedId))
     SimilarityOps.stampPqStoreRoot(embDf.sparkSession, storeDir, codebook)
   }
 
@@ -61,41 +62,32 @@ object VectorIngestPipeline {
       quarantineDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     val dim = codebook.head.length
-    embStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
-          // generation guard: a restart fed a codebook that isn't the
-          // store's encoding generation (the hand-passed-array drift the
-          // scaladoc warns about) must fail the stream loud — its codes
-          // would be unsearchable alongside the existing segments
-          SimilarityOps.requirePqStoreRoot(batch.sparkSession, storeDir,
-            codebook, "runVectorIngest")
-          val flagged = batch
-            .withColumn("reject_reason", rejectReason(dim))
-            .localCheckpoint(eager = true)
-          flagged.filter(col("reject_reason").isNotNull)
-            .select("vec_id", "label", "reject_reason")
-            .write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch_id=$batchId")
-          // segment write is an OVERWRITE of the batch's own dir — a
-          // replayed attempt rewrites, never double-appends (the
-          // append-mode store face would duplicate rows on retry)
-          SimilarityOps.writePqStore(
-            flagged.filter(col("reject_reason").isNull)
-              .select("vec_id", "label", "embedding"),
-            codebook, s"$storeDir/batch_id=$batchId")
-          // (re)stamp the root fingerprint — idempotent one-row write,
-          // so even a store bootstrapped by its first batch carries it
-          SimilarityOps.stampPqStoreRoot(batch.sparkSession, storeDir,
-            codebook)
-        }
-        ()
-      }
-      .start()
+    BatchDirs.runKeyed(embStream, checkpointDir, trigger) { (batch, batchId) =>
+      graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+      // generation guard: a restart fed a codebook that isn't the store's
+      // encoding generation (the hand-passed-array drift the scaladoc
+      // warns about) must fail the stream loud — its codes would be
+      // unsearchable alongside the existing segments
+      SimilarityOps.requirePqStoreRoot(batch.sparkSession, storeDir,
+        codebook, "runVectorIngest")
+      val flagged = batch
+        .withColumn("reject_reason", rejectReason(dim))
+        .localCheckpoint(eager = true)
+      flagged.filter(col("reject_reason").isNotNull)
+        .select("vec_id", "label", "reject_reason")
+        .write.mode("overwrite")
+        .parquet(BatchDirs.segment(quarantineDir, batchId))
+      // segment write is an OVERWRITE of the batch's own dir — a replayed
+      // attempt rewrites, never double-appends (the append-mode store
+      // face would duplicate rows on retry)
+      SimilarityOps.writePqStore(
+        flagged.filter(col("reject_reason").isNull)
+          .select("vec_id", "label", "embedding"),
+        codebook, BatchDirs.segment(storeDir, batchId))
+      // (re)stamp the root fingerprint — idempotent one-row write, so
+      // even a store bootstrapped by its first batch carries it
+      SimilarityOps.stampPqStoreRoot(batch.sparkSession, storeDir, codebook)
+    }
   }
 
   /** [[runVectorIngest]] with the codebook rehydrated from a persisted
@@ -124,7 +116,7 @@ object VectorIngestPipeline {
   def seedIvfPqStore(validDf: DataFrame, cells: Array[Array[Double]],
       residCb: Array[Array[Double]], storeDir: String): Unit = {
     SimilarityOps.writeIvfPqStore(validDf, cells, residCb,
-      s"$storeDir/batch_id=-1")
+      BatchDirs.segment(storeDir, BatchDirs.SeedId))
     SimilarityOps.stampIvfPqStoreRoot(validDf.sparkSession, storeDir,
       cells, residCb)
   }
@@ -143,35 +135,27 @@ object VectorIngestPipeline {
       quarantineDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     val dim = cells.head.length
-    embStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
-          SimilarityOps.requireIvfPqStoreRoot(batch.sparkSession,
-            storeDir, cells, residCb, "runIvfPqIngest")
-          val flagged = batch
-            .withColumn("reject_reason", rejectReason(dim))
-            .localCheckpoint(eager = true)
-          flagged.filter(col("reject_reason").isNotNull)
-            .select("vec_id", "label", "reject_reason")
-            .write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch_id=$batchId")
-          // cast to the q151 valid-frame convention so streamed codes
-          // are bit-identical to a batch encode of the same rows
-          SimilarityOps.writeIvfPqStore(
-            flagged.filter(col("reject_reason").isNull)
-              .select(col("vec_id"), col("label"),
-                col("embedding").cast("array<double>").as("embedding")),
-            cells, residCb, s"$storeDir/batch_id=$batchId")
-          SimilarityOps.stampIvfPqStoreRoot(batch.sparkSession, storeDir,
-            cells, residCb)
-        }
-        ()
-      }
-      .start()
+    BatchDirs.runKeyed(embStream, checkpointDir, trigger) { (batch, batchId) =>
+      graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+      SimilarityOps.requireIvfPqStoreRoot(batch.sparkSession,
+        storeDir, cells, residCb, "runIvfPqIngest")
+      val flagged = batch
+        .withColumn("reject_reason", rejectReason(dim))
+        .localCheckpoint(eager = true)
+      flagged.filter(col("reject_reason").isNotNull)
+        .select("vec_id", "label", "reject_reason")
+        .write.mode("overwrite")
+        .parquet(BatchDirs.segment(quarantineDir, batchId))
+      // cast to the q151 valid-frame convention so streamed codes are
+      // bit-identical to a batch encode of the same rows
+      SimilarityOps.writeIvfPqStore(
+        flagged.filter(col("reject_reason").isNull)
+          .select(col("vec_id"), col("label"),
+            col("embedding").cast("array<double>").as("embedding")),
+        cells, residCb, BatchDirs.segment(storeDir, batchId))
+      SimilarityOps.stampIvfPqStoreRoot(batch.sparkSession, storeDir,
+        cells, residCb)
+    }
   }
 
   /** [[runIvfPqIngest]] with BOTH artifacts rehydrated from their

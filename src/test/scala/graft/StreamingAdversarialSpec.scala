@@ -160,7 +160,8 @@ class StreamingAdversarialSpec extends SparkSpec {
         | "quantity": null}""".stripMargin.replace("\n", ""),
       """{"trade_id": null, "timestamp": "2024-01-01T00:00:00.000001"}""")
     val q = IngestPipeline.runIngest(spark,
-      input.toDF().select(col("value")), sink, tmpDir("adv-ingest-ckpt"),
+      input.toDF().select(col("value")), IngestPipeline.ParquetSink(sink),
+      tmpDir("adv-ingest-ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.processAllAvailable()
     q.stop()

@@ -35,7 +35,7 @@ class StreamingSpec extends SparkSpec {
     // AvailableNow snapshots offsets at start — data must be added first
     input.addData(tradeJson(20))
     val q = IngestPipeline.runIngest(spark,
-      input.toDF().select(col("value")), sink, ckpt,
+      input.toDF().select(col("value")), IngestPipeline.ParquetSink(sink), ckpt,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.processAllAvailable()
     q.stop()
@@ -47,7 +47,8 @@ class StreamingSpec extends SparkSpec {
 
     // second run with overlapping data: new checkpoint, idempotent-key sink
     val q2 = IngestPipeline.runIngest(spark,
-      input.toDF().select(col("value")), sink, tmpDir("ckpt2"),
+      input.toDF().select(col("value")), IngestPipeline.ParquetSink(sink),
+      tmpDir("ckpt2"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q2.processAllAvailable()
     q2.stop()
@@ -69,7 +70,8 @@ class StreamingSpec extends SparkSpec {
     val sink = tmpDir("journey_sink")
     input.addData(tradeJson(50)) // + 3 dupes + 1 poison record
     val q = IngestPipeline.runIngest(spark,
-      input.toDF().select(col("value")), sink, tmpDir("journey_ckpt"),
+      input.toDF().select(col("value")), IngestPipeline.ParquetSink(sink),
+      tmpDir("journey_ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.processAllAvailable()
     q.stop()
@@ -536,7 +538,7 @@ class StreamingSpec extends SparkSpec {
     }
     val q = IngestPipeline.runIngest(spark,
       TradeSource.jsonFiles(spark, drop, maxFilesPerTrigger = 1),
-      sink, tmpDir("bp_ckpt"),
+      IngestPipeline.ParquetSink(sink), tmpDir("bp_ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.processAllAvailable()
     q.stop()
@@ -553,7 +555,8 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.TradeSource
     val sink = tmpDir("live_sink")
     val q = IngestPipeline.runIngest(spark,
-      TradeSource.rate(spark, rowsPerSecond = 50), sink, tmpDir("live_ckpt"),
+      TradeSource.rate(spark, rowsPerSecond = 50),
+      IngestPipeline.ParquetSink(sink), tmpDir("live_ckpt"),
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(
         "1 second"))
     // an unbounded source never finishes processAllAvailable: poll for
