@@ -112,8 +112,20 @@ object IngestPipeline {
     * the same replay-idempotence contract.
     */
   sealed trait TradeSink
-  /** Parquet sink partitioned by trade_date, one overwritable directory per
-    * micro-batch (the harness/analytics arm).
+  /** Parquet sink (the harness/analytics arm): each non-empty micro-batch
+    * is ONE parquet file in its own overwritable `batch_id=N` segment, so a
+    * dashboard read opens one file per batch. One writer is enough because
+    * every source caps a micro-batch ([[TradeSource]]: `maxFilesPerTrigger`,
+    * `maxOffsetsPerTrigger`, rate × trigger interval). `trade_date` is a
+    * plain `DateType` data column at its [[tradeSchema]] position, not a
+    * directory level: a `trade_date` filter skips segment files by their
+    * parquet footer min/max statistics instead of by partition pruning.
+    *
+    * Upgrade caveat: a sink directory written by the earlier layout
+    * (`batch_id=N/trade_date=D/part-*`) must not be resumed by this code —
+    * the mix of `batch_id=N/trade_date=D` and `batch_id=M` leaves fails
+    * Spark's partition discovery on read (CONFLICTING_PARTITION_COLUMN_NAMES).
+    * Point an existing sink at a fresh directory.
     */
   final case class ParquetSink(dir: String) extends TradeSink
   /** JDBC sink (the consumer.py parity arm — Postgres in the reference,
@@ -141,11 +153,9 @@ object IngestPipeline {
         trigger) { (deduped, batchId) =>
       sink match {
         case ParquetSink(dir) =>
-          // trade_date stays a partition column inside each batch
-          // directory so the analytics side gets partition pruning off
-          // the sink root
-          deduped.write.mode("overwrite")
-            .partitionBy("trade_date")
+          // one file per batch: coalesce narrows the persisted batch to a
+          // single writer (no shuffle); the source caps bound its size
+          deduped.coalesce(1).write.mode("overwrite")
             .parquet(BatchDirs.segment(dir, batchId))
         case JdbcSink(url, table, props) =>
           // delete-own-rows-then-append keyed on batch_id: first attempt
