@@ -617,23 +617,10 @@ object CurationOps {
       docsDf.groupBy("source")
         .agg(sum(Tables.sizeOrNull(toks)).as("n_tokens")), alpha)
 
-  /** The q115 rule over the persisted token-count store — the per-crawl
-    * face: per-source sizes are the store's sum-on-read contraction
-    * (≤|sources|·|vocab| rows, zero corpus access). Sizes count the
-    * store's tokenizer (empty split tokens dropped), so a multi-spaced
-    * corpus reads marginally smaller than [[temperatureMixOn]]'s raw
-    * `size(split(...))`; shares and factors are ratio-stable under that.
-    */
-  def temperatureMixFromStore(s: SparkSession, storePath: String,
-      alpha: Double = 0.3): DataFrame =
-    temperatureMixFromCounts(
-      s.read.parquet(storePath)
-        .groupBy("source").agg(sum("c").as("n_tokens")), alpha)
-
   /** The update half of q115 over any (source, n_tokens) contraction —
-    * one definition for the raw, store, and streaming faces (the
-    * governor feeds its already-opened store frame here so each trigger
-    * lists the store once).
+    * one definition for the raw face and the streaming governor (which
+    * feeds its already-opened token-count store frame here so each
+    * trigger lists the store once).
     */
   private[graft] def temperatureMixFromCounts(counts: DataFrame,
       alpha: Double): DataFrame = {

@@ -78,13 +78,7 @@ object ScaleOps {
     * partials, then a 1-row rollup).
     */
   final case class KeySkewStats(rows: Long, distinctKeys: Long,
-      maxKeyRows: Long) {
-
-    /** Rows of the hottest key relative to a perfectly uniform spread. */
-    def skewRatio: Double =
-      if (rows == 0L || distinctKeys == 0L) 0.0
-      else maxKeyRows.toDouble * distinctKeys / rows
-  }
+      maxKeyRows: Long)
 
   object KeySkewStats {
     def compute(df: DataFrame, key: String): KeySkewStats = {

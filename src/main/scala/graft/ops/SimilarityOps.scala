@@ -2,7 +2,9 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, Decimal, FloatType}
 
 /** Similarity search over the `embeddings` table (`embedding: array<float>`,
   * fixed dim 64).
@@ -1417,111 +1419,147 @@ object SimilarityOps {
     * codebook on any cluster layout is bit-identical: init picks the k
     * vectors with the lowest arithmetic hash of vec_id (reproducible, no
     * rand()), assignment breaks distance ties on the lower cluster index,
-    * and centroid updates are decimal-exact means rounded to 6 dp IN the
-    * aggregation (partition-order independent AND engine-independent —
-    * the q43/q140 cross-engine digest discipline; quantizing each
-    * iteration's codebook kills float-ulp drift, which is what lets the
-    * q143/q144 oracles replay the full training in DuckDB).
+    * and each centroid update is [[lloydUpdate]]'s exact-decimal fold,
+    * rounded to 6 dp after the merge (partition-order independent AND
+    * engine-independent — the q43/q140 cross-engine digest discipline;
+    * quantizing each iteration's codebook kills float-ulp drift, which is
+    * what lets the q143/q144 oracles replay the full training in DuckDB).
     *
     * Scale per iteration: the k×dim codebook rides into the plan as
     * literals (broadcast by value), assignment is per-row arithmetic
-    * (k native vec_dot calls), and the update aggregation contracts
-    * map-side to ≤ k·dim partial rows per partition — the corpus never
-    * shuffles. Driver holds only the k×dim codebook between iterations
-    * (same bounded footprint as the IVF probe list).
+    * (k native vec_dot calls), and the update folds each partition to one
+    * k×dim partial — the corpus never shuffles. Driver holds only the
+    * k×dim codebook between iterations (same bounded footprint as the IVF
+    * probe list).
     */
-  /** Run `f` with adaptive query execution disabled on this session —
-    * scoped save/restore, the boundedCollect initialNumPartitions
-    * pattern. The Lloyd update contraction is bounded at ≤ k·dim cells by
-    * CONSTRUCTION (map-side partial aggregation, no skew possible, no
-    * partition sizing to adapt), so AQE has nothing to decide there and
-    * its stage-by-stage materialization only turns each iteration's one
-    * collect into two driver-blocking jobs — ×(iters) per training, ×2
-    * trainings per IVF-PQ face (guide §8: use what the optimizer cannot
-    * know). Identical results either way; the oracle re-confirms.
-    */
-  private def withAqeOff[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Scoped conf for the Lloyd update collects: AQE off (r15 — AQE's
-    * stage materialization doubled each iteration's driver-blocking
-    * jobs) PLUS a reducer count sized to the aggregation's OUTPUT bound
-    * instead of the session default. The update agg contracts map-side
-    * to ≤ k·dim cells per map task, so its reduce stage moves a few
-    * hundred rows total at ANY corpus scale — with AQE off nothing
-    * coalesces the session's data-sized reducer count (32 here,
-    * thousands on a cluster) down to that reality, and each of the
-    * `2 · (1 + iters)` sequential trainer jobs pays full task-dispatch
-    * for reducers that receive ~0 rows (guide §2.2: fewer, larger reduce
-    * partitions; this is the static form of the AQE coalescing the r15
-    * change gave up). `n = 4` keeps the ≤ k·dim(=512)-row stream
-    * parallel enough to be free and is NOT tuned to the local core
-    * count. Results are reducer-count-invariant: the update means are
-    * exact decimal sums + counts (associative, order-free), rounded
-    * after the merge.
-    */
-  private def withTrainerShuffle[T](spark: SparkSession, n: Int = 4)(
-      f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try withAqeOff(spark)(f)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   def kmeansCentroids(embDf: DataFrame, k: Int = 8,
-      iters: Int = 5): Array[Array[Double]] = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
-    var centroids: Array[Array[Double]] = Tables.boundedCollect(embDf
+      iters: Int = 5): Array[Array[Double]] =
+    lloyd(embDf, k, iters, nSub = 1,
+      "kmeansCentroids: no vectors to train on (empty embedding frame) — " +
+        "an empty codebook would make every downstream assignment " +
+        "undefined")(cb => array(clusterOf(cb)))
+
+  /** The one Lloyd loop behind [[kmeansCentroids]] and
+    * [[pqTrainedCodebook]]: init is the `k` vectors of `vecs` (vec_id,
+    * embedding) with the lowest [[Tables.lcgBucket]] hash of vec_id, then
+    * `iters` rounds of [[lloydUpdate]] over the `codes` assignment column
+    * (`array<int>`, one codeword per subspace, `nSub` subspaces) built
+    * from the current codebook. Fails with `emptyMsg` when there is
+    * nothing to train on.
+    */
+  private def lloyd(vecs: DataFrame, k: Int, iters: Int, nSub: Int,
+      emptyMsg: String)(
+      codes: Array[Array[Double]] => Column): Array[Array[Double]] = {
+    graft.functions.GraftFunctions.ensureRegistered(vecs.sparkSession)
+    var cb: Array[Array[Double]] = Tables.boundedCollect(vecs
       .orderBy(Tables.lcgBucket(col("vec_id"), 48271L, 11L, 1000000007L).asc,
         col("vec_id").asc)
       .limit(k)
       .select(col("embedding").cast("array<double>")),
-      k, "k-means init vectors").map(_.getSeq[Double](0).toArray)
-    require(centroids.nonEmpty,
-      "kmeansCentroids: no vectors to train on (empty embedding frame) — " +
-        "an empty codebook would make every downstream assignment undefined")
-    var it = 0
-    while (it < iters) {
-      // k × dim cells (the codebook's own shape), never corpus-sized.
-      // Shape adjudicated by measurement, not analogy (r14, 6M-vector
-      // A/B): this training is COMPUTE-bound in assignClusters (k native
-      // dots per row), so neither the q140 trainer's chunked-sibling-sum
-      // update (wash at 6M, 1.25× slower at sf0.1) nor a MEMORY_AND_DISK
-      // corpus pin across iterations (1.15× SLOWER at 6M — a cached row
-      // cache scans worse than the vectorized parquet reader here) beat
-      // this plain posexplode contraction. PQ's recorded explode win came
-      // from its ×8-per-SUBSPACE fanout on top of the fused encode
-      // kernel, a balance full-dim k-means does not share.
-      val upd = withTrainerShuffle(embDf.sparkSession) {
-        Tables.boundedCollect(assignClusters(embDf, centroids)
-          .select(col("cluster"),
-            posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy("cluster", "pos")
-          .agg(round(
-            sum(col("v").cast("decimal(38,10)")).cast("double") /
-              count(lit(1)), 6).as("cv")),
-          1 << 20, "k-means update cells (k × dim)")
+      k, "Lloyd init vectors").map(_.getSeq[Double](0).toArray)
+    require(cb.nonEmpty, emptyMsg)
+    for (_ <- 0 until iters)
+      cb = lloydUpdate(vecs.select(codes(cb), col("embedding")), cb, nSub)
+    cb
+  }
+
+  /** One Lloyd update step: `assigned` is (codes: array&lt;int&gt;,
+    * embedding: array&lt;float|double&gt;), where `codes(m)` is the row's
+    * codeword in subspace m, which spans positions
+    * `[m·subDim, (m+1)·subDim)` with `subDim = dim / nSub`. Each codeword
+    * position becomes the mean of its assigned rows' elements.
+    *
+    * ONE `treeAggregate` (depth 1, the MLlib k-means shape) folds each
+    * partition into exact per-(codeword, position) decimal sums and row
+    * counts ([[LloydCells]]) and merges the partials on the driver: one
+    * job with no shuffle stage, so neither AQE nor a reducer count has
+    * anything to decide and the session conf is never touched. Each
+    * element becomes Spark's own [[Decimal]] at (38,10) — what
+    * `CAST(v AS DECIMAL(38,10))` computes — and exact sums make the merge
+    * order irrelevant, so the result is the one
+    * `round(CAST(sum(CAST(v AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6)`
+    * the oracle CTEs replay. A row with a null `codes` or embedding, or a
+    * null codeword, is skipped; a null (or NaN/±Inf, which the cast makes
+    * NULL) element still counts toward its cell's rows but not its sum.
+    * An emptied codeword keeps its previous values.
+    */
+  private[graft] def lloydUpdate(assigned: DataFrame,
+      prev: Array[Array[Double]], nSub: Int): Array[Array[Double]] = {
+    val dim = prev.head.length
+    val subDim = dim / nSub
+    val isFloat = assigned.schema(1).dataType
+      .asInstanceOf[ArrayType].elementType == FloatType
+    val cells = assigned.queryExecution.toRdd.treeAggregate(
+      new LloydCells(prev.length, dim))(
+      (acc, row) => acc.add(row, isFloat, subDim), _.merge(_), depth = 1)
+    Array.tabulate(prev.length, dim)((c, p) => cells.mean(c, p, prev(c)(p)))
+  }
+
+  /** [[lloydUpdate]]'s partials: per (codeword, position) cell, the exact
+    * scale-10 sum of its non-null elements (null until one arrives) and
+    * its assigned-row count. Mutated in place, like MLlib's k-means
+    * aggregator; its size is k × dim by construction.
+    */
+  private final class LloydCells(k: Int, dim: Int) extends Serializable {
+    private val sums = new Array[java.math.BigDecimal](k * dim)
+    private val counts = new Array[Long](k * dim)
+
+    def add(row: InternalRow, isFloat: Boolean, subDim: Int): LloydCells = {
+      if (!row.isNullAt(0) && !row.isNullAt(1)) {
+        val codes = row.getArray(0)
+        val v = row.getArray(1)
+        val n = math.min(v.numElements(), dim)
+        var m = 0
+        while (m < codes.numElements()) {
+          if (!codes.isNullAt(m)) {
+            val base = codes.getInt(m) * dim
+            var p = m * subDim
+            val end = math.min(p + subDim, n)
+            while (p < end) {
+              counts(base + p) += 1
+              if (!v.isNullAt(p)) {
+                val x = if (isFloat) v.getFloat(p).toDouble else v.getDouble(p)
+                // NaN/±Inf have no decimal form: the cast yields NULL
+                if (!x.isNaN && !x.isInfinite) {
+                  val d = Decimal(x)
+                  if (!d.changePrecision(38, 10))
+                    throw new ArithmeticException(
+                      s"lloydUpdate: $x does not fit DECIMAL(38,10)")
+                  val s = sums(base + p)
+                  val e = d.toJavaBigDecimal
+                  sums(base + p) = if (s == null) e else s.add(e)
+                }
+              }
+              p += 1
+            }
+          }
+          m += 1
+        }
       }
-      val next = centroids.map(_.clone()) // empty cluster keeps its centroid
-      upd.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-      }
-      centroids = next
-      it += 1
+      this
     }
-    centroids
+
+    def merge(o: LloydCells): LloydCells = {
+      var i = 0
+      while (i < sums.length) {
+        counts(i) += o.counts(i)
+        if (o.sums(i) != null)
+          sums(i) = if (sums(i) == null) o.sums(i) else sums(i).add(o.sums(i))
+        i += 1
+      }
+      this
+    }
+
+    /** `round(CAST(sum AS DOUBLE) / n, 6)` as Spark evaluates it on a
+      * double (HALF_UP over the double's shortest decimal form), or
+      * `prev` for a cell with no element to average.
+      */
+    def mean(c: Int, p: Int, prev: Double): Double = {
+      val s = sums(c * dim + p)
+      if (s == null) prev
+      else BigDecimal(Decimal(s).toDouble / counts(c * dim + p))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
   }
 
   /** Nearest-centroid assignment for a literal codebook: squared-L2 argmin
@@ -1540,10 +1578,13 @@ object SimilarityOps {
     // source constant, so every Lloyd iteration's fresh centroids forced
     // a janino recompile of the update stage (5–10 per trained-face
     // call). array_min's argmin/tie-break semantics are untouched.
-    embDf.withColumn("cluster",
-      array_min(call_function("graft_cell_dists", col("embedding"),
-        typedLit(centroids.map(_.toSeq).toSeq))).getField("c"))
+    embDf.withColumn("cluster", clusterOf(centroids))
   }
+
+  /** [[assignClusters]]' `cluster` column over `embedding`. */
+  private def clusterOf(centroids: Array[Array[Double]]): Column =
+    array_min(call_function("graft_cell_dists", col("embedding"),
+      typedLit(centroids.map(_.toSeq).toSeq))).getField("c")
 
   /** q89: cross-modal curation — the documents table (lexical quality,
     * the q33 composite score) joined with the embeddings table (the same
@@ -1864,11 +1905,11 @@ object SimilarityOps {
     * one corpus pass per iteration: assignment reuses the fused native
     * `graft_pq_encode` kernel (per-subspace squared-L2 argmin, low-index
     * tie-break — the spec-pinned q123 arithmetic, so the oracle's
-    * row_number replay derives identical codes), and the update is one
-    * posexplode aggregation to ≤ PqSub·k·subDim cells with map-side
-    * partial decimal sums — the corpus never shuffles, and a separate
-    * per-subspace training (8× the passes) would read the same bytes
-    * eight times for no extra information.
+    * row_number replay derives identical codes), and the update is
+    * [[lloydUpdate]]'s one fold to ≤ PqSub·k·subDim exact-decimal cells —
+    * the corpus never shuffles, and a separate per-subspace training (8×
+    * the passes) would read the same bytes eight times for no extra
+    * information.
     *
     * Returned as `k` FULL-dim codewords (sub-codeword j of subspace m =
     * slice m of row j — subspaces are independent in PQ, so the pairing
@@ -1878,7 +1919,7 @@ object SimilarityOps {
     * Determinism (the rebuild-anywhere contract, same as
     * [[kmeansCentroids]]): init is the `k` valid vectors with the lowest
     * [[Tables.lcgBucket]] hash of vec_id (no rand()), every update mean
-    * is the exact-decimal sum rounded to 6 dp IN the aggregation (the
+    * is the exact-decimal sum rounded to 6 dp after the merge (the
     * q43 cross-engine digest discipline — quantizing each iteration's
     * codebook kills float-ulp drift across engines and cluster layouts),
     * and an emptied codeword keeps its previous values. Training reads
@@ -1911,60 +1952,12 @@ object SimilarityOps {
     * the trainer's own persist of a second copy.
     */
   private def pqTrainOn(valid: DataFrame, k: Int,
-      iters: Int): Array[Array[Double]] = {
-    graft.functions.GraftFunctions.ensureRegistered(valid.sparkSession)
-    var full: Array[Array[Double]] = Tables.boundedCollect(
-      valid.orderBy(
-          Tables.lcgBucket(col("vec_id"), 48271L, 11L, 1000000007L).asc,
-          col("vec_id").asc)
-        .limit(k).select(col("embedding")),
-      k, "pq training init vectors").map(_.getSeq[Double](0).toArray)
-    require(full.nonEmpty,
+      iters: Int): Array[Array[Double]] =
+    lloyd(valid, k, iters, nSub = PqSub,
       "pqTrainedCodebook: no valid full-dim vectors to train on " +
-        "(empty or fully-corrupt embedding table)")
-    var it = 0
-    while (it < iters) {
-      // ≤ PqSub·k cell rows of subDim means each — the codebook's own
-      // shape, never corpus-sized. The explode is ×PqSub (one row per
-      // vector per SUBSPACE, its position means as sibling decimal-sum
-      // columns), not ×Dim: an element-level posexplode pushed 8× the
-      // rows through the hash aggregate for identical math (6M-vector
-      // measurement: the update explode dominated the whole training)
-      val cells = withTrainerShuffle(valid.sparkSession) {
-        Tables.boundedCollect(
-          valid.select(
-              call_function("graft_pq_encode", col("embedding"),
-                typedLit(full.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"),
-              col("embedding"))
-            .filter(col("codes").isNotNull)
-            .select(col("codes"), col("embedding"),
-              explode(typedLit((0 until PqSub).toList)).as("m"))
-            .select(col("m") +:
-              element_at(col("codes"), col("m") + 1).as("cw") +:
-              (1 to PqSubDim).map(i =>
-                element_at(col("embedding"),
-                  col("m") * PqSubDim + i).as(s"v_$i")): _*)
-            .groupBy("m", "cw")
-            .agg(count(lit(1)).as("n"),
-              (1 to PqSubDim).map(i => round(
-                sum(col(s"v_$i").cast("decimal(38,10)")).cast("double") /
-                  count(lit(1)), 6).as(s"cv_$i")): _*),
-          1 << 20, "pq training update cells (sub × codeword)")
-      }
-      val next = full.map(_.clone()) // emptied codeword keeps its values
-      cells.foreach { r =>
-        val base = r.getAs[Int]("m") * PqSubDim
-        var i = 1
-        while (i <= PqSubDim) {
-          next(r.getAs[Int]("cw"))(base + i - 1) = r.getAs[Double](s"cv_$i")
-          i += 1
-        }
-      }
-      full = next
-      it += 1
-    }
-    full
-  }
+        "(empty or fully-corrupt embedding table)")(cb =>
+      call_function("graft_pq_encode", col("embedding"),
+        typedLit(cb.map(_.toSeq).toSeq), lit(PqSubDim)))
 
   /** q140: trained-PQ ANN — the q123 ADC search running against the
     * [[pqTrainedCodebook]] instead of the label-derived one: train (5
@@ -2117,7 +2110,7 @@ object SimilarityOps {
     * Determinism: coarse assignment is [[assignClusters]]' arithmetic;
     * residuals are element-wise IEEE subtractions (exact, both
     * engines); the residual trainer inherits [[pqTrainedCodebook]]'s
-    * in-aggregation 6-dp rounding; LUT distances replay the q123 op
+    * after-merge 6-dp rounding; LUT distances replay the q123 op
     * order per probed cell; the 8-term ADC sum left-associates before
     * the final round.
     */
@@ -3731,6 +3724,14 @@ object SimilarityOps {
        |FROM g LEFT JOIN h USING (q_id, m_used)
        |GROUP BY g.m_used ORDER BY m_used""".stripMargin
 
+  /** DuckDB twins of the catalog faces. A label centroid's FLOAT element
+    * goes to DECIMAL through DOUBLE (`CAST(CAST(embedding[i] AS DOUBLE)
+    * AS DECIMAL(38,10))`) because that is what Spark's float-to-decimal
+    * cast computes: the float's exact binary value (0.8125188f →
+    * 0.8125187755), where DuckDB's direct FLOAT cast scales in single
+    * precision (0.8125188f → 0.8125187584) — a different sum that
+    * `round(…, 6)` shows once a mean lands next to a rounding boundary.
+    */
   val oracle: Map[String, String] = Map(
     // Replays distortion: the q123 codebook/argmin CTEs, then the CHOSEN
     // code's distance per subspace — round(greatest(d, 0), 6) summed in
@@ -3738,8 +3739,8 @@ object SimilarityOps {
     // label through the decimal mean.
     "q128_pq_distortion" ->
       s"""WITH c0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
          |  GROUP BY label, s.i),
@@ -3797,8 +3798,8 @@ object SimilarityOps {
     // mean.
     "q126_cluster_cohesion" ->
       s"""WITH c0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
          |  GROUP BY label, s.i),
@@ -3821,8 +3822,8 @@ object SimilarityOps {
     // ADC = left fold of the 8 query-side lookups in subspace order.
     "q123_ann_pq" ->
       s"""WITH c0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
          |  GROUP BY label, s.i),
@@ -3975,8 +3976,8 @@ object SimilarityOps {
     // top-3 probe → exact re-rank within the probed cells.
     "q45_ann_ivf" ->
       s"""WITH c0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
          |  GROUP BY label, s.i),
@@ -4039,8 +4040,8 @@ object SimilarityOps {
     },
     "q138_pq_recall" ->
       s"""WITH c0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
          |  GROUP BY label, s.i),
@@ -4097,8 +4098,8 @@ object SimilarityOps {
          |GROUP BY g.radius ORDER BY radius""".stripMargin,
     "q136_embedding_drift" ->
       s"""WITH b0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv,
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv,
          |    count(embedding[s.i]) AS cnt
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
@@ -4110,8 +4111,8 @@ object SimilarityOps {
          |      x -> CAST(x AS DOUBLE) * 0.9 + 0.05) AS embedding
          |  FROM embeddings WHERE vec_id % 5 = 0),
          |t0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv,
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv,
          |    count(embedding[s.i]) AS cnt
          |  FROM t
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
@@ -4144,8 +4145,8 @@ object SimilarityOps {
          |    WHERE cos_sim IS NOT NULL)
          |  WHERE rk <= $RecallK),
          |c0 AS (SELECT label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, $Dim)) AS i) s
          |  GROUP BY label, s.i),
@@ -4219,8 +4220,8 @@ object SimilarityOps {
          |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
     "q43_label_centroids" ->
       """SELECT label, s.i AS dim,
-        |  round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10))) AS DOUBLE)
-        |    / count(*), 6) AS centroid,
+        |  round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+        |    AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS centroid,
         |  count(*) AS n
         |FROM embeddings
         |CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) s
@@ -4231,8 +4232,8 @@ object SimilarityOps {
     // argmin with the low-label tie-break.
     "q95_cluster_purity" ->
       s"""WITH c AS (SELECT label AS c_label, s.i AS dim,
-         |    round(CAST(sum(CAST(embedding[s.i] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(embedding[s.i] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM embeddings
          |  CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) s
          |  GROUP BY c_label, s.i),

@@ -1,0 +1,24 @@
+package graft
+
+/** The `src/main` source walk behind the source-lint specs
+  * ([[BoundedCollectSpec]], [[SharedSessionSpec]]): every line of every
+  * `.scala` file that contains one of `patterns`, as
+  * (file name, "path:line: text"). Specs run from the repo root.
+  */
+object SourceLint {
+
+  val root = new java.io.File("src/main/scala")
+
+  def hits(patterns: Seq[String]): Seq[(String, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+        .linesIterator.zipWithIndex.collect {
+        case (line, i) if patterns.exists(line.contains) =>
+          (f.getName, s"${f.getPath}:${i + 1}: $line")
+      }.toSeq
+    }
+  }
+}
