@@ -262,9 +262,19 @@ object Tables {
     * of a per-round by-hand audit of raw collect sites. The input is cut
     * at `cap + 1` rows BEFORE the action, so a frame that violates its
     * audited bound fails with a named error after materializing at most
-    * cap+1 rows — never an opaque driver OOM. The `limit` composes with
-    * an ordered-limit input (EliminateLimits folds it into the existing
-    * TakeOrderedAndProject), so ordered call sites keep their order.
+    * cap+1 rows — never an opaque driver OOM. The cut is one job and
+    * touches no session conf:
+    *
+    *  - an input that already ends in a global sort or a limit takes the
+    *    guard as a `limit`, which folds into that operator (an ordered
+    *    limit becomes one TakeOrderedAndProject, so ordered call sites
+    *    keep their order);
+    *  - any other input is cut per partition (`take(cap + 1)` in one
+    *    `mapPartitions`) and collected in partition order. A root limit
+    *    here would collect via executeTake, which probes partitions in
+    *    sequential 1/4/16/… rounds — a ramp of driver-blocking jobs (the
+    *    per-job scheduler barrier is the q127 floor lesson).
+    *
     * Bench's session-warmup collect is the one deliberate exception
     * (fixed 1-row aggregate, not product code).
     */
@@ -272,25 +282,19 @@ object Tables {
       label: String): Array[T] = {
     require(cap > 0 && cap < Int.MaxValue,
       s"boundedCollect($label): cap must be a positive Int, got $cap")
-    // A root limit collects via executeTake, which by default probes
-    // partitions in sequential 1/4/16/… rounds — on a multi-partition
-    // frame that turns the site's former ONE parallel job into a ramp of
-    // driver-blocking jobs (the per-job scheduler barrier is the q127
-    // floor lesson; edgesUpToCap documents the one-job contract
-    // explicitly). Setting initialNumPartitions sky-high for the
-    // planning of THIS collect makes executeTake's first round scan
-    // every partition — the original single-job shape, now with the
-    // cap+1 row cut applied per partition before rows reach the driver.
-    val spark = ds.sparkSession
-    val key = "spark.sql.limit.initialNumPartitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1000000") // >= any real partition count
-    val rows =
-      try ds.limit(cap + 1).collect()
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def cutAtRoot(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => cutAtRoot(child)
+      case SubqueryAlias(_, child) => cutAtRoot(child)
+      case s: Sort => s.global
+      case _: GlobalLimit | _: LocalLimit => true
+      case _ => false
+    }
+    val n = cap + 1
+    val cut =
+      if (cutAtRoot(ds.queryExecution.analyzed)) ds.limit(n)
+      else ds.mapPartitions((it: Iterator[T]) => it.take(n))(ds.encoder)
+    val rows = cut.collect()
     if (rows.length > cap)
       throw new IllegalStateException(
         s"boundedCollect($label): more than $cap rows reached the " +

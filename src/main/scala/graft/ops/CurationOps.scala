@@ -1181,17 +1181,11 @@ object CurationOps {
     * store. The store is tiny relative to the corpus (norms only, no
     * doc payload) and append-only across crawls.
     */
-  def writeFingerprintStore(docsDf: DataFrame, path: String): Unit = {
-    // staging + swap even for the initial materialization: a REBUILD of
-    // a live store via bare overwrite deletes it before the new files
-    // commit (the bloom-refresh lesson, applied store-family-wide)
-    val staging = path + ".merging"
-    docsDf.select(DedupOps.normText.as("norm")).distinct()
+  def writeFingerprintStore(docsDf: DataFrame, path: String): Unit =
+    ScaleOps.publishStore(docsDf.select(DedupOps.normText.as("norm"))
+      .distinct()
       .withColumn("fp", xxhash64(col("norm")))
-      .repartition(col("fp"))
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(docsDf.sparkSession, staging, path)
-  }
+      .repartition(col("fp")), path)
 
   /** Admit only the incoming docs whose normalized text is absent from
     * the stored fingerprint table — q62's probe against the STORE rather
@@ -1247,23 +1241,21 @@ object CurationOps {
     * (the thing that does not fit at 100 TB); the sketch trades ~1 %
     * error for O(1) storage and associative updates.
     */
-  def writeCardinalityStore(docsDf: DataFrame, path: String): Unit = {
-    // staged like every whole-store writer (rebuild of a live store)
-    val staging = path + ".merging"
+  def writeCardinalityStore(docsDf: DataFrame, path: String): Unit =
+    ScaleOps.publishStore(sourceSketches(docsDf), path)
+
+  /** One (source, sketch) row per source — the store's row format. */
+  private def sourceSketches(docsDf: DataFrame): DataFrame =
     docsDf.select(col("source"), explode(toks).as("token"))
       .groupBy("source")
       .agg(expr("hll_sketch_agg(token, 14)").as("sketch"))
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(docsDf.sparkSession, staging, path)
-  }
 
   /** Union a new batch's sketches into the store (full-outer on source:
-    * new sources appear, existing ones merge via `hll_union`). The merged
-    * rows round-trip through the driver — ≤|sources| rows of bounded
-    * sketch bytes, and reading lazily from the path being rewritten would
-    * race the rewrite. The new store lands via staging-dir write + atomic
-    * two-rename swap ([[ScaleOps.swapInto]]), never `mode("overwrite")` on
-    * the live path: this state is BY DESIGN unrebuildable without
+    * new sources appear, existing ones merge via `hll_union`). The merge
+    * reads the live store inside the write job: [[ScaleOps.publishStore]]
+    * stages beside the live path and swaps only after the write commits,
+    * so the read never races the rewrite, and never `mode("overwrite")`
+    * on the live path: this state is BY DESIGN unrebuildable without
     * re-reading every past crawl, so a crash between overwrite's delete
     * and its commit would be permanent sketch loss.
     */
@@ -1279,26 +1271,13 @@ object CurationOps {
       writeCardinalityStore(batch, path)
       return
     }
-    val store = s.read.parquet(path)
-    val schema = store.schema
-    val fresh = batch.select(col("source"), explode(toks).as("token"))
-      .groupBy("source")
-      .agg(expr("hll_sketch_agg(token, 14)").as("sketch"))
-    // one row per SOURCE (the store's key), not per document — a source
-    // taxonomy is a catalog, not a corpus
-    val merged = Tables.boundedCollect(
-      store.withColumnRenamed("sketch", "old")
-        .join(fresh.withColumnRenamed("sketch", "new"), Seq("source"),
-          "full_outer")
-        .select(col("source"), expr(
-          "CASE WHEN old IS NULL THEN new WHEN new IS NULL THEN old " +
-            "ELSE hll_union(old, new) END").as("sketch")),
-      100000, "cardinality-store source sketches")
-    import scala.jdk.CollectionConverters._
-    val staging = path + ".merging"
-    s.createDataFrame(merged.toSeq.asJava, schema)
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(s, staging, path)
+    ScaleOps.publishStore(s.read.parquet(path)
+      .withColumnRenamed("sketch", "old")
+      .join(sourceSketches(batch).withColumnRenamed("sketch", "new"),
+        Seq("source"), "full_outer")
+      .select(col("source"), expr(
+        "CASE WHEN old IS NULL THEN new WHEN new IS NULL THEN old " +
+          "ELSE hll_union(old, new) END").as("sketch")), path)
   }
 
   /** Estimated distinct tokens per source from the store — no corpus

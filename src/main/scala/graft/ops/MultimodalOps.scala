@@ -307,15 +307,8 @@ object MultimodalOps {
     * exactly once) and screen against the index
     * ([[phashPairsAgainstStore]]) without ever re-decoding the corpus.
     */
-  def writePhashStore(docsDf: DataFrame, path: String): Unit = {
-    // staging + swap even for the initial materialization: a REBUILD of a
-    // live store via bare overwrite deletes the crawl loop's index before
-    // the new files commit — a crash mid-write leaves it
-    // deleted-but-unwritten (the bloom-refresh lesson, applied here)
-    val staging = path + ".merging"
-    mediaPhashOn(docsDf).write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(docsDf.sparkSession, staging, path)
-  }
+  def writePhashStore(docsDf: DataFrame, path: String): Unit =
+    ScaleOps.publishStore(mediaPhashOn(docsDf), path)
 
   def appendToPhashStore(batch: DataFrame, path: String): Unit =
     appendHashedToPhashStore(mediaPhashOn(batch), path)

@@ -453,28 +453,20 @@ object ScaleOps {
     * at 100 TB that means scan tasks dominated by open/seek overhead and
     * a groaning file-listing phase. Sizing reads the CURRENT on-disk
     * bytes (compressed) via the filesystem — no data pass — then one
-    * round-robin repartition to ceil(bytes / target) writers.
-    *
-    * The rewrite goes to `<dir>.compacting`; the swap is two renames with
-    * the original parked at `<dir>.old` in between — every crash point
-    * leaves a complete copy of the data under a discoverable name (before
-    * the first rename: original at `dir`; between renames: original at
-    * `dir.old`, new data at `dir.compacting`; after: new data at `dir`,
-    * original at `dir.old` until the final cleanup delete). The window in
-    * which `dir` itself does not exist is two metadata renames, not a
-    * recursive delete; concurrent readers must still be drained externally,
-    * as with any in-place rewrite.
+    * round-robin repartition to ceil(bytes / target) writers, published
+    * through [[compactStore]] (so a `_graft_meta` sidecar such as the
+    * shingle store's `k` rides along).
     */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(dir)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // refuse Hive-partitioned roots: the flat rewrite would silently drop
-    // the directory structure (read infers the key as a data column, the
-    // write emits flat files) — destroying partition pruning and, for the
-    // batch_id-keyed streaming stores, the replay-overwrite contract.
-    // Partitioned layouts compact per leaf directory or with their own
-    // keyed compactors (e.g. TextOps.compactKeyedTokenCountStore).
+    // refuse Hive-partitioned roots: the round-robin rewrite targets
+    // file COUNT, which a per-value directory split would multiply —
+    // and for the batch_id-keyed streaming stores the flat rewrite
+    // would break the replay-overwrite contract. Partitioned layouts
+    // compact per leaf directory or with their own keyed compactors
+    // (e.g. TextOps.compactKeyedTokenCountStore).
     val partitioned = fs.listStatus(hPath)
       .filter(_.isDirectory).map(_.getPath.getName)
       .filter(n => n.contains("=") && !n.startsWith("_"))
@@ -484,44 +476,74 @@ object ScaleOps {
         "drop the partition structure; compact leaf directories instead")
     val bytes = fs.getContentSummary(hPath).getLength
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val tmp = dir + ".compacting"
-    spark.read.parquet(dir)
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(tmp)
-    swapInto(spark, tmp, dir)
+    compactStore(spark, dir, _.repartition(nFiles))
   }
 
+  // ---- the one staged publish of every persisted store ---------------------
+
+  /** Staging dir beside a whole store (`<path>.merging`) and the parked
+    * name of its live copy during [[swapInto]] (`<path>.old`) — the only
+    * two siblings a store's publish ever creates.
+    */
+  private[graft] val StagingSuffix = ".merging"
+  private[graft] val ParkedSuffix = ".old"
+
+  /** A store's hidden sidecar dir: underscore-prefixed, so Spark's file
+    * index never reads it as data. Families record what a probe must
+    * agree with there (shingle `k`, `codebook_fp`, `cells_fp`/`resid_fp`).
+    */
+  private[graft] def metaPath(storeDir: String): String =
+    s"$storeDir/_graft_meta"
+
+  /** THE whole-store publish: delete any leftover `<path>.merging` from a
+    * crashed earlier publish, write `frame` (Hive-partitioned by
+    * `partitionBy`) into that staging dir, let `stamp` write the store's
+    * `_graft_meta` sidecar into the same dir, then [[swapInto]]. The live
+    * store is untouched until the swap, so a rebuild whose frame throws
+    * mid-write, or whose job commit fails, leaves the prior store and its
+    * sidecar readable — a bare `mode("overwrite")` on the live path
+    * deletes it before the new files commit. A first publish needs no
+    * special case: the swap takes an absent path to fully written.
+    */
+  def publishStore(frame: DataFrame, path: String,
+      partitionBy: Seq[String] = Nil,
+      stamp: String => Unit = _ => ()): Unit =
+    publish(frame.sparkSession, path) { staging =>
+      frame.write.partitionBy(partitionBy: _*).mode("overwrite")
+        .parquet(staging)
+      stamp(staging)
+    }
+
   /** Shared staged-compact core for the persisted store families: read
-    * the live store, apply the family's contraction, stage the rewrite at
-    * `<path>.merging`, publish via [[swapInto]]. ONE definition of the
-    * read→guard→contract→stage→swap sequence so the nine per-family
-    * compactors cannot drift (the class the phash batch-id guard patched
-    * is now enforced for EVERY family):
+    * the live store, apply the family's contraction, and publish it
+    * through the same staging dir and swap as [[publishStore]]. ONE
+    * definition of the read→guard→contract→stage→swap sequence, so no
+    * family compactor can drift:
     *
+    *  - the live store's Hive partition columns other than `batch_id`
+    *    (the IVF-PQ store's `cell`) are read from its layout and kept —
+    *    the layout is the index, a flat rewrite would turn every probed
+    *    search back into a full scan;
+    *  - the live `_graft_meta` sidecar is copied into staging as files
+    *    (no Spark job), so the fingerprint / shingle-width guards survive
+    *    compaction without any family code;
     *  - `batchSlot = false` (flat stores): refuses a batch-id-keyed
     *    layout — a flat rewrite would drop the `batch_id=N` partition
     *    structure the owning streaming pipeline's layout guard requires,
-    *    bricking the stream until the store is re-seeded.
+    *    bricking the stream until the store is re-seeded;
     *  - `batchSlot = true` (streaming stores): requires the keyed layout
     *    and lands the contraction under `batch_id=-1` (negative ids never
     *    collide with a live batch). ONLY compact while the owning stream
     *    is STOPPED with its checkpoint committed — a replayed batch would
-    *    re-create its segment alongside the folded copy.
-    *  - `onStaged` runs against the staging dir after the contraction
-    *    commits and before the swap — sidecar files (the shingle-k meta)
-    *    ride the same atomic publish.
-    *
-    * Any leftover staging dir from a crashed previous compact is deleted
-    * up front (the live store is untouched until the swap, so staging is
-    * never the only copy).
+    *    re-create its segment alongside the folded copy;
+    *  - `onStaged` runs against the staging dir after the contraction and
+    *    the sidecar land and before the swap — extra files (the funnel's
+    *    retained newest segment) ride the same atomic publish.
     */
   def compactStore(s: SparkSession, path: String,
       contract: DataFrame => DataFrame,
       batchSlot: Boolean = false,
       onStaged: String => Unit = _ => ()): Unit = {
-    val staging = path + ".merging"
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     val live = s.read.parquet(path)
     if (batchSlot)
       require(live.columns.contains("batch_id"),
@@ -534,11 +556,43 @@ object ScaleOps {
           "pipeline's layout) — a flat rewrite would drop the batch_id " +
           "partition and brick the owning pipeline; use the family's " +
           "keyed compactor instead")
-    fs.delete(stagingPath, true)
-    contract(live).write.mode("overwrite")
-      .parquet(if (batchSlot) BatchDirs.segment(staging, BatchDirs.SeedId)
-        else staging)
-    onStaged(staging)
+    val keep = partitionColumns(live).filterNot(_ == "batch_id")
+    publish(s, path) { staging =>
+      contract(live).write.partitionBy(keep: _*).mode("overwrite")
+        .parquet(if (batchSlot) BatchDirs.segment(staging, BatchDirs.SeedId)
+          else staging)
+      val meta = new org.apache.hadoop.fs.Path(metaPath(path))
+      val fs = meta.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(meta))
+        org.apache.hadoop.fs.FileUtil.copy(fs, meta, fs,
+          new org.apache.hadoop.fs.Path(metaPath(staging)), false,
+          s.sparkContext.hadoopConfiguration)
+      onStaged(staging)
+    }
+  }
+
+  /** The Hive partition columns Spark discovered under a parquet read's
+    * root, outermost first. */
+  private def partitionColumns(live: DataFrame): Seq[String] =
+    live.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.partitionSchema.fieldNames.toSeq
+    }.getOrElse(Nil)
+
+  /** The staging lifecycle behind [[publishStore]] and [[compactStore]]:
+    * drop a leftover staging dir (the live store is untouched until the
+    * swap, so staging is never the only copy), `stage` into it, swap.
+    */
+  private def publish(s: SparkSession, path: String)(
+      stage: String => Unit): Unit = {
+    val staging = path + StagingSuffix
+    val stagingPath = new org.apache.hadoop.fs.Path(staging)
+    stagingPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .delete(stagingPath, true)
+    stage(staging)
     swapInto(s, staging, path)
   }
 
@@ -554,11 +608,12 @@ object ScaleOps {
     * recursive delete; concurrent readers must still be drained externally,
     * as with any in-place rewrite.
     */
-  def swapInto(spark: SparkSession, staging: String, dir: String): Unit = {
+  private[graft] def swapInto(spark: SparkSession, staging: String,
+      dir: String): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(dir)
     swapInto(hPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(staging), hPath,
-      new org.apache.hadoop.fs.Path(dir + ".old"))
+      new org.apache.hadoop.fs.Path(dir + ParkedSuffix))
   }
 
   /** [[swapInto]]'s file-system core with the parked name as an argument:

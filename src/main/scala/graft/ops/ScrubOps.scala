@@ -413,12 +413,8 @@ object ScrubOps {
 
   /** Build (or rebuild) the store from a full corpus — staged write +
     * atomic swap like every whole-store writer. */
-  def writeKanonStore(eventsDf: DataFrame, path: String): Unit = {
-    val staging = path + ".merging"
-    classSketches(eventsDf)
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(eventsDf.sparkSession, staging, path)
-  }
+  def writeKanonStore(eventsDf: DataFrame, path: String): Unit =
+    ScaleOps.publishStore(classSketches(eventsDf), path)
 
   /** Fold a crawl batch in, append-only (crash-safe without a swap: an
     * uncommitted task's files stay in _temporary and are never read).
@@ -427,13 +423,11 @@ object ScrubOps {
     classSketches(batch).write.mode("append").parquet(path)
 
   /** Merge segment rows back to one row per class (maintenance — readers
-    * do the same union on the fly). */
-  def compactKanonStore(s: SparkSession, path: String): Unit = {
-    val staging = path + ".merging"
-    mergedKanonSketches(s.read.parquet(path))
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(s, staging, path)
-  }
+    * do the same union on the fly). Refuses the privacy gate's
+    * `batch_id=N` store ([[ScaleOps.compactStore]]'s flat guard): the
+    * merge would drop the keyed layout the gate replays into. */
+  def compactKanonStore(s: SparkSession, path: String): Unit =
+    ScaleOps.compactStore(s, path, mergedKanonSketches)
 
   /** THE class-merge definition — duplicate class rows across store
     * segments union to one SKETCH row per class (the store's own row

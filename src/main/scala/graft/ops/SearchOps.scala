@@ -380,29 +380,15 @@ object SearchOps {
     * all count stores it merges by ADDITION: append a crawl's counts and
     * every reader sums across segments, so incremental perplexity scoring
     * ([[lmPerplexityFromStore]]) never re-reads the indexed corpus.
+    * Published through [[ScaleOps.publishStore]], so it also seeds a path
+    * that LIVE READERS may already be polling (the mix governor's
+    * mid-crawl LM seed): a reader sees the path absent (the governor's
+    * null-columns arm) or fully written, never footer-less mid-job.
     */
   def writeBigramStore(docsDf: DataFrame, path: String): Unit =
-    writeBigramStoreStaged(docsDf, path)
-
-  /** [[writeBigramStore]] via staging + atomic swap — the seeding form
-    * for a path that LIVE READERS may already be polling (the mix
-    * governor's mid-crawl LM seed): a direct `mode("overwrite")` leaves
-    * the path existing-but-footerless for the whole job duration, so a
-    * concurrent poll crashes on schema inference or, worse, scores
-    * against a partially-committed LM. With the swap, a reader sees the
-    * path absent (the governor's null-columns arm) or fully written —
-    * never in between.
-    */
-  def writeBigramStoreStaged(docsDf: DataFrame, path: String): Unit = {
-    val staging = path + ".merging"
-    docBigramsOn(docsDf)
+    ScaleOps.publishStore(docBigramsOn(docsDf)
       .groupBy("from_tok", "to_tok").agg(count(lit(1)).as("n_pairs"))
-      .repartition(col("from_tok"))
-      .write.mode("overwrite").parquet(staging)
-    // swapInto handles both arms: first seed (absent → one rename) and
-    // refresh over a live store (park + swap)
-    graft.ops.ScaleOps.swapInto(docsDf.sparkSession, staging, path)
-  }
+      .repartition(col("from_tok")), path)
 
   /** Fold a new batch's bigram counts into the store, append-only
     * (sum-on-read merges segments; replaying an append double-counts that

@@ -2534,23 +2534,26 @@ object SimilarityOps {
     * on — coarse cells and residual codewords are separate trained
     * artifacts with separate retrain cadences, and a drift in EITHER
     * silently mis-scores the whole index (stale residual codes against
-    * fresh cells are exactly as wrong as the reverse).
+    * fresh cells are exactly as wrong as the reverse). The same stamp and
+    * guard serve a whole store and the root of the batch-id-keyed
+    * streaming layout ([[graft.streaming.VectorIngestPipeline]]).
     */
-  private def writeIvfPqMeta(s: SparkSession, path: String,
-      cellsFp: Long, residFp: Long): Unit = {
+  private[graft] def writeIvfPqMeta(s: SparkSession, path: String,
+      cells: Array[Array[Double]], residCb: Array[Array[Double]]): Unit = {
     import s.implicits._
-    Seq((cellsFp, residFp)).toDF("cells_fp", "resid_fp").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_meta")
+    Seq((codebookFingerprint(cells), codebookFingerprint(residCb)))
+      .toDF("cells_fp", "resid_fp").coalesce(1)
+      .write.mode("overwrite").parquet(ScaleOps.metaPath(path))
   }
 
-  private def requireIvfPqFingerprints(s: SparkSession, path: String,
-      cells: Array[Array[Double]], residCb: Array[Array[Double]],
-      op: String): Unit = {
+  private[graft] def requireIvfPqFingerprints(s: SparkSession,
+      path: String, cells: Array[Array[Double]],
+      residCb: Array[Array[Double]], op: String): Unit = {
     require(cells.nonEmpty && residCb.nonEmpty,
       s"$op: empty coarse or residual codebook — train with " +
         "kmeansCentroids / pqResidualCodebook, or load the store's " +
         "artifacts with readCodebookStore")
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
+    val p = new org.apache.hadoop.fs.Path(ScaleOps.metaPath(path))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
       val r = Tables.boundedCollect(s.read.parquet(p.toString)
@@ -2565,21 +2568,6 @@ object SimilarityOps {
     }
   }
 
-  /** Root-level stamp/validate for the batch-id-keyed streaming IVF-PQ
-    * layout ([[graft.streaming.VectorIngestPipeline.runIvfPqIngest]]) —
-    * the [[stampPqStoreRoot]] convention with both artifacts.
-    */
-  private[graft] def stampIvfPqStoreRoot(s: SparkSession,
-      storeDir: String, cells: Array[Array[Double]],
-      residCb: Array[Array[Double]]): Unit =
-    writeIvfPqMeta(s, storeDir, codebookFingerprint(cells),
-      codebookFingerprint(residCb))
-
-  private[graft] def requireIvfPqStoreRoot(s: SparkSession,
-      storeDir: String, cells: Array[Array[Double]],
-      residCb: Array[Array[Double]], op: String): Unit =
-    requireIvfPqFingerprints(s, storeDir, cells, residCb, op)
-
   /** Materialize the IVF-PQ index: one (vec_id, label, codes) row per
     * vector, PARTITIONED BY its coarse cell — the inverted-list layout,
     * so a probed search prunes to nProbe cell directories at the
@@ -2588,15 +2576,24 @@ object SimilarityOps {
     * q151: both artifacts train once ([[kmeansCentroids]] /
     * [[pqResidualCodebook]], persisted via [[writeCodebookStore]]), the
     * corpus encodes once at ingest, and every search after reads codes
-    * only ([[annIvfPqFromStore]]). Dual fingerprints stamp the sidecar.
+    * only ([[annIvfPqFromStore]]). Dual fingerprints stamp the sidecar,
+    * published with the codes through [[ScaleOps.publishStore]].
     * `validDf` needs (vec_id, label, embedding), null-free full-dim.
     */
   def writeIvfPqStore(validDf: DataFrame, cells: Array[Array[Double]],
-      residCb: Array[Array[Double]], path: String): Unit = {
+      residCb: Array[Array[Double]], path: String): Unit =
+    ScaleOps.publishStore(ivfPqEncoded(validDf, cells, residCb), path,
+      Seq("cell"), writeIvfPqMeta(validDf.sparkSession, _, cells, residCb))
+
+  /** One keyed segment of the streaming IVF-PQ layout, written in place
+    * (the segment overwrite is the replay contract) and stamped like a
+    * whole store. */
+  private[graft] def writeIvfPqSegment(validDf: DataFrame,
+      cells: Array[Array[Double]], residCb: Array[Array[Double]],
+      dir: String): Unit = {
     ivfPqEncoded(validDf, cells, residCb)
-      .write.partitionBy("cell").mode("overwrite").parquet(path)
-    writeIvfPqMeta(validDf.sparkSession, path,
-      codebookFingerprint(cells), codebookFingerprint(residCb))
+      .write.partitionBy("cell").mode("overwrite").parquet(dir)
+    writeIvfPqMeta(validDf.sparkSession, dir, cells, residCb)
   }
 
   /** Fold a new batch into the index (admit exactly once, the
@@ -2608,29 +2605,16 @@ object SimilarityOps {
       "appendToIvfPqStore")
     ivfPqEncoded(batch, cells, residCb)
       .write.partitionBy("cell").mode("append").parquet(path)
-    writeIvfPqMeta(batch.sparkSession, path,
-      codebookFingerprint(cells), codebookFingerprint(residCb))
+    writeIvfPqMeta(batch.sparkSession, path, cells, residCb)
   }
 
-  /** Re-contract replayed-append duplicates to one row per vec_id,
-    * PRESERVING the cell partitioning (the layout is the index — a flat
-    * rewrite would turn every probe back into a full scan). Staged +
-    * atomic swap with the fingerprint sidecar carried across.
+  /** Re-contract replayed-append duplicates to one row per vec_id through
+    * [[ScaleOps.compactStore]], which keeps the cell partitioning (the
+    * layout is the index — a flat rewrite would turn every probe back
+    * into a full scan) and carries the fingerprint sidecar across.
     */
-  def compactIvfPqStore(s: SparkSession, path: String): Unit = {
-    val meta = Tables.boundedCollect(
-      s.read.parquet(s"$path/_graft_meta").select("cells_fp", "resid_fp"),
-      1, "ivfpq store fingerprints").headOption
-    val staging = path + ".merging"
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(stagingPath, true)
-    s.read.parquet(path).dropDuplicates("vec_id")
-      .write.partitionBy("cell").mode("overwrite").parquet(staging)
-    meta.foreach(r => writeIvfPqMeta(s, staging, r.getLong(0),
-      r.getLong(1)))
-    ScaleOps.swapInto(s, staging, path)
-  }
+  def compactIvfPqStore(s: SparkSession, path: String): Unit =
+    ScaleOps.compactStore(s, path, _.dropDuplicates("vec_id"))
 
   private def ivfPqEncoded(validDf: DataFrame,
       cells: Array[Array[Double]],
@@ -2894,57 +2878,44 @@ object SimilarityOps {
 
   /** Stamp the encoding codebook's fingerprint in the store's hidden
     * sidecar (`_graft_meta` — underscore-prefixed, invisible to parquet
-    * readers; the [[SpanOps]] shingle-k convention).
+    * readers; the [[SpanOps]] shingle-k convention). The same stamp and
+    * guard serve a whole store and the root of the batch-id-keyed
+    * streaming layout ([[graft.streaming.VectorIngestPipeline]]): the
+    * keyed segments form ONE index, so its generation guard lives at the
+    * store root rather than per segment.
     */
-  private def writePqMeta(s: SparkSession, path: String, fp: Long): Unit = {
+  private[graft] def writePqMeta(s: SparkSession, path: String,
+      codebook: Array[Array[Double]]): Unit = {
     import s.implicits._
-    Seq(fp).toDF("codebook_fp").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_meta")
+    Seq(codebookFingerprint(codebook)).toDF("codebook_fp").coalesce(1)
+      .write.mode("overwrite").parquet(ScaleOps.metaPath(path))
   }
 
-  /** The stamped codebook fingerprint, if this store carries one (a
-    * pre-fingerprint store doesn't — absent meta skips the check rather
-    * than bricking existing indexes; every writer below (re)stamps, so
-    * the window closes at the next write or compaction).
+  /** Refuses a codebook that is not the store's encoding generation. A
+    * pre-fingerprint store carries no stamp — absent meta skips the check
+    * rather than bricking existing indexes; every writer below
+    * (re)stamps, so the window closes at the next write or compaction.
     */
-  private[graft] def storedPqFingerprint(s: SparkSession,
-      path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(Tables.boundedCollect(s.read.parquet(p.toString)
-        .select("codebook_fp"), 1, "pq store codebook fingerprint")
-        .head.getLong(0))
-    else None
-  }
-
-  /** Root-level stamp/validate for the batch-id-keyed streaming layout
-    * ([[graft.streaming.VectorIngestPipeline]]): the keyed segments form
-    * ONE index, so its generation guard lives at the store root rather
-    * than per segment.
-    */
-  private[graft] def stampPqStoreRoot(s: SparkSession, storeDir: String,
-      codebook: Array[Array[Double]]): Unit =
-    writePqMeta(s, storeDir, codebookFingerprint(codebook))
-
-  private[graft] def requirePqStoreRoot(s: SparkSession, storeDir: String,
-      codebook: Array[Array[Double]], op: String): Unit =
-    requirePqFingerprint(s, storeDir, codebook, op)
-
-  private def requirePqFingerprint(s: SparkSession, path: String,
+  private[graft] def requirePqFingerprint(s: SparkSession, path: String,
       codebook: Array[Array[Double]], op: String): Unit = {
     // named BEFORE any head access: an empty codebook must say so, not
     // surface a bare NoSuchElementException (r15 self-review finding)
     require(codebook.nonEmpty, s"$op: empty codebook — train with " +
       "kmeansCentroids / pqTrainedCodebook, or load the store's " +
       "artifact with readCodebookStore")
-    storedPqFingerprint(s, path).foreach(stored =>
+    val p = new org.apache.hadoop.fs.Path(ScaleOps.metaPath(path))
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) {
+      val stored = Tables.boundedCollect(s.read.parquet(p.toString)
+        .select("codebook_fp"), 1, "pq store codebook fingerprint")
+        .head.getLong(0)
       require(stored == codebookFingerprint(codebook),
         s"$op: the PQ store at $path was encoded by a DIFFERENT codebook " +
           "generation than the one passed — its codes would score " +
           "silently wrong. Load the store's matching codebook " +
           "(readCodebookStore on the artifact published with it) or " +
-          "re-encode the index against the new codebook (writePqStore)"))
+          "re-encode the index against the new codebook (writePqStore)")
+    }
   }
 
   /** Materialize the PQ index: one (vec_id, label, codes) row per vector —
@@ -2957,12 +2928,21 @@ object SimilarityOps {
     * codes are meaningless across codebooks, so there is nothing to
     * merge). Stamps the codebook's [[codebookFingerprint]] so a later
     * append or search with a drifted codebook fails loud, not silently
-    * wrong.
+    * wrong. Codes and stamp publish together through
+    * [[ScaleOps.publishStore]].
     */
   def writePqStore(embDf: DataFrame, codebook: Array[Array[Double]],
-      path: String): Unit = {
-    pqEncoded(embDf, codebook).write.mode("overwrite").parquet(path)
-    writePqMeta(embDf.sparkSession, path, codebookFingerprint(codebook))
+      path: String): Unit =
+    ScaleOps.publishStore(pqEncoded(embDf, codebook), path,
+      stamp = writePqMeta(embDf.sparkSession, _, codebook))
+
+  /** One keyed segment of the streaming PQ layout, written in place (the
+    * segment overwrite is the replay contract) and stamped like a whole
+    * store. */
+  private[graft] def writePqSegment(embDf: DataFrame,
+      codebook: Array[Array[Double]], dir: String): Unit = {
+    pqEncoded(embDf, codebook).write.mode("overwrite").parquet(dir)
+    writePqMeta(embDf.sparkSession, dir, codebook)
   }
 
   /** Fold a new batch of vectors into the index (same admit-exactly-once
@@ -2977,7 +2957,7 @@ object SimilarityOps {
     requirePqFingerprint(batch.sparkSession, path, codebook,
       "appendToPqStore")
     pqEncoded(batch, codebook).write.mode("append").parquet(path)
-    writePqMeta(batch.sparkSession, path, codebookFingerprint(codebook))
+    writePqMeta(batch.sparkSession, path, codebook)
   }
 
   /** Re-contract accumulated append segments (a replayed append leaves
@@ -2985,13 +2965,10 @@ object SimilarityOps {
     * vec_id — a replay re-encodes the identical codes, so any row of a
     * vec_id is the row — publishing via staging + atomic swap: durable
     * state, never `mode("overwrite")` on the live path. The codebook
-    * fingerprint sidecar rides across the swap (the shingle-k pattern).
+    * fingerprint sidecar rides across the swap.
     */
-  def compactPqStore(s: SparkSession, path: String): Unit = {
-    val fp = storedPqFingerprint(s, path)
-    ScaleOps.compactStore(s, path, _.dropDuplicates("vec_id"),
-      onStaged = staging => fp.foreach(writePqMeta(s, staging, _)))
-  }
+  def compactPqStore(s: SparkSession, path: String): Unit =
+    ScaleOps.compactStore(s, path, _.dropDuplicates("vec_id"))
 
   private def pqEncoded(embDf: DataFrame,
       codebook: Array[Array[Double]]): DataFrame = {
@@ -3023,12 +3000,9 @@ object SimilarityOps {
         codebook.forall(_.length == codebook.head.length),
       "writeCodebookStore: codebook must be non-empty and rectangular")
     import s.implicits._
-    val staging = path + ".merging"
-    codebook.zipWithIndex.toSeq
+    ScaleOps.publishStore(codebook.zipWithIndex.toSeq
       .map { case (c, i) => (i, c.toSeq, c.length, trainIters) }
-      .toDF("cw", "centroid", "dim", "train_iters")
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(s, staging, path)
+      .toDF("cw", "centroid", "dim", "train_iters").coalesce(1), path)
   }
 
   /** Load a codebook back as the literal array every search/encode face
@@ -3220,8 +3194,9 @@ object SimilarityOps {
          |      PARTITION BY vec_id, m ORDER BY dist, cw) AS rn FROM a$t)
          |  WHERE rn = 1),
          |u$t AS (SELECT asn.m, asn.cw, s.i,
-         |    round(CAST(sum(CAST(e.embedding[asn.m * $PqSubDim + s.i]
-         |        AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(e.embedding[asn.m * $PqSubDim + s.i]
+         |        AS DOUBLE) AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6)
+         |      AS cv
          |  FROM asn$t asn JOIN v e USING (vec_id)
          |  CROSS JOIN (SELECT unnest(generate_series(1, $PqSubDim)) AS i) s
          |  GROUP BY asn.m, asn.cw, s.i),
@@ -3544,8 +3519,8 @@ object SimilarityOps {
          |      PARTITION BY vec_id ORDER BY dist, cw) AS rn FROM a$t)
          |  WHERE rn = 1),
          |u$t AS (SELECT asn.cw, pp.pos,
-         |    round(CAST(sum(CAST(e.embedding[pp.pos] AS DECIMAL(38,10)))
-         |      AS DOUBLE) / count(*), 6) AS cv
+         |    round(CAST(sum(CAST(CAST(e.embedding[pp.pos] AS DOUBLE)
+         |      AS DECIMAL(38,10))) AS DOUBLE) / count(*), 6) AS cv
          |  FROM asn$t asn JOIN v e USING (vec_id) CROSS JOIN pos pp
          |  GROUP BY asn.cw, pp.pos),
          |cb$t AS MATERIALIZED (SELECT g.cw,
@@ -3724,8 +3699,10 @@ object SimilarityOps {
        |FROM g LEFT JOIN h USING (q_id, m_used)
        |GROUP BY g.m_used ORDER BY m_used""".stripMargin
 
-  /** DuckDB twins of the catalog faces. A label centroid's FLOAT element
-    * goes to DECIMAL through DOUBLE (`CAST(CAST(embedding[i] AS DOUBLE)
+  /** DuckDB twins of the catalog faces. A FLOAT element summed into a
+    * label centroid or a trainer replay's codeword mean (the
+    * `pqTrainedCbCtes` / `ivfTrainedCbCtes` chains) goes to DECIMAL
+    * through DOUBLE (`CAST(CAST(embedding[i] AS DOUBLE)
     * AS DECIMAL(38,10))`) because that is what Spark's float-to-decimal
     * cast computes: the float's exact binary value (0.8125188f →
     * 0.8125187755), where DuckDB's direct FLOAT cast scales in single

@@ -141,27 +141,22 @@ object SpanOps {
     * Spark's file index never reads it as data): an 8-word-shingle probe
     * of a 50-word-shingle store matches NOTHING and would otherwise
     * report 100% novelty silently — the bloom store records its params
-    * in the row for the same reason. Published via staging + atomic swap
-    * (a rebuild of a LIVE store must never leave it deleted-but-unwritten
-    * mid-crash).
+    * in the row for the same reason. Published, sidecar included,
+    * through [[ScaleOps.publishStore]] (a rebuild of a LIVE store must
+    * never leave it deleted-but-unwritten mid-crash).
     */
   def writeShingleStore(docsDf: DataFrame, path: String,
-      k: Int = DefaultK): Unit = {
-    val s = docsDf.sparkSession
-    val staging = path + ".merging"
-    shingleOcc(docsDf, k).select("h").distinct()
+      k: Int = DefaultK): Unit =
+    ScaleOps.publishStore(shingleOcc(docsDf, k).select("h").distinct()
       .withColumn("fp", xxhash64(col("h")))
-      .repartition(col("fp"))
-      .write.mode("overwrite").parquet(staging)
-    writeShingleMeta(s, staging, k)
-    ScaleOps.swapInto(s, staging, path)
-  }
+      .repartition(col("fp")), path,
+      stamp = writeShingleMeta(docsDf.sparkSession, _, k))
 
   /** Record the store's shingle width in the hidden sidecar. */
   private[graft] def writeShingleMeta(s: SparkSession, path: String, k: Int): Unit = {
     import s.implicits._
     Seq(k).toDF("k").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_graft_meta")
+      .write.mode("overwrite").parquet(ScaleOps.metaPath(path))
   }
 
   /** The store's recorded shingle width, or None for a store written
@@ -169,7 +164,7 @@ object SpanOps {
     * trusted there, as before).
     */
   private[graft] def storedShingleK(s: SparkSession, path: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_graft_meta")
+    val p = new org.apache.hadoop.fs.Path(ScaleOps.metaPath(path))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) Some(s.read.parquet(p.toString).head.getInt(0))
     else None
@@ -206,16 +201,13 @@ object SpanOps {
 
   /** Re-contract accumulated append segments to distinct keys, publishing
     * via staging + atomic swap (durable state — never overwrite the live
-    * path in place).
+    * path in place; the `k` sidecar rides across the swap).
     */
-  def compactShingleStore(s: SparkSession, path: String): Unit = {
-    val k = storedShingleK(s, path) // carry the sidecar across the swap
+  def compactShingleStore(s: SparkSession, path: String): Unit =
     ScaleOps.compactStore(s, path, _
       .select("h").distinct()
       .withColumn("fp", xxhash64(col("h")))
-      .repartition(col("fp")),
-      onStaged = staging => k.foreach(writeShingleMeta(s, staging, _)))
-  }
+      .repartition(col("fp")))
 
   /** Rebuild the bloom store FROM the shingle store — after a crawl
     * appends fresh keys, the triage filter refreshes by folding the
@@ -235,21 +227,19 @@ object SpanOps {
       .select(col("fp").as("hk"))
       .agg(expr(s"graft_bloom_agg(hk, $nBits, $kHashes)").as("b"))
       .head().getAs[Array[Byte]]("b")
+    publishBloom(s, bloomPath, k, nBits, kHashes,
+      if (b == null) graft.functions.Bloom.empty(nBits, kHashes) else b)
+  }
+
+  /** The bloom store's one row, published through
+    * [[ScaleOps.publishStore]]: a refresh of durable state never leaves
+    * the crawl loop's triage filter deleted-but-unwritten mid-crash.
+    */
+  private def publishBloom(s: SparkSession, path: String, k: Int,
+      nBits: Int, kHashes: Int, filter: Array[Byte]): Unit = {
     import s.implicits._
-    val fresh = Seq((k, nBits, kHashes,
-      if (b == null) graft.functions.Bloom.empty(nBits, kHashes) else b))
-      .toDF("k", "n_bits", "k_hashes", "filter")
-    // refresh-in-place of durable state: land in staging and swap when a
-    // live store exists (a crash mid-overwrite would otherwise leave the
-    // crawl loop's triage filter deleted-but-unwritten); first build
-    // writes direct
-    val hPath = new org.apache.hadoop.fs.Path(bloomPath)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hPath)) {
-      val staging = bloomPath + ".merging"
-      fresh.coalesce(1).write.mode("overwrite").parquet(staging)
-      ScaleOps.swapInto(s, staging, bloomPath)
-    } else fresh.coalesce(1).write.mode("overwrite").parquet(bloomPath)
+    ScaleOps.publishStore(Seq((k, nBits, kHashes, filter))
+      .toDF("k", "n_bits", "k_hashes", "filter").coalesce(1), path)
   }
 
   /** [[dupSpansAgainstOn]] probing the persisted store instead of
@@ -305,13 +295,9 @@ object SpanOps {
     * would be silently meaningless.
     */
   def writeBloomStore(corpus: DataFrame, path: String, k: Int = DefaultK,
-      nBits: Int = 1 << 20, kHashes: Int = 7): Unit = {
-    val s = corpus.sparkSession
-    import s.implicits._
-    Seq((k, nBits, kHashes, bloomFilterBytes(corpus, k, nBits, kHashes)))
-      .toDF("k", "n_bits", "k_hashes", "filter")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+      nBits: Int = 1 << 20, kHashes: Int = 7): Unit =
+    publishBloom(corpus.sparkSession, path, k, nBits, kHashes,
+      bloomFilterBytes(corpus, k, nBits, kHashes))
 
   /** Read a persisted bloom store: (filter bytes, k). */
   def readBloomStore(s: SparkSession, path: String): (Array[Byte], Int) = {

@@ -1070,14 +1070,9 @@ object TextOps {
     * 100 TB. Drift ([[sourceDriftFromStore]]) then answers per crawl
     * without ever re-reading the corpus.
     */
-  def writeTokenCountStore(docsDf: DataFrame, path: String): Unit = {
-    // staged like every whole-store writer (rebuild of a live store)
-    val staging = path + ".merging"
-    tokenCountsOn(docsDf)
-      .repartition(col("token"))
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(docsDf.sparkSession, staging, path)
-  }
+  def writeTokenCountStore(docsDf: DataFrame, path: String): Unit =
+    ScaleOps.publishStore(tokenCountsOn(docsDf).repartition(col("token")),
+      path)
 
   /** Fold a new crawl batch into the store, append-only: duplicate
     * (source, token) rows across segments are summed by every reader, so
@@ -1325,15 +1320,10 @@ object TextOps {
     * probed: incremental crawls match against the store
     * ([[matchesAgainstStore]]) without ever re-reading the indexed corpus.
     */
-  def writeWinnowStore(docsDf: DataFrame, path: String): Unit = {
-    // staged like every whole-store writer (rebuild of a live store)
-    val staging = path + ".merging"
-    winnowSetsOn(docsDf)
+  def writeWinnowStore(docsDf: DataFrame, path: String): Unit =
+    ScaleOps.publishStore(winnowSetsOn(docsDf)
       .select(explode(col("fps")).as("fp"), col("doc_id"))
-      .repartition(col("fp"))
-      .write.mode("overwrite").parquet(staging)
-    ScaleOps.swapInto(docsDf.sparkSession, staging, path)
-  }
+      .repartition(col("fp")), path)
 
   /** Fold an ADMITTED crawl batch into the store, append-only (the
     * shingle-store convention: never rewrite existing segments; a

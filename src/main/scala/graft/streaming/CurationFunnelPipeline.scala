@@ -84,19 +84,17 @@ object CurationFunnelPipeline {
     * folding those is safe: -1 < any future or replayed id, and every
     * probe set is unchanged. Staged + atomic swap per store
     * ([[graft.ops.ScaleOps.compactStore]]'s keyed slot, the retained
-    * segment copied into staging before the swap), shingle-width
-    * sidecar carried across.
+    * segment copied into staging before the swap; it carries the
+    * shingle-width sidecar across too).
     */
   def compactFunnelStores(s: SparkSession, normStoreDir: String,
       shingleStoreDir: String): Unit = {
-    compactKeyed(s, normStoreDir, "norm", None)
-    val k = SpanOps.storedShingleK(s, shingleStoreDir)
-    compactKeyed(s, shingleStoreDir, "h",
-      Some(staging => k.foreach(SpanOps.writeShingleMeta(s, staging, _))))
+    compactKeyed(s, normStoreDir, "norm")
+    compactKeyed(s, shingleStoreDir, "h")
   }
 
-  private def compactKeyed(s: SparkSession, dir: String, keyCol: String,
-      extra: Option[String => Unit]): Unit = {
+  private def compactKeyed(s: SparkSession, dir: String,
+      keyCol: String): Unit = {
     val maxId = graft.Tables.boundedCollect(
       s.read.parquet(dir).agg(max("batch_id")), 1,
       "funnel store max segment").headOption
@@ -107,14 +105,12 @@ object CurationFunnelPipeline {
     ScaleOps.compactStore(s, dir,
       _.filter(col("batch_id") < newest).select(keyCol).distinct(),
       batchSlot = true,
-      onStaged = staging => {
-        // carry the possibly-uncommitted newest segment verbatim — the
-        // live dir stays intact until the swap below
+      // carry the possibly-uncommitted newest segment verbatim — the
+      // live dir stays intact until the swap
+      onStaged = staging =>
         s.read.parquet(dir).filter(col("batch_id") === newest)
           .select(keyCol)
-          .write.parquet(BatchDirs.segment(staging, newest))
-        extra.foreach(_(staging))
-      })
+          .write.parquet(BatchDirs.segment(staging, newest)))
   }
 
   /** Start the funnel over a (doc_id, source, text) document stream.

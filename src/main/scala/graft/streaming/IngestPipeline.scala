@@ -69,17 +69,16 @@ object IngestPipeline {
       .select(col("t.*"))
       .filter(col("trade_id").isNotNull)
 
+  /** How far event time may lag before [[dedupTrades]] evicts a key. */
+  private val DedupWatermark = "10 minutes"
+
   /** Keyed dedup with bounded state: watermark + dropDuplicatesWithinWatermark
     * keeps exactly-once table semantics while letting the state store evict
-    * keys older than the horizon (the reference's Postgres PK holds state
-    * forever — unbounded; `boundedState = false` reproduces that exactly).
+    * keys older than [[DedupWatermark]].
     */
-  def dedupTrades(parsed: DataFrame, watermark: String = "10 minutes",
-      boundedState: Boolean = true): DataFrame = {
-    val withWm = parsed.withWatermark("timestamp", watermark)
-    if (boundedState) withWm.dropDuplicatesWithinWatermark("trade_id")
-    else withWm.dropDuplicates("trade_id")
-  }
+  def dedupTrades(parsed: DataFrame): DataFrame =
+    parsed.withWatermark("timestamp", DedupWatermark)
+      .dropDuplicatesWithinWatermark("trade_id")
 
   /** Tumbling 1-minute aggregation (dashboard.py:236-243 as a stream):
     * per-window trade count + notional sum, update-incrementally instead of

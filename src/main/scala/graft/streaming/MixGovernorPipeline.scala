@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{CurationOps, TextOps}
+import graft.ops.{CurationOps, ScaleOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * flattening) and q131 (DoReMi loss-aware reweighting) over the persisted
   * stores: each crawl micro-batch folds its (source, token, count)
   * contraction into the token store, scores itself against the FROZEN
-  * reference bigram LM (seed with `SearchOps.writeBigramStoreStaged` —
+  * reference bigram LM (seed with `SearchOps.writeBigramStore` —
   * atomic even mid-crawl, a polled path is absent or fully written,
   * never footer-less; DoReMi's reference model is fixed by
   * construction, the proxy weights are what update), appends its
@@ -70,10 +70,10 @@ object MixGovernorPipeline {
     // followed by a non-path-word character (separator, quote, space).
     // '.' is NOT a boundary by itself: a '.'-joined continuation is a
     // sibling path unless it is (a) one of the store's OWN staged-swap
-    // artifacts (`.old` / `.merging` / `.compacting` — the exact suffixes
-    // ScaleOps.swapInto/compactStore create beside the live dir, the one
-    // family of dot-siblings that IS the store mid-swap) or (b) a
-    // sentence-ending period ("File /data/lm does not exist.").
+    // artifacts (the staging and parked suffixes ScaleOps's publish
+    // creates beside the live dir, the one family of dot-siblings that IS
+    // the store mid-swap) or (b) a sentence-ending period ("File /data/lm
+    // does not exist.").
     def boundedHit(m: String, needle: String): Boolean = {
       def wordChar(c: Char): Boolean =
         Character.isLetterOrDigit(c) || c == '_' || c == '-'
@@ -85,7 +85,8 @@ object MixGovernorPipeline {
           if (c == '.') p + 1 >= m.length || !wordChar(m.charAt(p + 1))
           else !wordChar(c)
         }
-      val swapSuffixes = Seq("old", "merging", "compacting")
+      val swapSuffixes = Seq(ScaleOps.ParkedSuffix, ScaleOps.StagingSuffix)
+        .map(_.stripPrefix("."))
       var from = m.indexOf(needle)
       while (from >= 0) {
         val end = from + needle.length
@@ -136,7 +137,7 @@ object MixGovernorPipeline {
       // model-less — zero partial rows, DoReMi columns stay null in
       // the report until the store is seeded. The batch's TOKEN
       // segment above still lands, so seeding later loses nothing.
-      // Seed a live path with writeBigramStoreStaged (absent →
+      // Seed a live path with writeBigramStore (absent →
       // fully written, never footer-less mid-job).
       // probe-then-read still has a window (a live re-seed's staged
       // swap can land between them) — if the LM read itself dies on

@@ -34,9 +34,9 @@ object VectorIngestPipeline {
     */
   def seedStore(embDf: DataFrame, codebook: Array[Array[Double]],
       storeDir: String): Unit = {
-    SimilarityOps.writePqStore(embDf, codebook,
+    SimilarityOps.writePqSegment(embDf, codebook,
       BatchDirs.segment(storeDir, BatchDirs.SeedId))
-    SimilarityOps.stampPqStoreRoot(embDf.sparkSession, storeDir, codebook)
+    SimilarityOps.writePqMeta(embDf.sparkSession, storeDir, codebook)
   }
 
   /** Row-level reject reason, null when the row is valid — the q110
@@ -68,7 +68,7 @@ object VectorIngestPipeline {
       // encoding generation (the hand-passed-array drift the scaladoc
       // warns about) must fail the stream loud — its codes would be
       // unsearchable alongside the existing segments
-      SimilarityOps.requirePqStoreRoot(batch.sparkSession, storeDir,
+      SimilarityOps.requirePqFingerprint(batch.sparkSession, storeDir,
         codebook, "runVectorIngest")
       val flagged = batch
         .withColumn("reject_reason", rejectReason(dim))
@@ -80,13 +80,13 @@ object VectorIngestPipeline {
       // segment write is an OVERWRITE of the batch's own dir — a replayed
       // attempt rewrites, never double-appends (the append-mode store
       // face would duplicate rows on retry)
-      SimilarityOps.writePqStore(
+      SimilarityOps.writePqSegment(
         flagged.filter(col("reject_reason").isNull)
           .select("vec_id", "label", "embedding"),
         codebook, BatchDirs.segment(storeDir, batchId))
       // (re)stamp the root fingerprint — idempotent one-row write, so
       // even a store bootstrapped by its first batch carries it
-      SimilarityOps.stampPqStoreRoot(batch.sparkSession, storeDir, codebook)
+      SimilarityOps.writePqMeta(batch.sparkSession, storeDir, codebook)
     }
   }
 
@@ -115,9 +115,9 @@ object VectorIngestPipeline {
     */
   def seedIvfPqStore(validDf: DataFrame, cells: Array[Array[Double]],
       residCb: Array[Array[Double]], storeDir: String): Unit = {
-    SimilarityOps.writeIvfPqStore(validDf, cells, residCb,
+    SimilarityOps.writeIvfPqSegment(validDf, cells, residCb,
       BatchDirs.segment(storeDir, BatchDirs.SeedId))
-    SimilarityOps.stampIvfPqStoreRoot(validDf.sparkSession, storeDir,
+    SimilarityOps.writeIvfPqMeta(validDf.sparkSession, storeDir,
       cells, residCb)
   }
 
@@ -137,7 +137,7 @@ object VectorIngestPipeline {
     val dim = cells.head.length
     BatchDirs.runKeyed(embStream, checkpointDir, trigger) { (batch, batchId) =>
       graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
-      SimilarityOps.requireIvfPqStoreRoot(batch.sparkSession,
+      SimilarityOps.requireIvfPqFingerprints(batch.sparkSession,
         storeDir, cells, residCb, "runIvfPqIngest")
       val flagged = batch
         .withColumn("reject_reason", rejectReason(dim))
@@ -148,12 +148,12 @@ object VectorIngestPipeline {
         .parquet(BatchDirs.segment(quarantineDir, batchId))
       // cast to the q151 valid-frame convention so streamed codes are
       // bit-identical to a batch encode of the same rows
-      SimilarityOps.writeIvfPqStore(
+      SimilarityOps.writeIvfPqSegment(
         flagged.filter(col("reject_reason").isNull)
           .select(col("vec_id"), col("label"),
             col("embedding").cast("array<double>").as("embedding")),
         cells, residCb, BatchDirs.segment(storeDir, batchId))
-      SimilarityOps.stampIvfPqStoreRoot(batch.sparkSession, storeDir,
+      SimilarityOps.writeIvfPqMeta(batch.sparkSession, storeDir,
         cells, residCb)
     }
   }

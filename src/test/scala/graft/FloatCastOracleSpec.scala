@@ -2,8 +2,8 @@ package graft
 
 import graft.ops.SimilarityOps
 
-/** The label-centroid oracle twins state Spark's float-to-decimal
-  * conversion. Spark casts a FLOAT element to DECIMAL through its exact
+/** The label-centroid oracle twins and the trainer replays state
+  * Spark's float-to-decimal conversion. Spark casts a FLOAT element to DECIMAL through its exact
   * binary value, i.e. through DOUBLE (0.8125188f → 0.8125187755); DuckDB's
   * direct FLOAT cast scales in single precision and keeps only the
   * float's leading digits (0.8125188f → 0.8125187584), so the two sides
@@ -18,6 +18,14 @@ class FloatCastOracleSpec extends SparkSpec {
     "q95_cluster_purity", "q123_ann_pq", "q126_cluster_cohesion",
     "q128_pq_distortion", "q135_ann_recall", "q136_embedding_drift",
     "q138_pq_recall")
+
+  /** The oracles replaying a Lloyd trainer (`pqTrainedCbCtes` for
+    * q140/q142, `ivfTrainedCbCtes` for the rest): each iteration's
+    * codeword mean sums the FLOAT embedding elements. */
+  private val trainerReplays = Seq("q140_ann_pq_trained",
+    "q142_pq_recall_trained", "q143_ann_ivf_trained",
+    "q144_ivf_recall_trained", "q151_ann_ivfpq", "q153_ivfpq_recall",
+    "q154_ivfpq_refined")
 
   /** Label 0's dim-1 mean: the exact binary values of -0.25151232f and
     * 0.5073033f average to 0.12789548935, rounding to 0.127895; DuckDB's
@@ -38,6 +46,16 @@ class FloatCastOracleSpec extends SparkSpec {
       val sql = SparkEntry.oracleSql(q)
       assert(sql.contains("CAST(CAST(embedding[s.i] AS DOUBLE)"), q)
       assert(!sql.contains("CAST(embedding[s.i] AS DECIMAL"), q)
+    }
+  }
+
+  test("the trainer-replay oracles cast each FLOAT element through " +
+      "DOUBLE") {
+    val direct = raw"CAST\(e\.embedding\[[^\]]*\]\s+AS DECIMAL".r
+    for (q <- trainerReplays) {
+      val sql = SparkEntry.oracleSql(q)
+      assert(sql.contains("CAST(CAST(e.embedding["), q)
+      assert(direct.findFirstIn(sql).isEmpty, q)
     }
   }
 

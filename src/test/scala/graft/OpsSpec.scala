@@ -823,7 +823,7 @@ class OpsSpec extends SparkSpec {
     val back = spark.read.parquet(dir)
     assert(back.count() === 10000)
     assert(back.agg(sum("id")).head().getLong(0) === 49995000L)
-    assert(!new java.io.File(dir + ".compacting").exists(),
+    assert(!new java.io.File(dir + ".merging").exists(),
       "staging dir must be swapped away")
     assert(!new java.io.File(dir + ".old").exists(),
       "parked original must be cleaned up after a successful swap")

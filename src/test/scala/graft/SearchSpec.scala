@@ -113,13 +113,13 @@ class SearchSpec extends SparkSpec {
       "over the live store swaps, no staging residue either way") {
     val path = tmpDir("bigram-staged") + "/bigrams"
     val c1 = Seq((1L, "a b"), (2L, "a c")).toDF("doc_id", "text")
-    SearchOps.writeBigramStoreStaged(c1, path) // first seed: path absent
+    SearchOps.writeBigramStore(c1, path) // first seed: path absent
     assert(SearchOps.lmPerplexityFromStore(c1, path).collect()
       .forall(_.getAs[Long]("n_oov") == 0L))
     assert(!new java.io.File(path + ".merging").exists)
     // re-seed over the LIVE store (a frozen-LM refresh between crawls)
     val c2 = Seq((3L, "x y"), (4L, "x z")).toDF("doc_id", "text")
-    SearchOps.writeBigramStoreStaged(c2, path)
+    SearchOps.writeBigramStore(c2, path)
     val scored = SearchOps.lmPerplexityFromStore(c2, path).collect()
     assert(scored.forall(_.getAs[Long]("n_oov") == 0L),
       "the swapped store must hold ONLY the new LM")

@@ -74,8 +74,7 @@ class SharedSessionSpec extends SparkSpec {
     assume(SourceLint.root.isDirectory, "spec must run from the repo root")
     val hits = SourceLint.hits(Seq("conf.set", "conf.unset"))
     val pinned = Map(
-      "Tables.scala" -> (4, "Tables.t's nanosAsLong set and " +
-        "boundedCollect's initialNumPartitions set / restore / unset"),
+      "Tables.scala" -> (1, "Tables.t's nanosAsLong set"),
       "Probe.scala" -> (1, "planaudit's AQE-off harness session"))
     val offenders = hits.filterNot(h => pinned.contains(h._1)).map(_._2)
     assert(offenders.isEmpty,

@@ -1,8 +1,8 @@
 package graft
 
 /** The `src/main` source walk behind the source-lint specs
-  * ([[BoundedCollectSpec]], [[SharedSessionSpec]]): every line of every
-  * `.scala` file that contains one of `patterns`, as
+  * ([[BoundedCollectSpec]], [[SharedSessionSpec]], [[StorePublishSpec]]):
+  * every line of every `.scala` file that contains one of `patterns`, as
   * (file name, "path:line: text"). Specs run from the repo root.
   */
 object SourceLint {
@@ -21,4 +21,12 @@ object SourceLint {
       }.toSeq
     }
   }
+
+  /** [[hits]] without comment lines (a `//`, block or scaladoc opener
+    * first). */
+  def codeHits(patterns: Seq[String]): Seq[(String, String)] =
+    hits(patterns).filterNot { case (_, h) =>
+      val text = h.split(": ", 2)(1).trim
+      text.startsWith("//") || text.startsWith("/*") || text.startsWith("*")
+    }
 }

@@ -944,7 +944,7 @@ class StreamingSpec extends SparkSpec {
       "DoReMi columns must be null, not a crashed stream")
     // seed the reference LM mid-crawl via the STAGED writer (the live
     // path must go absent → fully written, never footer-less mid-job)
-    graft.ops.SearchOps.writeBigramStoreStaged(
+    graft.ops.SearchOps.writeBigramStore(
       Seq((0L, "a b a"), (1L, "b c")).toDF("doc_id", "text"), lm)
     assert(!new java.io.File(lm + ".merging").exists)
     input.addData((2L, "web", "a b"))
@@ -1076,9 +1076,9 @@ class StreamingSpec extends SparkSpec {
       store))
     // '.'-joined DOT-SIBLINGS are siblings too (r12 ADVICE: '.' used to
     // qualify as a boundary, so /data/lm.bak classified as the store) —
-    // EXCEPT the store's own staged-swap artifacts (.old/.merging/
-    // .compacting), which ARE the store mid-swap, and a sentence-ending
-    // period, which is message punctuation rather than a path character
+    // EXCEPT the store's own staged-swap artifacts (.old/.merging), which
+    // ARE the store mid-swap, and a sentence-ending period, which is
+    // message punctuation rather than a path character
     assert(!isLmSwapWindow(fnf(s"$canon.bak/part-0.parquet not found"),
       store), "a .bak sibling is not the store")
     assert(!isLmSwapWindow(fnf(s"$canon.backup gone"), store))
