@@ -81,7 +81,7 @@ object Bench {
     val raw = SparkEntry.queries.map { case (name, fn) =>
       val times = (1 to 3).map { _ =>
         spark.sharedState.cacheManager.clearCache()
-        // r16: also drop the previous run's localCheckpoint blocks —
+        // r16: also drop the previous run's pinned blocks —
         // clearCache only covers CacheManager entries, and each
         // invocation builds fresh checkpoints anyway (no reuse to lose),
         // so this is outside the timer and changes no timing semantics.

@@ -29,7 +29,7 @@ object Smoke {
         println(f"$name%-28s FAILED: ${e.getMessage}")
         failed = true
       }
-      // r16: drop this query's localCheckpoint blocks before the next one
+      // r16: drop this query's pinned blocks before the next one
       Tables.releaseCheckpoints(spark)
     }
     spark.stop()

@@ -303,22 +303,67 @@ object Tables {
     rows
   }
 
-  /** Unpersist every RDD still registered with the context — the scoped
-    * release for the query faces' `localCheckpoint`ed intermediates
-    * (CurationOps/DedupOps/ScrubOps/ScaleOps/SimilarityOps). A face
-    * cannot unpersist its checkpoint before the caller consumes the
-    * returned frame, and `Dataset.unpersist` only uncaches CacheManager
-    * entries, not checkpoint blocks — so without this the blocks
-    * (corpus-sized for the IVF-PQ residual frames) accumulate for the
-    * life of the session. Harness loops call it at the points they
-    * already drop cross-iteration state (Bench beside clearCache,
-    * Verify/Smoke between queries); anything a query persists for its
-    * own lifetime is released try/finally before its face returns, so
-    * nothing live is registered when this runs.
+  /** RDD ids of the pins [[pin]] made on each thread. Ids, never RDD
+    * references: a pin nobody can reach any more stays collectable, so
+    * Spark's ContextCleaner still reclaims its blocks.
     */
-  def releaseCheckpoints(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+  private val pins =
+    ThreadLocal.withInitial[scala.collection.mutable.Set[Int]](
+      () => scala.collection.mutable.Set.empty[Int])
+
+  /** Materialize `df` once and cut its lineage — the one pin of every
+    * intermediate graft reuses (a frame read by several consumers, the
+    * state of an iterative loop). Eager: the pin job runs here. The pin
+    * is a reliable checkpoint when the SparkContext has a checkpoint dir
+    * (it survives executor loss, at the cost of a write to that dir),
+    * else a local one (executor-resident blocks). The caller's thread
+    * owns it until [[unpin]] or [[releaseCheckpoints]].
+    */
+  def pin(df: DataFrame): DataFrame = {
+    val p =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
+    pins.get ++= pinIds(p)
+    p
+  }
+
+  /** Ids of the checkpointed RDDs `df`'s plan reads. */
+  private def pinIds(df: DataFrame): Seq[Int] =
+    df.queryExecution.logical.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+
+  /** Release this thread's pins that `df` reads — for a loop that
+    * supersedes its own pin (`Dataset.unpersist` does not drop
+    * checkpoint blocks). Nothing may read them afterwards.
+    */
+  def unpin(df: DataFrame): Unit = {
+    val mine = pins.get
+    release(df.sparkSession, pinIds(df).filter(mine.remove))
+  }
+
+  /** Release every pin the calling thread made with [[pin]] — and
+    * nothing else: the caller's own caches and checkpoints, and another
+    * thread's pins, stay registered. A face cannot release its pins
+    * before the caller consumes the returned frame, so without this the
+    * blocks (corpus-sized for the IVF-PQ residual frames) accumulate for
+    * the life of the session. Harness loops call it at the points they
+    * already drop cross-iteration state (Bench beside clearCache,
+    * Verify/Smoke between queries), and the keyed streaming sink after
+    * every micro-batch body.
+    */
+  def releaseCheckpoints(spark: SparkSession): Unit = {
+    val mine = pins.get
+    release(spark, mine.toSeq)
+    mine.clear()
+  }
+
+  private def release(spark: SparkSession, ids: Seq[Int]): Unit =
+    if (ids.nonEmpty) {
+      val registered = spark.sparkContext.getPersistentRDDs
+      ids.flatMap(registered.get).foreach(_.unpersist(blocking = false))
+    }
 
   /** [[pathSnapshotKey]] of one testdata table under `dir`. */
   def tableSnapshotKey(dir: String, name: String): String =

@@ -39,7 +39,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // r16: drop this query's localCheckpoint blocks before the next one
+      // r16: drop this query's pinned blocks before the next one
       Tables.releaseCheckpoints(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

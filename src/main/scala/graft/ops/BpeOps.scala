@@ -84,14 +84,14 @@ object BpeOps {
     *
     * Cost model: one corpus pass (word freq), then per rule one vocab-table
     * aggregation plus a one-row collect — the corpus is never touched
-    * again. Vocab lineage is truncated each iteration (localCheckpoint) so
-    * plan depth stays constant across rules.
+    * again. Each iteration pins the vocab ([[Tables.pin]]) so plan depth
+    * stays constant across rules, and releases the vocab it supersedes;
+    * the call leaves no pin behind.
     */
   def bpeTrainOn(docsDf: DataFrame, merges: Int): DataFrame = {
     val spark = docsDf.sparkSession
-    var vocab = wordFreqOn(docsDf)
-      .select(chars(col("word")).as("syms"), col("freq"))
-      .localCheckpoint(true)
+    var vocab = Tables.pin(wordFreqOn(docsDf)
+      .select(chars(col("word")).as("syms"), col("freq")))
     val learned = Seq.newBuilder[(Int, String, String, String, Long)]
     var step = 0
     var exhausted = false
@@ -114,15 +114,14 @@ object BpeOps {
         val (l, r, cnt) =
           (row.getString(0), row.getString(1), row.getLong(2))
         learned += ((step + 1, l, r, l + r, cnt))
-        val next = vocab
-          .select(mergePair(col("syms"), l, r).as("syms"), col("freq"))
-          .localCheckpoint(true)
-        vocab.unpersist()
+        val next = Tables.pin(vocab
+          .select(mergePair(col("syms"), l, r).as("syms"), col("freq")))
+        Tables.unpin(vocab)
         vocab = next
         step += 1
       }
     }
-    vocab.unpersist()
+    Tables.unpin(vocab)
     import spark.implicits._
     learned.result()
       .toDF("step", "left", "right", "merged", "pair_count")

@@ -314,10 +314,9 @@ object CurationOps {
     // h-keyed bit_or) appears three times in the plan (sizes is joined
     // twice), deduped only if AQE happens to reuse the shuffle stages.
     // combos is tiny (one row per distinct source bitmask), so pin it
-    // once; blocks are swept by Tables.releaseCheckpoints at the harness
+    // once; Tables.releaseCheckpoints frees the blocks at the harness
     // loop points.
-    val combos = masks.groupBy("mask").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = true)
+    val combos = Tables.pin(masks.groupBy("mask").agg(count(lit(1)).as("cnt")))
     // bit i set → source index i (plan-time literals; S is known and tiny)
     val bitsArr = filter(
       array(sources.indices.map(i =>
@@ -530,12 +529,11 @@ object CurationOps {
   def dedupCanonicalOn(docsDf: DataFrame,
       stats: Option[CorpusStats] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // localCheckpoint (r15): the (doc_id, rep) frame is consumed THREE
-    // times below (membership join, score join, per-rep sizes) — without
-    // the truncation each consumer re-executes the clustering's
-    // post-checkpoint label-expansion join. Bounded: two longs per doc.
-    val clusters = DedupOps.dedupClustersOn(docsDf, stats = stats)
-      .localCheckpoint(eager = true)
+    // pin (r15): the (doc_id, rep) frame is consumed THREE times below
+    // (membership join, score join, per-rep sizes) — without the
+    // truncation each consumer re-executes the clustering's post-pin
+    // label-expansion join. Bounded: two longs per doc.
+    val clusters = Tables.pin(DedupOps.dedupClustersOn(docsDf, stats = stats))
     // score only cluster MEMBERS: the quality pass is the expensive leg
     // (regex + tokenization over text) and non-clustered docs — most of a
     // real corpus — never need a score here
@@ -994,14 +992,14 @@ object CurationOps {
       corpusNorms: DataFrame, refShingleKeys: DataFrame,
       evalNorms: DataFrame, pin: Boolean = false): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.expressions.Window
-    // pin = true (the streaming funnel): localCheckpoint each stage so
+    // pin = true (the streaming funnel): Tables.pin each stage so
     // the four sinks a micro-batch materializes (report union + keep +
     // two store folds) run every gate ONCE instead of re-executing the
-    // whole chain per consumer — the VectorIngestPipeline convention;
+    // whole chain per consumer — the MediaTriagePipeline convention;
     // bounded, the frames are micro-batch-sized. The batch face keeps
     // the pure declarative chain (one consumer, oracle-replayed plan).
     def staged(df: DataFrame): DataFrame =
-      if (pin) df.localCheckpoint(eager = true) else df
+      if (pin) Tables.pin(df) else df
     val d = staged(incoming
       .withColumn("norm", DedupOps.normText)
       // sizeOrNull, not raw size: a null-text doc must count NULL toks
@@ -1139,25 +1137,25 @@ object CurationOps {
     // sample, existing half ×2 reference contractions, eval sample) each
     // re-scanned the parquet — seven full text decodes per run in the
     // static plan, plus three separate normText passes. ONE scan computes
-    // the split flags and the norm per row and localCheckpoints; every
-    // side filters the in-memory blocks instead (blocks swept by
-    // Tables.releaseCheckpoints at the harness loop points, the q67
-    // convention). Row/flag semantics are identical — the filters are the
-    // same expressions, just evaluated once into columns.
+    // the split flags and the norm per row and pins them; every side
+    // filters the in-memory blocks instead (Tables.releaseCheckpoints
+    // frees them at the harness loop points, the q67 convention).
+    // Row/flag semantics are identical — the filters are the same
+    // expressions, just evaluated once into columns.
     val crawl2 = Tables.lcgBucket(col("doc_id"), 48271L, 23L, 100L) >= 80L
     // the synthetic-id shift must not overflow ANSI arithmetic: a
     // sentinel id near Long.MaxValue is simply never synthesized into a
     // re-fetch (both engines pin the same bound, so the fixture stays
     // replayable)
-    val base = docsDf.select(col("doc_id"), col("source"), col("text"))
+    val base = Tables.pin(docsDf
+      .select(col("doc_id"), col("source"), col("text"))
       .withColumn("_norm", DedupOps.normText)
       .withColumn("_crawl2", crawl2)
       .withColumn("_refetch",
         Tables.lcgBucket(col("doc_id"), 9301L, 11L, 100L) < 5L &&
           col("doc_id") <= lit(Long.MaxValue - 1000000000L))
       .withColumn("_eval",
-        Tables.lcgBucket(col("doc_id"), 9301L, 49297L, 100L) >= 90L)
-      .localCheckpoint(eager = true)
+        Tables.lcgBucket(col("doc_id"), 9301L, 49297L, 100L) >= 90L))
     val refetch = base.filter(col("_refetch"))
       .withColumn("doc_id", col("doc_id") + lit(1000000000L))
     val incoming = base.filter(col("_crawl2")).unionByName(refetch)

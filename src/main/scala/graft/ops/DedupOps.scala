@@ -273,13 +273,13 @@ object DedupOps {
     * one-giant-row-per-group-pair.
     */
   private def jaccardPairsMask(d: DataFrame, vocab: Array[String]): DataFrame = {
-    // localCheckpoint (r15): this one plan consumes md FIVE times (the
+    // pin (r15): this one plan consumes md FIVE times (the
     // group-edge contraction plus xs/ys on both the cross and same-mask
     // branches) — without truncation each consumer re-runs tokenize +
     // mask-encode (+ the q101 arm's contraction join upstream).
-    // dedupClustersOn already checkpoints its own mask frame for exactly
-    // this reason; the listing/decision path now matches it.
-    val md = maskedDocs(d, vocab).localCheckpoint(eager = true)
+    // dedupClustersOn already pins its own mask frame for exactly this
+    // reason; the listing/decision path now matches it.
+    val md = Tables.pin(maskedDocs(d, vocab))
     val edges = maskGroupEdges(maskGroups(md))
     val xs = md.select(col("lang").as("x_lang"), col("mask").as("x_mask"),
       col("doc_id").as("x_id"))
@@ -409,11 +409,8 @@ object DedupOps {
     * verify candidates with exact shingle Jaccard ≥ 0.8 behind a lossless
     * size-ratio band. No cross join anywhere.
     */
-  /** `docsDf` needs (doc_id, text). `reliable` selects the lineage-
-    * truncation mode for the reused signature table, exactly as in
-    * [[dedupClustersOn]]: executor-local blocks by default (local mode /
-    * harness), reliable checkpoints to the context's checkpoint dir when
-    * surviving executor loss matters (callers set the dir).
+  /** `docsDf` needs (doc_id, text). The reused signature table is pinned
+    * ([[Tables.pin]]).
     *
     * Density-GATED like [[jaccardPairsOn]] (same evidence ladder: stats →
     * capped count → floor probe): past `maxListedPairs` the call fails
@@ -424,13 +421,12 @@ object DedupOps {
     * the full listing, because exact duplicates share shingle sets and
     * therefore band keys.
     */
-  def minhashLshPairsOn(docsDf: DataFrame, reliable: Boolean = false,
-      fullPairs: Boolean = false,
+  def minhashLshPairsOn(docsDf: DataFrame, fullPairs: Boolean = false,
       maxListedPairs: Long = MaxListedPairs,
       stats: Option[CorpusStats] = None): DataFrame = {
     if (!fullPairs)
       requirePairFloorBelow(docsDf, maxListedPairs, stats, "minhashLshPairsOn")
-    minhashLshPairsList(docsDf, reliable).orderBy("a_id", "b_id")
+    minhashLshPairsList(docsDf).orderBy("a_id", "b_id")
   }
 
   /** First-match-band LSH candidate pairs (a_id < b_id) from a
@@ -452,9 +448,8 @@ object DedupOps {
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
   }
 
-  private def minhashLshPairsList(docsDf: DataFrame,
-      reliable: Boolean): DataFrame = {
-    val sigs = truncateLineage(signatures(docsDf), reliable)
+  private def minhashLshPairsList(docsDf: DataFrame): DataFrame = {
+    val sigs = Tables.pin(signatures(docsDf))
     val cands = lshCandidates(sigs)
     val sa = sigs.select(col("doc_id").as("a_id"), col("shs").as("a_sh"),
       size(col("shs")).as("a_n"))
@@ -634,9 +629,8 @@ object DedupOps {
     * in the join condition, so the verification happens inside the join and
     * no distinct() shuffle over candidates is needed.
     */
-  /** `docsDf` needs (doc_id, lang, text). `reliable` as in
-    * [[minhashLshPairsOn]]: local checkpoint blocks vs reliable
-    * checkpoints for the reused simhash table.
+  /** `docsDf` needs (doc_id, lang, text). The reused simhash table is
+    * pinned ([[Tables.pin]]).
     *
     * Density-GATED like [[jaccardPairsOn]]/[[minhashLshPairsOn]] (same
     * evidence ladder): past `maxListedPairs` the call fails fast naming
@@ -646,18 +640,16 @@ object DedupOps {
     * (Hamming 0, same chunks), so contracting exact duplicates before
     * mining preserves the component structure exactly.
     */
-  def simhashPairsOn(docsDf: DataFrame, reliable: Boolean = false,
-      fullPairs: Boolean = false,
+  def simhashPairsOn(docsDf: DataFrame, fullPairs: Boolean = false,
       maxListedPairs: Long = MaxListedPairs,
       stats: Option[CorpusStats] = None): DataFrame = {
     if (!fullPairs)
       requirePairFloorBelow(docsDf, maxListedPairs, stats, "simhashPairsOn")
-    simhashPairsList(docsDf, reliable).orderBy("a_id", "b_id")
+    simhashPairsList(docsDf).orderBy("a_id", "b_id")
   }
 
-  private def simhashPairsList(docsDf: DataFrame,
-      reliable: Boolean): DataFrame = {
-    val sh = truncateLineage(simhashed(docsDf), reliable)
+  private def simhashPairsList(docsDf: DataFrame): DataFrame = {
+    val sh = Tables.pin(simhashed(docsDf))
     val chunked = HammingBands.chunked(sh, "doc_id", "simhash")
     HammingBands.pairs(chunked, chunked, "simhash", HammingBands.MaxHamming,
         col("x.doc_id") < col("y.doc_id"))
@@ -696,23 +688,20 @@ object DedupOps {
     * force-merge — the 872a352 invariant); minhash/simhash mine over raw
     * text alone and use the raw-text key.
     */
-  def dedupDecision(docsDf: DataFrame, method: String = "jaccard",
-      reliable: Boolean = false): DataFrame = method match {
+  def dedupDecision(docsDf: DataFrame,
+      method: String = "jaccard"): DataFrame = method match {
     case "jaccard" =>
       contractedClusters(docsDf, dd => {
         val (d, vocab) = tokenizedDocs(dd)
         (if (vocab.length <= 64) jaccardPairsMask(d, vocab)
          else jaccardPairsPrefix(d)).select(col("a_id"), col("b_id"))
-      }, reliable, groupKey = jaccardGroupKey)
+      }, groupKey = jaccardGroupKey)
     case "minhash" =>
       contractedClusters(docsDf,
-        dd => minhashLshPairsList(dd, reliable).select(
-          col("a_id"), col("b_id")),
-        reliable)
+        dd => minhashLshPairsList(dd).select(col("a_id"), col("b_id")))
     case "simhash" =>
       contractedClusters(docsDf,
-        dd => simhashPairsList(dd, reliable).select(col("a_id"), col("b_id")),
-        reliable)
+        dd => simhashPairsList(dd).select(col("a_id"), col("b_id")))
     case "edit" =>
       contractedClusters(docsDf, dd => {
         val d0 =
@@ -721,7 +710,7 @@ object DedupOps {
         editPairsList(d0, maxDist = 10, band = 16,
             screen = maxBandSizeExceeds(d0, band = 16, maxBandRows = 4096))
           .select(col("a_id"), col("b_id"))
-      }, reliable)
+      })
     case "winnow" =>
       // edges = rep pairs sharing ≥ WinnowMinShared df-pruned winnowing
       // fingerprints (the q121 miner, un-cut) — local-edit-robust
@@ -730,8 +719,7 @@ object DedupOps {
       // every arm, so the fp-keyed join's ≤ maxDf² per-key bound is the
       // only pair volume
       contractedClusters(docsDf,
-        dd => TextOps.winnowEdgesOn(dd).select(col("a_id"), col("b_id")),
-        reliable)
+        dd => TextOps.winnowEdgesOn(dd).select(col("a_id"), col("b_id")))
     case other => throw new IllegalArgumentException(
       s"dedupDecision: unknown method '$other' " +
         "(expected jaccard | minhash | simhash | edit | winnow)")
@@ -789,23 +777,20 @@ object DedupOps {
         .otherwise(nullSafeTextKey))
 
   private def contractedClusters(docsDf: DataFrame,
-      minePairs: DataFrame => DataFrame, reliable: Boolean,
+      minePairs: DataFrame => DataFrame,
       groupKey: Column = nullSafeTextKey): DataFrame = {
     val withKey = docsDf.withColumn("__nh", groupKey)
-    val groups = truncateLineage(
-      withKey.groupBy(col("__nh")).agg(min(col("doc_id")).as("rep_id")),
-      reliable)
+    val groups = Tables.pin(
+      withKey.groupBy(col("__nh")).agg(min(col("doc_id")).as("rep_id")))
     val reps = docsDf.join(groups.select(col("rep_id").as("doc_id")),
       Seq("doc_id"))
-    // truncate the mined edge set ONCE, before the probe: the probe and
-    // the past-cap CC loop both consume it, and without the checkpoint
+    // pin the mined edge set ONCE, before the probe: the probe and
+    // the past-cap CC loop both consume it, and without the pin
     // the most expensive path (past DriverCcMaxEdges) would re-execute
     // the entire mining — candidate join plus verification — a second
     // time for the bidirectional frame
-    val edges = truncateLineage(
-      minePairs(reps)
-        .select(col("a_id").as("src"), col("b_id").as("dst")),
-      reliable)
+    val edges = Tables.pin(minePairs(reps)
+      .select(col("a_id").as("src"), col("b_id").as("dst")))
     val members = withKey.join(groups, Seq("__nh"))
     // One probe job fetches the mined rep-pair edge set up to the driver
     // cap. Zero edges (every rep its own component — the common case on a
@@ -813,7 +798,7 @@ object DedupOps {
     // final label, no CC at all. Within the cap: driver union-find +
     // broadcast label join — no iterative loop, no data-sized identity
     // join. Past the cap: the distributed pointer-jumping loop over the
-    // checkpointed edge frame, the 100 TB arm.
+    // pinned edge frame, the 100 TB arm.
     val (srcs, dsts) = edgesUpToCap(edges)
     val out =
       if (srcs.isEmpty)
@@ -827,14 +812,14 @@ object DedupOps {
       else {
         // past the cap: go straight to the distributed loop — calling
         // connectedComponents here would re-run the cap probe (a second
-        // multi-million-row driver job) and re-checkpoint an already
-        // truncated frame, both on precisely the most expensive path
+        // multi-million-row driver job) and re-pin an already pinned
+        // frame, both on precisely the most expensive path
         val nodes = groups.select(col("rep_id").as("id"))
-        // edges is already checkpointed — the union reads its blocks, no
-        // re-mining and no second checkpoint of the same data
+        // edges is already pinned — the union reads its blocks, no
+        // re-mining and no second pin of the same data
         val bidir = edges.union(
           edges.select(col("dst").as("src"), col("src").as("dst")))
-        val cc = connectedComponentsLoop(nodes, bidir, reliable)
+        val cc = connectedComponentsLoop(nodes, bidir)
         members
           .join(cc.select(col("id").as("rep_id"), col("rep")), Seq("rep_id"))
           .select(col("doc_id"), col("rep"))
@@ -855,24 +840,15 @@ object DedupOps {
     * this is how components are computed at 100 TB, no driver-side graph).
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    dedupClusters(s, dir, None)
-
-  def dedupClusters(s: SparkSession, dir: String,
-      checkpointDir: Option[String]): DataFrame = {
-    checkpointDir.foreach(s.sparkContext.setCheckpointDir)
     // catalog binding shares the per-directory memoized stats: the dense-
     // branch gate reads a cached single row instead of probing the corpus
-    dedupClustersOn(docs(s, dir), reliable = checkpointDir.isDefined,
-      stats = Some(CorpusStats.forDir(s, dir)))
-  }
+    dedupClustersOn(docs(s, dir), stats = Some(CorpusStats.forDir(s, dir)))
 
-  /** `docsDf` needs (doc_id, lang, text). `reliable` selects the
-    * lineage-truncation mode for the iterative CC rounds: `false` (default)
-    * uses executor-local checkpoint blocks — fastest, right for local mode
-    * and the harness, but a lost executor kills the job; `true` writes
-    * reliable checkpoints to the SparkContext's checkpoint dir (callers set
-    * it), the 100 TB production mode where surviving executor loss matters
-    * more than the write cost.
+  /** `docsDf` needs (doc_id, lang, text). The reused frames and the
+    * iterative CC rounds are pinned ([[Tables.pin]]): executor-local
+    * blocks, or reliable checkpoints — the 100 TB production mode, where
+    * surviving executor loss matters more than the write cost — when the
+    * SparkContext has a checkpoint dir.
     *
     * `stats`: optional pre-computed [[CorpusStats]] for the general-vocab
     * dense-branch gate (same evidence ladder as [[jaccardPairsOn]]:
@@ -880,7 +856,6 @@ object DedupOps {
     * pays a per-call probe job.
     */
   def dedupClustersOn(docsDf: DataFrame,
-      reliable: Boolean = false,
       stats: Option[CorpusStats] = None): DataFrame = {
     val (d, vocab) = tokenizedDocs(docsDf)
     if (vocab.length <= 64) {
@@ -891,18 +866,16 @@ object DedupOps {
       // expanded doc-pair graph; labels then expand to members through a
       // (lang, mask) join against the per-doc frame — bounded row width,
       // no membership arrays (see maskGroups).
-      val md = truncateLineage(maskedDocs(d, vocab), reliable)
+      val md = Tables.pin(maskedDocs(d, vocab))
       val groups = maskGroups(md)
-      val ge = truncateLineage(
-        maskGroupEdges(groups)
-          .select(col("a_mask"), col("b_mask"),
-            col("a_rep").as("a0"), col("b_rep").as("b0")),
-        reliable)
+      val ge = Tables.pin(maskGroupEdges(groups)
+        .select(col("a_mask"), col("b_mask"),
+          col("a_rep").as("a0"), col("b_rep").as("b0")))
       val nodes = ge.select(col("a0").as("id"))
         .union(ge.select(col("b0").as("id"))).distinct()
       val edgesU = ge.filter(col("a_mask") < col("b_mask"))
         .select(col("a0").as("src"), col("b0").as("dst"))
-      val cc = connectedComponents(nodes, edgesU, reliable)
+      val cc = connectedComponents(nodes, edgesU)
       md.join(groups.select(col("lang"), col("mask"), col("rep").as("id")),
           Seq("lang", "mask"))
         .join(cc, "id")
@@ -929,7 +902,6 @@ object DedupOps {
         // job) would run only to be discarded
         dd => jaccardPairsPrefix(tokenizedFrame(dd))
           .select(col("a_id"), col("b_id")),
-        reliable,
         groupKey = jaccardGroupKey)
       val paired = all.groupBy("rep").agg(count(lit(1)).as("_cn"))
         .filter(col("_cn") >= 2).select("rep")
@@ -937,22 +909,16 @@ object DedupOps {
         .select(col("doc_id"), col("rep"))
         .orderBy("doc_id")
     } else {
-      val pairs = truncateLineage(
-        jaccardPairsPrefix(d).select(col("a_id"), col("b_id")), reliable)
+      val pairs =
+        Tables.pin(jaccardPairsPrefix(d).select(col("a_id"), col("b_id")))
       val nodes = pairs.select(col("a_id").as("id"))
         .union(pairs.select(col("b_id").as("id"))).distinct()
       connectedComponents(nodes,
-        pairs.select(col("a_id").as("src"), col("b_id").as("dst")), reliable)
+        pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
         .select(col("id").as("doc_id"), col("rep"))
         .orderBy("doc_id")
     }
   }
-
-  /** Truncate a plan's lineage: executor-local blocks (fast, volatile) or a
-    * reliable checkpoint to the context's checkpoint dir.
-    */
-  private def truncateLineage(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
 
   /** Connected components over an undirected edge list — public library
     * operator (callers supply `nodes(id)` and `undirected(src, dst)`).
@@ -960,10 +926,9 @@ object DedupOps {
     * squares the propagation distance — O(log d) rounds instead of
     * O(diameter); a 200-node path converges well inside the cap, asserted
     * in DedupSpec), lineage truncated per round (without it the nested
-    * logical plan makes analysis dwarf execution) — executor-local blocks
-    * by default, reliable DFS checkpoints when `reliable` (see
-    * [[dedupClusters]]; callers must have set a checkpoint dir). Returns
-    * (id, rep) for every node, rep = component minimum.
+    * logical plan makes analysis dwarf execution; each round's pin is
+    * released once the next supersedes it). Returns (id, rep) for every
+    * node, rep = component minimum.
     */
   /** Undirected-edge-row cap for the driver union-find arm: 4M rows ≈
     * 64 MB of long pairs — a bounded metadata hop in the fingerprint-store
@@ -1078,7 +1043,7 @@ object DedupOps {
     * stays distributed in both arms.
     */
   def connectedComponents(nodes: DataFrame,
-      undirected: DataFrame, reliable: Boolean = false): DataFrame = {
+      undirected: DataFrame): DataFrame = {
     val (srcs, dsts) = edgesUpToCap(undirected)
     if (srcs.isEmpty)
       nodes.select(col("id"), col("id").as("rep"))
@@ -1087,11 +1052,9 @@ object DedupOps {
           Seq("id"), "left")
         .select(col("id"), coalesce(col("_uf_rep"), col("id")).as("rep"))
     else {
-      val edges = truncateLineage(
-        undirected.union(
-          undirected.select(col("dst").as("src"), col("src").as("dst"))),
-        reliable)
-      connectedComponentsLoop(nodes, edges, reliable)
+      val edges = Tables.pin(undirected.union(
+        undirected.select(col("dst").as("src"), col("src").as("dst"))))
+      connectedComponentsLoop(nodes, edges)
     }
   }
 
@@ -1099,15 +1062,13 @@ object DedupOps {
     * an ALREADY bidirectional, lineage-truncated edge frame.
     */
   private[graft] def connectedComponentsLoop(nodes: DataFrame,
-      edges: DataFrame, reliable: Boolean = false): DataFrame = {
+      edges: DataFrame): DataFrame = {
     // round 0 fused into initialization: label = min(self, neighbors)
-    var labels = truncateLineage(
-      nodes
-        .join(edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("mn")),
-          Seq("id"), "left")
-        .select(col("id"), least(col("id"), coalesce(col("mn"), col("id")))
-          .as("rep")),
-      reliable)
+    var labels = Tables.pin(nodes
+      .join(edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("mn")),
+        Seq("id"), "left")
+      .select(col("id"), least(col("id"), coalesce(col("mn"), col("id")))
+        .as("rep")))
     var converged = false
     var rounds = 0
     while (!converged && rounds < 40) {
@@ -1118,16 +1079,15 @@ object DedupOps {
       val prop = labels.join(viaNeighbors, Seq("id"), "left")
         .select(col("id"), col("rep").as("old"),
           least(col("rep"), coalesce(col("n_rep"), col("rep"))).as("rep"))
-      val next = truncateLineage(
-        prop
-          .join(prop.select(col("id").as("rep"), col("rep").as("rep2")),
-            Seq("rep"))
-          .select(col("id"), least(col("rep"), col("rep2")).as("rep"),
-            col("old")),
-        reliable)
-      // change flag carried through the round: convergence reads
-      // checkpointed data, no extra join against the previous labels
+      val next = Tables.pin(prop
+        .join(prop.select(col("id").as("rep"), col("rep").as("rep2")),
+          Seq("rep"))
+        .select(col("id"), least(col("rep"), col("rep2")).as("rep"),
+          col("old")))
+      // change flag carried through the round: convergence reads pinned
+      // data, no extra join against the previous labels
       converged = next.filter(col("rep") < col("old")).isEmpty
+      Tables.unpin(labels)
       labels = next.select("id", "rep")
       rounds += 1
     }

@@ -379,7 +379,7 @@ object ScaleOps {
     // within-partition record number in the lower 33 — assigned along the
     // sortWithinPartitions order.
     //
-    // The localCheckpoint is a CORRECTNESS precondition, not a tuning
+    // The pin (Tables.pin) is a CORRECTNESS precondition, not a tuning
     // knob: the ranked branch and the per-pid count branch below must
     // observe the SAME physical range partitioning. RangePartitioner
     // samples its boundaries with an execution-specific (rdd.id-derived)
@@ -389,28 +389,16 @@ object ScaleOps {
     // corrupting every rank. Materializing the ranged frame once pins one
     // set of boundaries for both consumers regardless of whether
     // ReuseExchange fires (spark.sql.exchange.reuse=false, AQE planning
-    // divergence, future plan edits breaking canonical equality).
-    //
-    // Pin mechanism: RELIABLE checkpoint when the session has a
-    // checkpoint dir configured (blocks survive executor loss — the
-    // spot/preemptible-fleet regime a 100 TB rank runs in), else
-    // localCheckpoint (executor-resident blocks: any executor loss after
-    // the pin fails the job instead of recomputing — fine on a stable
-    // cluster or local mode, and the only option without a checkpoint
-    // dir). Both pin identical boundaries; the trade is purely
-    // fault-tolerance vs. an extra write to reliable storage.
-    val ranged0 = df.repartitionByRange(sort: _*)
-    val ranged =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        ranged0.checkpoint(true)
-      else ranged0.localCheckpoint(true)
+    // divergence, future plan edits breaking canonical equality); a
+    // reliable and a local pin fix the same boundaries.
+    val ranged = graft.Tables.pin(df.repartitionByRange(sort: _*))
     val ranked = ranged
       .sortWithinPartitions(sort: _*)
       .withColumn("_mid", monotonically_increasing_id())
       .withColumn("_pid", shiftright(col("_mid"), 33).cast("int"))
       .withColumn("_rn",
         col("_mid").bitwiseAND(lit((1L << 33) - 1)) + lit(1L))
-    // per-partition counts off the UNSORTED checkpointed blocks (shared
+    // per-partition counts off the UNSORTED pinned blocks (shared
     // with the ranked branch by construction; a count doesn't need the
     // local sort, and aggregating above sortWithinPartitions would
     // re-sort the whole input a second time)

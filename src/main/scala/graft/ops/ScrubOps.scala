@@ -283,7 +283,7 @@ object ScrubOps {
     * a silently wrong t.
     *
     * Scale: ONE corpus pass (the (class, band) contraction, map-side
-    * partial), localCheckpointed so the three bounded consumers —
+    * partial), pinned ([[Tables.pin]]) so the three bounded consumers —
     * class totals, type distribution, the class×band grid — share the
     * scan instead of re-reading events; everything after is bounded by
     * |classes|·|bands| (≤ types·k-values·24 classes; bands bound by the
@@ -300,10 +300,9 @@ object ScrubOps {
   def tcloseAuditOn(eventsDf: DataFrame, t: Double): DataFrame = {
     // the one corpus pass: per-(class, band) counts, null bands kept as
     // their own rows (n_events cargo, excluded from the distributions)
-    val cb0 = quasiClasses(eventsDf)
+    val cb0 = Tables.pin(quasiClasses(eventsDf)
       .groupBy("event_type", "k_prop", "hod", "sens_band")
-      .agg(count(lit(1)).as("a"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("a")))
     val cls = cb0.groupBy("event_type", "k_prop", "hod")
       .agg(sum("a").as("n_events"),
         sum(when(col("sens_band").isNotNull, col("a")).otherwise(0L))
@@ -527,17 +526,16 @@ object ScrubOps {
     * sketches can't serve an EMD: distinct-count structure carries no
     * mass, so the histogram is the feasible store form — exact, not an
     * estimate). One [[mergedKanonSketches]] merge feeds both the class
-    * totals and the band rows, localCheckpointed so the store is read
+    * totals and the band rows, pinned ([[Tables.pin]]) so the store is read
     * once (the q145 exact path's shared-scan discipline). Replay caveat:
     * band counts, like `n_events`, double on a replayed append — admit
     * batches exactly once, or compact.
     */
   private[graft] def tcloseAuditFromClasses(perBatch: DataFrame,
       t: Double): DataFrame = {
-    val merged = mergedKanonSketches(perBatch)
+    val merged = Tables.pin(mergedKanonSketches(perBatch)
       .select(col("event_type"), col("k_prop"), col("hod"),
-        col("band_counts"), col("n_events"))
-      .localCheckpoint()
+        col("band_counts"), col("n_events")))
     val cls = merged.select(col("event_type"), col("k_prop"), col("hod"),
       col("n_events"),
       aggregate(map_values(col("band_counts")), lit(0L), _ + _)

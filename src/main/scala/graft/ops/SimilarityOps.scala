@@ -1319,14 +1319,13 @@ object SimilarityOps {
     // r16 (guide §5): e feeds the train side, the held side, the held
     // counts AND the final train rollup — four executions of the
     // scan+split+norm+size-gate subtree in the static plan (six parquet
-    // scans). Pin it once; blocks are swept by Tables.releaseCheckpoints
+    // scans). Pin it once; Tables.releaseCheckpoints frees the blocks
     // at the harness loop points (the q67/q149 convention).
-    val e = withSubBucket(
+    val e = Tables.pin(withSubBucket(
       embDf.select(col("vec_id"), col("label"), col("embedding"))
         .withColumn("is_train", splitIsTrain)
         .withColumn("nrm", norm(col("embedding"))),
-      maxExactBlock, exact)
-      .localCheckpoint(eager = true)
+      maxExactBlock, exact))
     val t = e.filter(col("is_train"))
       .select(col("vec_id"), col("label"), col("_sub"),
         col("embedding").as("t_emb"), col("nrm").as("t_nrm"))
@@ -1947,7 +1946,7 @@ object SimilarityOps {
 
   /** The Lloyd loop of [[pqTrainedCodebook]] over an ALREADY-materialized
     * valid (vec_id, embedding: array&lt;double&gt;) frame — the trained
-    * IVF-PQ faces feed it their localCheckpointed residual frame (r15),
+    * IVF-PQ faces feed it their pinned residual frame (r15),
     * which already serves the encode and the search, instead of paying
     * the trainer's own persist of a second copy.
     */
@@ -2117,13 +2116,13 @@ object SimilarityOps {
   def annIvfPqTrained(s: SparkSession, dir: String): DataFrame = {
     val valid = validLabeled(emb(s, dir))
     val cells = kmeansCentroids(valid, IvfTrainK, IvfTrainIters)
-    // r15: ONE materialized residual frame (localCheckpoint — scoped to
-    // this call's lineage, reclaimed with it, never the session cache)
+    // r15: ONE materialized residual frame (a Tables.pin, never the
+    // session cache)
     // feeds the residual trainer's 6 bounded iterations AND the index
     // encode; before, the trainer pinned its own copy and the search
     // re-derived residuals from parquet with a second full
     // coarse-assignment pass.
-    val resid = residualsWith(valid, cells).localCheckpoint(eager = true)
+    val resid = Tables.pin(residualsWith(valid, cells))
     annIvfPqSearchOn(resid, cells, pqResidualCodebookOn(resid),
       queryId = 0L, k = 10, nProbe = IvfPqNProbe)
   }
@@ -2139,7 +2138,7 @@ object SimilarityOps {
   private def residualsWith(validDf: DataFrame,
       cells: Array[Array[Double]]): DataFrame = {
     val cellsLit = typedLit(cells.map(_.toSeq).toSeq)
-    // embedding rides along (r15): the trained faces localCheckpoint this
+    // embedding rides along (r15): the trained faces pin this
     // frame once and serve the query-vector lookup, the recall sweep's
     // exact arm and the refine stage from it — consumers that don't need
     // it prune the column at plan time, so the inline (*With) paths pay
@@ -2167,7 +2166,7 @@ object SimilarityOps {
       k, iters)
 
   /** [[pqResidualCodebook]] over an ALREADY-materialized residual frame
-    * (the trained faces' localCheckpoint) — skips the trainer's own
+    * (the trained faces' pin) — skips the trainer's own
     * persist and its validity re-filter: residuals of [[validLabeled]]
     * vectors are non-null full-dim doubles by construction (zip_with of
     * two non-null double arrays), so the filter passes every row and the
@@ -2195,7 +2194,7 @@ object SimilarityOps {
   }
 
   /** The IVF-PQ search over an already-built residual frame
-    * ([[residualsWith]] inline, or the trained faces' localCheckpoint of
+    * ([[residualsWith]] inline, or the trained faces' pin of
     * it). The probe ring and the per-probed-cell ADC lookup tables are
     * the [[annIvfPqFromStore]] driver arithmetic ([[probeRingLocal]] /
     * [[adcLutsLocal]] — bit-identical to the former expression path; the
@@ -2264,9 +2263,9 @@ object SimilarityOps {
   def annIvfPqRecall(s: SparkSession, dir: String): DataFrame = {
     val valid = validLabeled(emb(s, dir))
     val cells = kmeansCentroids(valid, IvfTrainK, IvfTrainIters)
-    // r15: one localCheckpointed residual frame serves trainer, sweep
-    // census, probe collect and exact arm (the annIvfPqTrained shape)
-    val resid = residualsWith(valid, cells).localCheckpoint(eager = true)
+    // r15: one pinned residual frame serves trainer, sweep census,
+    // probe collect and exact arm (the annIvfPqTrained shape)
+    val resid = Tables.pin(residualsWith(valid, cells))
     annIvfPqRecallOn(resid, cells, pqResidualCodebookOn(resid),
       RecallK, RecallProbes, RecallMaxProbe)
   }
@@ -2407,10 +2406,10 @@ object SimilarityOps {
   def annIvfPqRefined(s: SparkSession, dir: String): DataFrame = {
     val valid = validLabeled(emb(s, dir))
     val cells = kmeansCentroids(valid, IvfTrainK, IvfTrainIters)
-    // r15: one localCheckpointed residual frame serves trainer, stage-1
-    // codes scan AND the stage-2 full-vector refine (it carries the raw
-    // embedding) — before, stage 2 re-read parquet
-    val resid = residualsWith(valid, cells).localCheckpoint(eager = true)
+    // r15: one pinned residual frame serves trainer, stage-1 codes scan
+    // AND the stage-2 full-vector refine (it carries the raw embedding)
+    // — before, stage 2 re-read parquet
+    val resid = Tables.pin(residualsWith(valid, cells))
     annIvfPqRefinedOn(resid, cells, pqResidualCodebookOn(resid),
       0L, 10, IvfPqNProbe, IvfPqRefine)
   }
@@ -2586,15 +2585,13 @@ object SimilarityOps {
       Seq("cell"), writeIvfPqMeta(validDf.sparkSession, _, cells, residCb))
 
   /** One keyed segment of the streaming IVF-PQ layout, written in place
-    * (the segment overwrite is the replay contract) and stamped like a
-    * whole store. */
+    * (the segment overwrite is the replay contract). Unstamped: the
+    * fingerprints live at the keyed store's root ([[writeIvfPqMeta]]). */
   private[graft] def writeIvfPqSegment(validDf: DataFrame,
       cells: Array[Array[Double]], residCb: Array[Array[Double]],
-      dir: String): Unit = {
+      dir: String): Unit =
     ivfPqEncoded(validDf, cells, residCb)
       .write.partitionBy("cell").mode("overwrite").parquet(dir)
-    writeIvfPqMeta(validDf.sparkSession, dir, cells, residCb)
-  }
 
   /** Fold a new batch into the index (admit exactly once, the
     * [[appendToPqStore]] contract); refuses drifted artifacts loud.
@@ -2937,13 +2934,11 @@ object SimilarityOps {
       stamp = writePqMeta(embDf.sparkSession, _, codebook))
 
   /** One keyed segment of the streaming PQ layout, written in place (the
-    * segment overwrite is the replay contract) and stamped like a whole
-    * store. */
+    * segment overwrite is the replay contract). Unstamped: the fingerprint
+    * lives at the keyed store's root ([[writePqMeta]]). */
   private[graft] def writePqSegment(embDf: DataFrame,
-      codebook: Array[Array[Double]], dir: String): Unit = {
+      codebook: Array[Array[Double]], dir: String): Unit =
     pqEncoded(embDf, codebook).write.mode("overwrite").parquet(dir)
-    writePqMeta(embDf.sparkSession, dir, codebook)
-  }
 
   /** Fold a new batch of vectors into the index (same admit-exactly-once
     * contract as every append store). Refuses a codebook that isn't the

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -50,8 +51,10 @@ private[graft] object BatchDirs {
     *  - The batch is persisted for the call, so the emptiness probe and
     *    every write in `body` share one evaluation of the upstream plan
     *    (and of the source read), and unpersisted when `body` returns or
-    *    throws. The per-batch job sequence is persist → isEmpty → the
-    *    body's own jobs, nothing after them.
+    *    throws, together with every pin `body` made
+    *    ([[graft.Tables.releaseCheckpoints]]): a stream's pinned blocks
+    *    end with their batch. The per-batch job sequence is persist →
+    *    isEmpty → the body's own jobs, nothing after them.
     */
   def runKeyed(stream: DataFrame, checkpointDir: String, trigger: Trigger)(
       body: (DataFrame, Long) => Unit): StreamingQuery =
@@ -62,7 +65,7 @@ private[graft] object BatchDirs {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
         try { if (!b.isEmpty) body(b, batchId) }
-        finally { b.unpersist(); () }
+        finally { b.unpersist(); Tables.releaseCheckpoints(b.sparkSession) }
       }
       .start()
 

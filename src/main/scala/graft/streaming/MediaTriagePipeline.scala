@@ -53,8 +53,7 @@ object MediaTriagePipeline {
       // hash once; the same frame feeds both screens and the store
       // append (empty payloads hash to nothing — they surface in the
       // quarantine routing below with reason "unhashable")
-      val hashed = MultimodalOps.mediaPhashOn(batch)
-        .localCheckpoint(eager = true)
+      val hashed = graft.Tables.pin(MultimodalOps.mediaPhashOn(batch))
       // REPLAY SAFETY: a crashed attempt may have committed this
       // batch's own store segment already — screening against it
       // would self-match every previously-admitted doc and silently
@@ -91,8 +90,8 @@ object MediaTriagePipeline {
         .select(col("y.doc_id").as("doc_id"))
       // one materialization feeds all three routing writes (and
       // breaks the read-storeDir-then-overwrite-a-segment cycle)
-      val dupIds = storeDups.unionByName(batchDups).distinct()
-        .localCheckpoint(eager = true)
+      val dupIds =
+        graft.Tables.pin(storeDups.unionByName(batchDups).distinct())
       // quarantine carries its reason (the VectorIngestPipeline
       // reject_reason convention): near-dups of the index or of a
       // lower-id batchmate as "duplicate", zero-length payloads —

@@ -70,9 +70,7 @@ object VectorIngestPipeline {
       // unsearchable alongside the existing segments
       SimilarityOps.requirePqFingerprint(batch.sparkSession, storeDir,
         codebook, "runVectorIngest")
-      val flagged = batch
-        .withColumn("reject_reason", rejectReason(dim))
-        .localCheckpoint(eager = true)
+      val flagged = batch.withColumn("reject_reason", rejectReason(dim))
       flagged.filter(col("reject_reason").isNotNull)
         .select("vec_id", "label", "reject_reason")
         .write.mode("overwrite")
@@ -139,9 +137,7 @@ object VectorIngestPipeline {
       graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
       SimilarityOps.requireIvfPqFingerprints(batch.sparkSession,
         storeDir, cells, residCb, "runIvfPqIngest")
-      val flagged = batch
-        .withColumn("reject_reason", rejectReason(dim))
-        .localCheckpoint(eager = true)
+      val flagged = batch.withColumn("reject_reason", rejectReason(dim))
       flagged.filter(col("reject_reason").isNotNull)
         .select("vec_id", "label", "reject_reason")
         .write.mode("overwrite")

@@ -68,6 +68,15 @@ class BpeSpec extends SparkSpec {
     assert(got === expected)
   }
 
+  test("bpeTrainOn(corpus, 8) leaves the registered-RDD set as it found " +
+      "it: every superseded vocab pin, and the last, is released") {
+    val docs = corpus((0L until 20L).map(i => i -> s"tablet batch hash t$i"): _*)
+    val before = registeredRdds
+    assert(BpeOps.bpeTrainOn(docs, 8).collect().length === 8)
+    val left = registeredRdds -- before
+    assert(left.isEmpty, s"bpeTrainOn left RDDs registered: $left")
+  }
+
   test("trainer stops early when no pair remains") {
     val got = BpeOps.bpeTrainOn(corpus(1L -> "ab ab"), 10).collect()
     // "ab" merges once to a single symbol; nothing pairable remains

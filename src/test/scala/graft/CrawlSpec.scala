@@ -534,6 +534,60 @@ class CrawlSpec extends SparkSpec {
       .map(_.getLong(0)).toSet === Set(0L, 1L, 10L, 11L))
   }
 
+  test("vector and IVF-PQ ingest stamp _graft_meta at the keyed store " +
+      "root only, and a drifted restart is still refused") {
+    import graft.streaming.VectorIngestPipeline
+    import graft.ops.{ScaleOps, SimilarityOps}
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmpDir("vec-root-meta")
+    val r = new scala.util.Random(9)
+    def vec(): Array[Float] =
+      Array.fill(SimilarityOps.Dim)(r.nextGaussian().toFloat)
+    val rows = (0L until 12L).map(i => (i, vec(), (i % 2).toInt))
+    val seedRows = rows.toDF("vec_id", "embedding", "label")
+    val valid = seedRows.select(col("vec_id"), col("label"),
+      col("embedding").cast("array<double>").as("embedding"))
+    val cbook = SimilarityOps.kmeansCentroids(valid, k = 2, iters = 1)
+    val rcb = SimilarityOps.pqResidualCodebook(valid, cbook, k = 2,
+      iters = 1)
+    val (pq, ivf) = (s"$root/pq", s"$root/ivf")
+    VectorIngestPipeline.seedStore(seedRows, cbook, pq)
+    VectorIngestPipeline.seedIvfPqStore(valid, cbook, rcb, ivf)
+    // one input per query: a MemoryStream trims what a reader commits
+    val ins = Seq.fill(3)(MemoryStream[(Long, Array[Float], Int)])
+    def stream(i: Int) = ins(i).toDS().toDF("vec_id", "embedding", "label")
+    val q1 = VectorIngestPipeline.runVectorIngest(stream(0), cbook, pq,
+      s"$root/q1", s"$root/c1")
+    val q2 = VectorIngestPipeline.runIvfPqIngest(stream(1), cbook, rcb, ivf,
+      s"$root/q2", s"$root/c2")
+    val v = vec()
+    ins.take(2).foreach(_.addData((20L, v, 0)))
+    try { q1.processAllAvailable(); q2.processAllAvailable() }
+    finally { q1.stop(); q2.stop() }
+    def exists(p: String) = new java.io.File(p).exists
+    for (store <- Seq(pq, ivf)) {
+      assert(exists(ScaleOps.metaPath(store)), s"$store: root stamp")
+      for (id <- Seq(-1L, 0L)) {
+        val seg = graft.streaming.BatchDirs.segment(store, id)
+        assert(exists(seg), s"$seg: segment written")
+        assert(!exists(ScaleOps.metaPath(seg)), s"$seg: no segment stamp")
+      }
+    }
+    // the root stamp alone still refuses a drifted codebook at restart
+    val bad = VectorIngestPipeline.runVectorIngest(stream(2),
+      cbook.map(_.map(_ * 1.5)), pq, s"$root/q3", s"$root/c3")
+    ins(2).addData((21L, vec(), 1))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      bad.processAllAvailable()
+    }
+    bad.stop()
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("DIFFERENT codebook generation")),
+      s"expected the generation-guard message, got: ${messages(e)}")
+  }
+
   test("IVF-PQ ingest: malformed vectors quarantine, valid rows land " +
       "residual codes in cell-partitioned segments, keyed-root search " +
       "equals the batch encode, and a drifted artifact fails the " +

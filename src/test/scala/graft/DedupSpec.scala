@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{DedupOps, SimilarityOps}
+import org.apache.spark.graft.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.functions._
 
 /** Planted-duplicate tests for the approximate dedup / similarity paths
@@ -143,8 +144,12 @@ class DedupSpec extends SparkSpec {
     val ckpt = tmpDir("cc-ckpt")
     val local = DedupOps.dedupClusters(spark, plantedDocsDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val reliable = DedupOps.dedupClusters(spark, plantedDocsDir, Some(ckpt))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // a context checkpoint dir makes every pin reliable; the dir is
+    // restored afterwards, so no later suite inherits it
+    val reliable = withCheckpointDir(ckpt) {
+      DedupOps.dedupClusters(spark, plantedDocsDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(reliable === local)
     // the reliable run must actually write checkpoint data to the dir
     def files(f: java.io.File): Seq[java.io.File] =
@@ -965,16 +970,17 @@ class DedupSpec extends SparkSpec {
 
   test("minhash/simhash pairs support reliable checkpoint mode") {
     val ckpt = tmpDir("pairs-ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt)
     val docs = spark.read.parquet(s"$plantedDocsDir/documents.parquet")
     val mhLocal = DedupOps.minhashLshPairsOn(docs)
       .collect().map(_.toSeq).toSet
-    val mhRel = DedupOps.minhashLshPairsOn(docs, reliable = true)
-      .collect().map(_.toSeq).toSet
-    assert(mhRel === mhLocal)
     val shLocal = DedupOps.simhashPairsOn(docs).collect().map(_.toSeq).toSet
-    val shRel = DedupOps.simhashPairsOn(docs, reliable = true)
-      .collect().map(_.toSeq).toSet
+    val (mhRel, shRel) = withCheckpointDir(ckpt) {
+      (DedupOps.minhashLshPairsOn(docs).collect().map(_.toSeq).toSet,
+        DedupOps.simhashPairsOn(docs).collect().map(_.toSeq).toSet)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "the test must leave the shared context without a checkpoint dir")
+    assert(mhRel === mhLocal)
     assert(shRel === shLocal)
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)

@@ -68,6 +68,34 @@ class SharedSessionSpec extends SparkSpec {
     assert(watchedNow === conf0)
   }
 
+  test("a pin made on one thread survives another thread's " +
+      "releaseCheckpoints, and its own thread's release drops it") {
+    val before = registeredRdds
+    val pinned = new java.util.concurrent.CountDownLatch(1)
+    val released = new java.util.concurrent.CountDownLatch(1)
+    @volatile var pin: org.apache.spark.sql.DataFrame = null
+    @volatile var afterOwnRelease: Set[Int] = null
+    val b = new Thread(() => {
+      pin = Tables.pin(spark.range(200).toDF("id"))
+      pinned.countDown()
+      released.await()
+      Tables.releaseCheckpoints(spark)
+      afterOwnRelease = registeredRdds
+    }, "pinner")
+    b.start()
+    pinned.await()
+    val bPins = registeredRdds -- before
+    assert(bPins.nonEmpty, "thread B's pin must register its RDD")
+    Tables.releaseCheckpoints(spark) // thread A: this test's thread
+    assert(bPins.subsetOf(registeredRdds),
+      "thread A's release dropped thread B's pin")
+    assert(pin.count() === 200)
+    released.countDown()
+    b.join()
+    assert((afterOwnRelease -- before).isEmpty,
+      "thread B's own release must drop its pin")
+  }
+
   test("no conf.set or conf.unset in src/main outside Tables.t's " +
       "nanosAsLong read flag, boundedCollect's scoped limit ramp and " +
       "Probe's harness session (pinned by count)") {

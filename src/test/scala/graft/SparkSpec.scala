@@ -15,6 +15,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Ids of the RDDs the context holds persisted (caches and pins). */
+  def registeredRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
 }
 
 object SparkSpec {
