@@ -248,7 +248,7 @@ object Probe {
       "q81" -> "BM25 scoring",
       "q124" -> "DSIR importance weights",
       "q131" -> "DoReMi mix weights",
-      "q135" -> "IVF recall eval (probe fan-out)",
+      "q135" -> "recall sweep (bounded top-k heaps)",
       "q139" -> "RP recall eval (topk aggregate)",
       "q145" -> "t-closeness EMD grid")
     println(f"${"query"}%-28s ${"shape"}%-34s cold_s  warm_s")

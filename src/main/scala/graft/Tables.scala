@@ -317,7 +317,8 @@ object Tables {
     * is a reliable checkpoint when the SparkContext has a checkpoint dir
     * (it survives executor loss, at the cost of a write to that dir),
     * else a local one (executor-resident blocks). The caller's thread
-    * owns it until [[unpin]] or [[releaseCheckpoints]].
+    * owns it until [[unpin]] or [[releaseCheckpoints]] drops its blocks
+    * or deletes its files.
     */
   def pin(df: DataFrame): DataFrame = {
     val p =
@@ -359,10 +360,17 @@ object Tables {
     mine.clear()
   }
 
+  /** Drop pins `ids`: a local pin's blocks, and with a checkpoint dir a
+    * reliable pin's `rdd-<id>` files under it. Without a dir, no
+    * file-system call.
+    */
   private def release(spark: SparkSession, ids: Seq[Int]): Unit =
     if (ids.nonEmpty) {
-      val registered = spark.sparkContext.getPersistentRDDs
+      val sc = spark.sparkContext
+      val registered = sc.getPersistentRDDs
       ids.flatMap(registered.get).foreach(_.unpersist(blocking = false))
+      if (sc.getCheckpointDir.isDefined)
+        ids.foreach(org.apache.spark.graft.ReliableCheckpoints.clean(sc, _))
     }
 
   /** [[pathSnapshotKey]] of one testdata table under `dir`. */

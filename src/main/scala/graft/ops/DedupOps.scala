@@ -920,16 +920,6 @@ object DedupOps {
     }
   }
 
-  /** Connected components over an undirected edge list — public library
-    * operator (callers supply `nodes(id)` and `undirected(src, dst)`).
-    * Min-label propagation with pointer jumping (rep := rep(rep) each round
-    * squares the propagation distance — O(log d) rounds instead of
-    * O(diameter); a 200-node path converges well inside the cap, asserted
-    * in DedupSpec), lineage truncated per round (without it the nested
-    * logical plan makes analysis dwarf execution; each round's pin is
-    * released once the next supersedes it). Returns (id, rep) for every
-    * node, rep = component minimum.
-    */
   /** Undirected-edge-row cap for the driver union-find arm: 4M rows ≈
     * 64 MB of long pairs — a bounded metadata hop in the fingerprint-store
     * / centroid-collect class, NOT a data collect. Above it the
@@ -1031,7 +1021,17 @@ object DedupOps {
     out.result().toDF("id", "_uf_rep")
   }
 
-  /** Size-dispatched: the label graph is the MINED near-dup edge set —
+  /** Connected components over an undirected edge list — public library
+    * operator (callers supply `nodes(id)` and `undirected(src, dst)`).
+    * Min-label propagation with pointer jumping (rep := rep(rep) each round
+    * squares the propagation distance — O(log d) rounds instead of
+    * O(diameter); a 200-node path converges well inside the cap, asserted
+    * in DedupSpec), lineage truncated per round (without it the nested
+    * logical plan makes analysis dwarf execution; each round's pin is
+    * released once the next supersedes it). Returns (id, rep) for every
+    * node, rep = component minimum.
+    *
+    * Size-dispatched: the label graph is the MINED near-dup edge set —
     * after contraction usually minuscule relative to the corpus — while
     * the pointer-jumping loop pays a fixed ~3-joins+checkpoint+
     * convergence-probe tax PER ROUND regardless of edge count. Up to

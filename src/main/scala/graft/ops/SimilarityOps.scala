@@ -708,20 +708,10 @@ object SimilarityOps {
     *
     * Scale: the probe set is bounded by construction (limit), so the
     * ground-truth pass is |corpus|·pCount cosines — the price OF the
-    * eval, run on a fixed sample, never on every query. That ONE pass
-    * (norms precomputed per row) serves everything: each pair left-joins
-    * its broadcast probed-cell rank (≤ pCount·maxProbe build side), and
-    * a single map-side-combined aggregation per probe computes the exact
-    * top-k, every nProbe arm's top-k (`when(cent_rank <= np, cos)` — an
-    * unprobed pair is a null the [[graft.functions.TopKIdsByScore]] heap
-    * skips), AND the scanned census as sibling conditional sums. Recall
-    * is an array_intersect over ≤ probes·arms k-id lists: nothing after
-    * the scan is corpus-sized, and no fan-out row ever exists.
-    *
-    * Cost convention (shared by the whole quartet): `mean_frac_scanned`
-    * EXCLUDES the probe itself and divides by n−1, so the four family
-    * curves read as one decision surface; on a single-vector corpus the
-    * fraction is NULL (no other vectors — undefined, not 0).
+    * eval, run on a fixed sample, never on every query. Each pair
+    * left-joins its broadcast probed-cell rank (≤ pCount·maxProbe build
+    * side) and an nProbe arm admits the pairs ranked within it; the rest
+    * is [[recallSweep]] (its cost convention included).
     */
   def annIvfRecallOn(embDf: DataFrame, k: Int = RecallK,
       pCount: Int = RecallProbes,
@@ -751,8 +741,10 @@ object SimilarityOps {
       .withColumn("cent_rank", row_number().over(w))
       .filter(col("cent_rank") <= maxProbe)
       .select(col("q_id"), col("label").as("cell"), col("cent_rank")))
-    ivfRecallCurve(e.withColumn("cell", col("label")), probes, probedCells,
-      k, 1 to maxProbe)
+    val assigned = e.withColumn("cell", col("label"))
+    recallSweep(ringPairs(assigned, probes, probedCells), probes,
+      ringArms(maxProbe, col("cos_sim")), "n_probe", k, asc = false,
+      census = Some(assigned))
   }
 
   /** q144: the q135 curve pointed at the TRAINED coarse cells — the
@@ -800,70 +792,146 @@ object SimilarityOps {
     // bounded probe set collected ONCE; rings are [[probeRingLocal]]'s
     // driver arithmetic (the cellDists twin) and both frames enter the
     // plan as local relations — the previous probes → probedCells
-    // broadcast chain cost two sequential corpus-scan jobs (r15; qnorm =
-    // math.sqrt of the index-order self-dot, bit-identical to norm())
-    val probeRows: Seq[(Long, Seq[Double], Double)] = Tables.boundedCollect(
-      validDf.orderBy("vec_id").limit(pCount)
-        .select(col("vec_id"), col("embedding").cast("array<double>")),
-      pCount, "ivf recall probe set").toSeq.map { r =>
-      val q = r.getSeq[Double](1).toArray
-      (r.getLong(0), q.toSeq, math.sqrt(ddot(q, q)))
-    }
+    // broadcast chain cost two sequential corpus-scan jobs (r15)
+    val probeRows = probeSetLocal(validDf, pCount)
     val probes = probeRows.toDF("q_id", "q_emb", "qnorm")
     val probedCells = broadcast(probeRows.flatMap { case (qid, qs, _) =>
       probeRingLocal(qs.toArray, centroids, maxProbe).zipWithIndex
         .map { case (cell, p) => (qid, cell, p + 1) }
     }.toDF("q_id", "cell", "cent_rank"))
-    ivfRecallCurve(e, probes, probedCells, k, 1 to maxProbe)
+    recallSweep(ringPairs(e, probes, probedCells), probes,
+      ringArms(maxProbe, col("cos_sim")), "n_probe", k, asc = false,
+      census = Some(e))
   }
 
-  /** The shared q135/q144 sweep: given the assigned corpus (vec_id, cell,
-    * embedding, enorm), the bounded probe set, and each probe's ranked
-    * cell list (cent_rank 1..maxProbe), compute exact ground truth, every
-    * nProbe arm's top-k, and the scanned census in ONE corpus×probes pass
-    * — the label face and the trained face differ only in how `cell` and
-    * `cent_rank` were derived.
+  /** One arm of a [[recallSweep]]: its grid value, the score it ranks
+    * pairs by, and the pairs it admits (None: every pair).
     */
-  private def ivfRecallCurve(assigned: DataFrame, probes: DataFrame,
-      probedCells: DataFrame, k: Int, nProbes: Seq[Int]): DataFrame = {
-    // conditional sims and scan flags are PRE-computed in this
+  private case class RecallArm(value: Int, score: Column,
+      admit: Option[Column] = None)
+
+  /** The exact arm's score of a probe pair (corpus `embedding`/`enorm`
+    * against probe `q_emb`/`qnorm`): the 6-dp cosine, NULL on a zero
+    * norm.
+    */
+  private def exactCos: Column =
+    round(try_divide(dot(col("embedding"), col("q_emb")),
+      col("enorm") * col("qnorm")), 6).as("cos_sim")
+
+  /** Every (corpus vector, probe) pair bar the probe itself: the one
+    * corpus×probes pass of a recall eval (bounded probe build side).
+    */
+  private def probePairs(corpus: DataFrame, probes: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(probes)).filter(col("vec_id") =!= col("q_id"))
+
+  /** The IVF ring join of q135/q144/q153: [[probePairs]] over a corpus
+    * with `cell`, each pair tagged with its cell's rank in the probe's
+    * ring (`cent_rank`, NULL beyond the ring), plus the exact cosine and
+    * `scores`.
+    */
+  private def ringPairs(corpus: DataFrame, probes: DataFrame,
+      probedCells: DataFrame, scores: Column*): DataFrame =
+    probePairs(corpus, probes)
+      .join(probedCells, Seq("q_id", "cell"), "left")
+      .select(Seq(col("q_id"), col("vec_id"), col("cent_rank"), exactCos)
+        ++ scores: _*)
+
+  /** nProbe = 1..`maxProbe` arms over [[ringPairs]]: arm np ranks by
+    * `score` the pairs whose cell is among the probe's np nearest.
+    */
+  private def ringArms(maxProbe: Int, score: Column): Seq[RecallArm] =
+    (1 to maxProbe).map(np =>
+      RecallArm(np, score, Some(col("cent_rank") <= np)))
+
+  /** The bounded probe set (the `pCount` smallest vec_ids) collected ONCE
+    * as (q_id, q_emb, qnorm) — qnorm is math.sqrt of the index-order
+    * self-dot, bit-identical to the norm() expression
+    * (java.lang.Math.sqrt is IEEE correctly-rounded).
+    */
+  private def probeSetLocal(df: DataFrame,
+      pCount: Int): Seq[(Long, Seq[Double], Double)] =
+    Tables.boundedCollect(df.orderBy("vec_id").limit(pCount)
+        .select(col("vec_id"), col("embedding").cast("array<double>")),
+      pCount, "recall probe set").toSeq.map { r =>
+      val q = r.getSeq[Double](1).toArray
+      (r.getLong(0), q.toSeq, math.sqrt(ddot(q, q)))
+    }
+
+  /** The one recall curve of every ANN eval face (q135, q137–q139, q142,
+    * q144, q153). `pairs` ([[probePairs]]) carries q_id, vec_id, the
+    * exact `cos_sim` and whatever the arms read; each arm ranks by its
+    * score over the pairs it admits — an unadmitted pair scores NULL,
+    * which the [[graft.functions.TopKIdsByScore]] heap skips, so no arm
+    * fan-out row ever exists. ONE map-side-combined aggregation per
+    * probe takes the exact top-k (cosine desc), every arm's top-k (`asc`
+    * for a distance such as ADC) and, given a `census` corpus, each
+    * arm's admitted-pair count as a sibling conditional sum. Recall is
+    * an array_intersect over ≤ probes·arms k-id lists: nothing after the
+    * scan is corpus-sized. A probe with NO admitted candidate reports 0
+    * scanned and 0 recall (coalesced, not dropped — the curve must show
+    * the empty-filter regime honestly).
+    *
+    * Cost convention: `mean_frac_scanned` EXCLUDES the probe itself and
+    * divides by n−1 (n = the census corpus's rows), so every family's
+    * curve reads as one decision surface; on a single-vector corpus the
+    * fraction is NULL (no other vectors — undefined, not 0). A face whose
+    * cost axis is the bytes it reads (RP, PQ) passes it as `readCost`, a
+    * column over the arm value.
+    *
+    * Returns (`armCol`, n_queries, mean_recall_at_k, then
+    * mean_frac_scanned with a census, then `readCost`), ordered by the
+    * arm.
+    */
+  private def recallSweep(pairs: DataFrame, probes: DataFrame,
+      arms: Seq[RecallArm], armCol: String, k: Int, asc: Boolean,
+      census: Option[DataFrame], readCost: Option[Column] = None)
+      : DataFrame = {
+    // [[graft.functions.TopKIdsByScore]]: the group's k best ids by
+    // (score, id), highest first unless `asc`; null scores never rank.
+    // Plans as ObjectHashAggregate with a map-side partial — the
+    // bounded-heap replacement for a salted rank stage
+    def topkIds(score: Column, asc: Boolean): Column =
+      call_function("graft_topk_ids", score, col("vec_id"), lit(k), lit(asc))
+    // conditional scores and scan flags are PRE-computed in this
     // whole-stage-codegen'd project: a TypedImperativeAggregate's
     // children evaluate interpreted per row, so the aggregate inputs
     // must be bare column refs, not per-row CASE trees
-    val topks = assigned.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(probedCells, Seq("q_id", "cell"), "left")
-      .select(col("q_id"), col("vec_id"), col("cent_rank"),
-        round(try_divide(dot(col("embedding"), col("q_emb")),
-          col("enorm") * col("qnorm")), 6).as("cos_sim"))
-      .select(col("q_id") +: col("vec_id") +: col("cos_sim") +:
-        (nProbes.map(np =>
-          when(col("cent_rank") <= np, col("cos_sim")).as(s"sim_$np")) ++
-         nProbes.map(np =>
-          when(col("cent_rank") <= np, 1L).otherwise(0L)
-            .as(s"in_$np"))): _*)
+    val scores = arms.map(a =>
+      a.admit.fold(a.score)(when(_, a.score)).as(s"score_${a.value}"))
+    val flags = census.toSeq.flatMap(_ => arms.map(a =>
+      a.admit.fold(lit(1L))(when(_, 1L).otherwise(0L))
+        .as(s"in_${a.value}")))
+    val topks = pairs
+      .select(Seq(col("q_id"), col("vec_id"), col("cos_sim")) ++ scores
+        ++ flags: _*)
       .groupBy("q_id")
-      .agg(topkIds(col("cos_sim"), col("vec_id"), k).as("ids_exact"),
-        nProbes.map(np =>
-          topkIds(col(s"sim_$np"), col("vec_id"), k).as(s"ids_$np")) ++
-        nProbes.map(np => sum(col(s"in_$np")).as(s"scan_$np")): _*)
-    val arms = nProbes.map(np =>
-      struct(lit(np).as("n_probe"),
-        Tables.sizeOrNull(array_intersect(col(s"ids_$np"), col("ids_exact")))
-          .as("n_hits"),
-        col(s"scan_$np").as("n_scanned")))
-    probes.select("q_id")
+      .agg(topkIds(col("cos_sim"), asc = false).as("ids_exact"),
+        arms.map(a => topkIds(col(s"score_${a.value}"), asc)
+          .as(s"ids_${a.value}")) ++
+        census.toSeq.flatMap(_ => arms.map(a =>
+          sum(col(s"in_${a.value}")).as(s"scan_${a.value}"))): _*)
+    val armRows = arms.map(a => struct(lit(a.value).as(armCol) +:
+      Tables.sizeOrNull(array_intersect(col(s"ids_${a.value}"),
+        col("ids_exact"))).as("n_hits") +:
+      census.toSeq.map(_ => col(s"scan_${a.value}").as("n_scanned")): _*))
+    val perArm = probes.select("q_id")
       .join(topks, Seq("q_id"), "left")
-      .select(col("q_id"), explode(array(arms: _*)).as("a"))
-      .crossJoin(broadcast(assigned.agg((count(lit(1)) - 1).as("n_others"))))
-      .groupBy(col("a.n_probe").as("n_probe"))
-      .agg(count(lit(1)).as("n_queries"),
-        graft.Tables.davg(coalesce(col("a.n_hits"), lit(0)) / lit(k), 6)
-          .as("mean_recall_at_k"),
-        graft.Tables.davg(try_divide(
-          coalesce(col("a.n_scanned"), lit(0L)), col("n_others")), 6)
-          .as("mean_frac_scanned"))
-      .orderBy("n_probe")
+      .select(col("q_id"), explode(array(armRows: _*)).as("a"))
+    val recall = graft.Tables.davg(
+      coalesce(col("a.n_hits"), lit(0)) / lit(k), 6).as("mean_recall_at_k")
+    val curve = census match {
+      case Some(corpus) => perArm
+        .crossJoin(broadcast(corpus.agg((count(lit(1)) - 1).as("n_others"))))
+        .groupBy(col(s"a.$armCol").as(armCol))
+        .agg(count(lit(1)).as("n_queries"), recall,
+          graft.Tables.davg(try_divide(
+            coalesce(col("a.n_scanned"), lit(0L)), col("n_others")), 6)
+            .as("mean_frac_scanned"))
+      case None => perArm
+        .groupBy(col(s"a.$armCol").as(armCol))
+        .agg(count(lit(1)).as("n_queries"), recall)
+    }
+    readCost.fold(curve)(c => curve.select(col("*"), c)).orderBy(armCol)
   }
 
   // ---- q137: LSH recall-vs-radius eval --------------------------------------
@@ -888,23 +956,10 @@ object SimilarityOps {
     * q137 curves read side by side when choosing WHICH index to deploy.
     *
     * Scale: unlike IVF (storage-side cells), the LSH filter is
-    * score-side, so ONE corpus×probes pass (bounded probe build side,
-    * norms precomputed per row) computes every pair's cosine AND min
-    * band distance, and EVERYTHING aggregates out of that single frame
-    * in one map-side-combined pass: the exact arm and each radius arm
-    * are [[graft.functions.TopKIdsByScore]] bounded heaps (a radius arm
-    * scores `when(min_band <= r, cos)` — an unadmitted pair is a null
-    * the heap skips, so no arm fan-out rows ever exist), and the
-    * scanned-fraction census is a sibling conditional sum in the SAME
-    * aggregation. Recall is an array_intersect over ≤ probes·radii k-id
-    * lists. A probe with NO candidate at radius r reports 0 scanned and
-    * 0 recall (coalesced, not dropped — the curve must show the
-    * empty-filter regime honestly).
-    *
-    * Cost convention (shared by the whole quartet): `mean_frac_scanned`
-    * EXCLUDES the probe itself and divides by n−1, so the four family
-    * curves read as one decision surface; on a single-vector corpus the
-    * fraction is NULL (no other vectors — undefined, not 0).
+    * score-side, so ONE corpus×probes pass (norms precomputed per row)
+    * computes every pair's cosine AND min band distance, and a radius-r
+    * arm admits the pairs with `min_band <= r`; the rest is
+    * [[recallSweep]] (its cost convention included).
     */
   def annLshRecallOn(embDf: DataFrame, k: Int = RecallK,
       pCount: Int = RecallProbes,
@@ -920,48 +975,15 @@ object SimilarityOps {
     val probes = e.orderBy("vec_id").limit(pCount)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("sig").as("q_sig"), col("enorm").as("qnorm"))
-    val radii = 0 to maxRadius
     val hi = bit_count(shiftrightunsigned(col("sig"), 8)
       .bitwiseXOR(shiftrightunsigned(col("q_sig"), 8)))
     val lo = bit_count(col("sig").bitwiseAND(lit(0xFFL))
       .bitwiseXOR(col("q_sig").bitwiseAND(lit(0xFFL))))
-    // conditional sims and scan flags are PRE-computed in this
-    // whole-stage-codegen'd project: a TypedImperativeAggregate's
-    // children evaluate interpreted per row, so the aggregate inputs
-    // must be bare column refs, not per-row CASE trees
-    val topks = e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(try_divide(dot(col("embedding"), col("q_emb")),
-          col("enorm") * col("qnorm")), 6).as("cos_sim"),
-        least(hi, lo).as("min_band"))
-      .select(col("q_id") +: col("vec_id") +: col("cos_sim") +:
-        (radii.map(r =>
-          when(col("min_band") <= r, col("cos_sim")).as(s"sim_$r")) ++
-         radii.map(r =>
-          when(col("min_band") <= r, 1L).otherwise(0L).as(s"in_$r"))): _*)
-      .groupBy("q_id")
-      .agg(topkIds(col("cos_sim"), col("vec_id"), k).as("ids_exact"),
-        radii.map(r =>
-          topkIds(col(s"sim_$r"), col("vec_id"), k).as(s"ids_$r")) ++
-        radii.map(r => sum(col(s"in_$r")).as(s"scan_$r")): _*)
-    val arms = radii.map(r =>
-      struct(lit(r).as("radius"),
-        Tables.sizeOrNull(array_intersect(col(s"ids_$r"), col("ids_exact")))
-          .as("n_hits"),
-        col(s"scan_$r").as("n_scanned")))
-    probes.select("q_id")
-      .join(topks, Seq("q_id"), "left")
-      .select(col("q_id"), explode(array(arms: _*)).as("a"))
-      .crossJoin(broadcast(e.agg((count(lit(1)) - 1).as("n_others"))))
-      .groupBy(col("a.radius").as("radius"))
-      .agg(count(lit(1)).as("n_queries"),
-        graft.Tables.davg(coalesce(col("a.n_hits"), lit(0)) / lit(k), 6)
-          .as("mean_recall_at_k"),
-        graft.Tables.davg(try_divide(
-          coalesce(col("a.n_scanned"), lit(0L)), col("n_others")), 6)
-          .as("mean_frac_scanned"))
-      .orderBy("radius")
+    val pairs = probePairs(e, probes).select(col("q_id"), col("vec_id"),
+      exactCos, least(hi, lo).as("min_band"))
+    recallSweep(pairs, probes, (0 to maxRadius).map(r =>
+        RecallArm(r, col("cos_sim"), Some(col("min_band") <= r))),
+      "radius", k, asc = false, census = Some(e))
   }
 
   // ---- q139: RP projection-prefix recall eval -------------------------------
@@ -988,17 +1010,13 @@ object SimilarityOps {
     * decision surface across all four index families.
     *
     * Scale: project once per vector (map-only, the q113 expression),
-    * then ONE corpus×probes pass (bounded probe build side) computes
-    * every pair's prefix similarities AND the full-precision ground
-    * truth as sibling COLUMNS, and every arm's top-k is a
-    * [[graft.functions.TopKIdsByScore]] bounded-heap aggregate over that
-    * one frame — each pair row is consumed map-side (O(log k) heap
-    * update per arm), only O(k) survivors per (task, probe) ever
-    * shuffle, and recall is an array_intersect over ≤ probes·arms k-id
-    * lists. The previous form exploded the frame ×(arms+1) through two
-    * salted rank stages; the 6M-vector measurement said those SORTS of
-    * 240M rows, not the cosines, were the whole cost. No census pass at
-    * all (RP reads every vector — the cost axis is dims, not
+    * then ONE corpus×probes pass computes every pair's prefix
+    * similarities AND the full-precision ground truth as sibling
+    * columns, and [[recallSweep]] takes every arm's top-k map-side out
+    * of that one frame. The previous form exploded the frame ×(arms+1)
+    * through two salted rank stages; the 6M-vector measurement said
+    * those SORTS of 240M rows, not the cosines, were the whole cost. No
+    * census (RP reads every vector — the cost axis is dims, not
     * candidates).
     */
   def annRpRecallOn(embDf: DataFrame, k: Int = RecallK,
@@ -1036,49 +1054,17 @@ object SimilarityOps {
       .select(col("vec_id").as("q_id") +: col("embedding").as("q_emb") +:
         col("p").as("qp") +: col("enorm").as("qnorm") +:
         sortedGrid.map(d => col(s"pn_$d").as(s"qn_$d")): _*)
-    val pairDots = sortedGrid.zip(0 +: sortedGrid.dropRight(1))
+    val arms = sortedGrid.zip(0 +: sortedGrid.dropRight(1))
       .scanLeft((lit(0.0), 0)) { case ((acc, _), (d, prev)) =>
         (extendDot(acc, "p", "qp", prev + 1, d), d)
-      }.drop(1)
-    val sims = pairDots.map { case (dt, d) =>
-      round(try_divide(dt, col(s"pn_$d") * col(s"qn_$d")), 6)
-        .as(s"sim_$d")
-    }
-    val topks = e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id") +: col("vec_id") +: (sims :+
-        round(try_divide(dot(col("embedding"), col("q_emb")),
-          col("enorm") * col("qnorm")), 6).as("sim_exact")): _*)
-      .groupBy("q_id")
-      .agg(topkIds(col("sim_exact"), col("vec_id"), k).as("ids_exact"),
-        sortedGrid.map(d =>
-          topkIds(col(s"sim_$d"), col("vec_id"), k).as(s"ids_$d")): _*)
-    val armHits = dimGrid.map(d =>
-      struct(lit(d).as("d_used"),
-        Tables.sizeOrNull(array_intersect(col(s"ids_$d"), col("ids_exact")))
-          .as("n_hits")))
-    probes.select("q_id")
-      .join(topks, Seq("q_id"), "left")
-      .select(col("q_id"), explode(array(armHits: _*)).as("a"))
-      .groupBy(col("a.d_used").as("d_used"))
-      .agg(count(lit(1)).as("n_queries"),
-        graft.Tables.davg(coalesce(col("a.n_hits"), lit(0)) / lit(k), 6)
-          .as("mean_recall_at_k"))
-      .withColumn("frac_proj_read",
-        round(col("d_used") / lit(Planes.toDouble), 6))
-      .orderBy("d_used")
+      }.drop(1).map { case (dt, d) =>
+        RecallArm(d, round(try_divide(dt, col(s"pn_$d") * col(s"qn_$d")), 6))
+      }
+    recallSweep(probePairs(e, probes).select(col("*"), exactCos), probes,
+      arms, "d_used", k, asc = false, census = None,
+      readCost = Some(round(col("d_used") / lit(Planes.toDouble), 6)
+        .as("frac_proj_read")))
   }
-
-  /** [[graft.functions.TopKIdsByScore]] as a column: the group's k best
-    * ids by (score, id) — `asc = false` for similarities (highest
-    * first), `asc = true` for distances; null scores/ids never rank.
-    * Plans as ObjectHashAggregate with a map-side partial: the
-    * bounded-heap replacement for a salted rank stage wherever only the
-    * top-k IDS are needed.
-    */
-  private def topkIds(score: Column, id: Column, k: Int,
-      asc: Boolean = false): Column =
-    call_function("graft_topk_ids", score, id, lit(k), lit(asc))
 
   // ---- q138: PQ progressive-scan recall eval --------------------------------
 
@@ -1108,12 +1094,10 @@ object SimilarityOps {
     * broadcast alongside the raw query vector, so ONE corpus×probes
     * pass computes the exact cosine AND every ADC prefix sum
     * (incremental in subspace order — the identical 0.0-seeded
-    * left-assoc fold as the slice-aggregate it replaces), and one
-    * map-side-combined aggregation per probe takes every arm's top-k
-    * through [[graft.functions.TopKIdsByScore]] bounded heaps
-    * (`asc = true` — ADC is a distance). Unencodable vectors carry NULL
-    * pieces and never rank (q123's corrupt-input discipline, now the
-    * heap's null-skip).
+    * left-assoc fold as the slice-aggregate it replaces), and
+    * [[recallSweep]] ranks every arm ascending (ADC is a distance).
+    * Unencodable vectors carry NULL pieces and never rank (q123's
+    * corrupt-input discipline, now the heap's null-skip).
     */
   def annPqRecallOn(embDf: DataFrame, k: Int = RecallK,
       pCount: Int = RecallProbes,
@@ -1173,34 +1157,14 @@ object SimilarityOps {
     // ADC prefix sums build incrementally along the sorted grid — the
     // same ((0.0 + p0) + p1) + … association at every grid point as the
     // full fold, so each arm's distance is bit-identical to the oracle's
-    val adcs = sortedGrid.zip(0 +: sortedGrid.dropRight(1))
+    val arms = sortedGrid.zip(0 +: sortedGrid.dropRight(1))
       .scanLeft((lit(0.0), 0)) { case ((acc, _), (m, prev)) =>
         ((prev until m).foldLeft(acc)((c, i) => c + piece(i)), m)
-      }.drop(1).map { case (adc, m) => round(adc, 6).as(s"adc_$m") }
-    val topks = e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id") +: col("vec_id") +:
-        round(try_divide(dot(col("embedding"), col("q_emb")),
-          col("enorm") * col("qnorm")), 6).as("cos_sim") +: adcs: _*)
-      .groupBy("q_id")
-      .agg(topkIds(col("cos_sim"), col("vec_id"), k).as("ids_exact"),
-        sortedGrid.map(m =>
-          topkIds(col(s"adc_$m"), col("vec_id"), k, asc = true)
-            .as(s"ids_$m")): _*)
-    val arms = sortedGrid.map(m =>
-      struct(lit(m).as("m_used"),
-        Tables.sizeOrNull(array_intersect(col(s"ids_$m"), col("ids_exact")))
-          .as("n_hits")))
-    probes.select("q_id")
-      .join(topks, Seq("q_id"), "left")
-      .select(col("q_id"), explode(array(arms: _*)).as("a"))
-      .groupBy(col("a.m_used").as("m_used"))
-      .agg(count(lit(1)).as("n_queries"),
-        graft.Tables.davg(coalesce(col("a.n_hits"), lit(0)) / lit(k), 6)
-          .as("mean_recall_at_k"))
-      .withColumn("frac_code_read",
-        round(col("m_used") / lit(PqSub.toDouble), 6))
-      .orderBy("m_used")
+      }.drop(1).map { case (adc, m) => RecallArm(m, round(adc, 6)) }
+    recallSweep(probePairs(e, probes).select(col("*"), exactCos), probes,
+      arms, "m_used", k, asc = true, census = None,
+      readCost = Some(round(col("m_used") / lit(PqSub.toDouble), 6)
+        .as("frac_code_read")))
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023): bucket every vector
@@ -2276,10 +2240,8 @@ object SimilarityOps {
     * Scale: ONE corpus×probes pass (bounded probe build side) computes
     * the exact cosine AND the residual ADC per probed pair — the
     * per-(probe, cell) LUTs ride in on the ≤ pCount·maxProbe probed-cell
-    * rows (an unprobed pair's null LUT nulls its ADC, which the
-    * [[graft.functions.TopKIdsByScore]] heap skips — no arm fan-out rows
-    * ever exist), and one map-side-combined aggregation per probe takes
-    * the exact arm (cos desc) and every nProbe arm (ADC asc) plus the
+    * rows (an unprobed pair's null LUT nulls its ADC) — and
+    * [[recallSweep]] ranks every nProbe arm by ADC ascending, with the
     * scanned census. Nothing after the scan is corpus-sized.
     */
   def annIvfPqRecallWith(validDf: DataFrame, cells: Array[Array[Double]],
@@ -2315,16 +2277,7 @@ object SimilarityOps {
         col("cluster").as("cell"),
         call_function("graft_pq_encode", col("residual"),
           typedLit(residCb.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
-    // the bounded probe set, collected once: (q_id, q_emb, qnorm) — qnorm
-    // is math.sqrt of the index-order self-dot, bit-identical to the
-    // norm() expression (java.lang.Math.sqrt is IEEE correctly-rounded)
-    val probeRows: Seq[(Long, Seq[Double], Double)] = Tables.boundedCollect(
-      residFrame.orderBy("vec_id").limit(pCount)
-        .select(col("vec_id"), col("embedding").cast("array<double>")),
-      pCount, "ivfpq recall probe set").toSeq.map { r =>
-      val q = r.getSeq[Double](1).toArray
-      (r.getLong(0), q.toSeq, math.sqrt(ddot(q, q)))
-    }
+    val probeRows = probeSetLocal(residFrame, pCount)
     val probes = probeRows.toDF("q_id", "q_emb", "qnorm")
     // per-(probe, probed-cell) rows carrying that pair's ADC LUT
     val probedCells = broadcast(probeRows.flatMap { case (qid, qs, _) =>
@@ -2334,46 +2287,12 @@ object SimilarityOps {
       ring.zipWithIndex.map { case (cell, p) =>
         (qid, cell, p + 1, lutByCell(cell)) }
     }.toDF("q_id", "cell", "cent_rank", "lut"))
-    val nProbes = 1 to maxProbe
     val adc = round((0 until PqSub).map(m =>
         element_at(element_at(col("lut"), m + 1), col("codes")(m) + 1))
       .reduceLeft(_ + _), 6)
-    val topks = e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(probedCells, Seq("q_id", "cell"), "left")
-      .select(col("q_id"), col("vec_id"), col("cent_rank"),
-        round(try_divide(dot(col("embedding"), col("q_emb")),
-          col("enorm") * col("qnorm")), 6).as("cos_sim"),
-        adc.as("adc"))
-      .select(col("q_id") +: col("vec_id") +: col("cos_sim") +:
-        (nProbes.map(np =>
-          when(col("cent_rank") <= np, col("adc")).as(s"adc_$np")) ++
-         nProbes.map(np =>
-          when(col("cent_rank") <= np, 1L).otherwise(0L)
-            .as(s"in_$np"))): _*)
-      .groupBy("q_id")
-      .agg(topkIds(col("cos_sim"), col("vec_id"), k).as("ids_exact"),
-        nProbes.map(np =>
-          topkIds(col(s"adc_$np"), col("vec_id"), k, asc = true)
-            .as(s"ids_$np")) ++
-        nProbes.map(np => sum(col(s"in_$np")).as(s"scan_$np")): _*)
-    val arms = nProbes.map(np =>
-      struct(lit(np).as("n_probe"),
-        Tables.sizeOrNull(array_intersect(col(s"ids_$np"), col("ids_exact")))
-          .as("n_hits"),
-        col(s"scan_$np").as("n_scanned")))
-    probes.select("q_id")
-      .join(topks, Seq("q_id"), "left")
-      .select(col("q_id"), explode(array(arms: _*)).as("a"))
-      .crossJoin(broadcast(e.agg((count(lit(1)) - 1).as("n_others"))))
-      .groupBy(col("a.n_probe").as("n_probe"))
-      .agg(count(lit(1)).as("n_queries"),
-        graft.Tables.davg(coalesce(col("a.n_hits"), lit(0)) / lit(k), 6)
-          .as("mean_recall_at_k"),
-        graft.Tables.davg(try_divide(
-          coalesce(col("a.n_scanned"), lit(0L)), col("n_others")), 6)
-          .as("mean_frac_scanned"))
-      .orderBy("n_probe")
+    recallSweep(ringPairs(e, probes, probedCells, adc.as("adc")), probes,
+      ringArms(maxProbe, col("adc")), "n_probe", k, asc = true,
+      census = Some(e))
   }
 
   /** ADC shortlist width the q154 registration pins — how many ADC

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.CheckpointDirs.withCheckpointDir
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Pins the storage-hygiene contract of [[Tables.pin]]: the pins a query
@@ -67,6 +68,39 @@ class CheckpointReleaseSpec extends SparkSpec {
     cached.unpersist(blocking = true)
     callerRdds.flatMap(spark.sparkContext.getPersistentRDDs.get)
       .foreach(_.unpersist(blocking = true))
+  }
+
+  test("with a checkpoint dir, unpin and releaseCheckpoints delete a " +
+      "reliable pin's rdd-<id> files; a caller's own reliable checkpoint " +
+      "keeps its files") {
+    Tables.releaseCheckpoints(spark)
+    val dir = tmpDir("reliable-pins")
+    def rddDirs: Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f +: f.listFiles().toSeq.flatMap(walk)
+        else Seq.empty
+      walk(new java.io.File(dir)).map(_.getName)
+        .filter(_.startsWith("rdd-")).toSet
+    }
+    withCheckpointDir(dir) {
+      val a = Tables.pin(spark.range(100).toDF("id"))
+      val aDirs = rddDirs
+      val b = Tables.pin(spark.range(50).toDF("id"))
+      val bDirs = rddDirs -- aDirs
+      val own = spark.range(30).toDF("id").checkpoint(true)
+      val ownDirs = rddDirs -- aDirs -- bDirs
+      assert(aDirs.size === 1 && bDirs.size === 1 && ownDirs.size === 1,
+        s"each reliable checkpoint writes one rdd-<id> dir: $aDirs $bDirs " +
+          s"$ownDirs")
+      assert(a.count() === 100 && b.count() === 50)
+      Tables.unpin(a)
+      assert(rddDirs === bDirs ++ ownDirs, "unpin must delete the pin's files")
+      Tables.releaseCheckpoints(spark)
+      assert(rddDirs === ownDirs,
+        "releaseCheckpoints must delete the thread's reliable pins' files " +
+          "and keep the caller's own checkpoint")
+      assert(own.count() === 30)
+    }
   }
 
   test("Tables.pin is the only pin in src/main: outside Tables.scala no " +
