@@ -303,13 +303,14 @@ object Tables {
     rows
   }
 
-  /** RDD ids of the pins [[pin]] made on each thread. Ids, never RDD
+  /** The pins [[pin]] made on each thread: RDD id → the reliable pin's
+    * checkpoint dir (`None` for a local pin). Ids and paths, never RDD
     * references: a pin nobody can reach any more stays collectable, so
     * Spark's ContextCleaner still reclaims its blocks.
     */
   private val pins =
-    ThreadLocal.withInitial[scala.collection.mutable.Set[Int]](
-      () => scala.collection.mutable.Set.empty[Int])
+    ThreadLocal.withInitial[scala.collection.mutable.Map[Int, Option[String]]](
+      () => scala.collection.mutable.Map.empty[Int, Option[String]])
 
   /** Materialize `df` once and cut its lineage — the one pin of every
     * intermediate graft reuses (a frame read by several consumers, the
@@ -325,14 +326,14 @@ object Tables {
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
         df.checkpoint(eager = true)
       else df.localCheckpoint(eager = true)
-    pins.get ++= pinIds(p)
+    pins.get ++= pinRdds(p).map(r => r.id -> r.getCheckpointFile)
     p
   }
 
-  /** Ids of the checkpointed RDDs `df`'s plan reads. */
-  private def pinIds(df: DataFrame): Seq[Int] =
+  /** The checkpointed RDDs `df`'s plan reads. */
+  private def pinRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.logical.collectLeaves().collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
   /** Release this thread's pins that `df` reads — for a loop that
@@ -341,7 +342,8 @@ object Tables {
     */
   def unpin(df: DataFrame): Unit = {
     val mine = pins.get
-    release(df.sparkSession, pinIds(df).filter(mine.remove))
+    release(df.sparkSession,
+      pinRdds(df).flatMap(r => mine.remove(r.id).map(r.id -> _)))
   }
 
   /** Release every pin the calling thread made with [[pin]] — and
@@ -360,17 +362,22 @@ object Tables {
     mine.clear()
   }
 
-  /** Drop pins `ids`: a local pin's blocks, and with a checkpoint dir a
-    * reliable pin's `rdd-<id>` files under it. Without a dir, no
+  /** Drop the `released` pins: a local pin's blocks, and a reliable pin's
+    * `rdd-<id>` dir at the path recorded when it was made — wherever the
+    * context's checkpoint dir points now. A local pin makes no
     * file-system call.
     */
-  private def release(spark: SparkSession, ids: Seq[Int]): Unit =
-    if (ids.nonEmpty) {
+  private def release(spark: SparkSession,
+      released: Seq[(Int, Option[String])]): Unit =
+    if (released.nonEmpty) {
       val sc = spark.sparkContext
       val registered = sc.getPersistentRDDs
-      ids.flatMap(registered.get).foreach(_.unpersist(blocking = false))
-      if (sc.getCheckpointDir.isDefined)
-        ids.foreach(org.apache.spark.graft.ReliableCheckpoints.clean(sc, _))
+      released.flatMap { case (id, _) => registered.get(id) }
+        .foreach(_.unpersist(blocking = false))
+      released.flatMap(_._2).foreach { file =>
+        val path = new org.apache.hadoop.fs.Path(file)
+        path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
+      }
     }
 
   /** [[pathSnapshotKey]] of one testdata table under `dir`. */

@@ -137,61 +137,73 @@ object TradeGen {
     }
     val pScale = perClass(cls)(ac => priceRanges(ac)._3)
 
-    ids
+    // four selects, not a withColumn per field (each re-analyzes the
+    // growing plan): the id-derived draws, then what reads them (notional,
+    // status, settlement date), then the fees, then the fee total, the
+    // flags and the final column order. `_u7`, `_sd` and the three fee
+    // draws are materialized columns the later stages read and drop.
+    val drawn = ids.select(
       // 12-char unique key (reference: uuid4()[:12]); id-based rather than
       // random so the key is unique by construction and reproducible
       // lpad TRUNCATES past its width — an id ≥ 1e11 (12+ digits, the
       // 100 TB row-count regime) would collide with the id holding its
       // first 11 digits; ids past the zero-pad range keep their full
       // digits, preserving uniqueness at any scale
-      .withColumn("trade_id", concat(lit("T"),
+      concat(lit("T"),
         when(length(col("id").cast("string")) > 11,
           col("id").cast("string"))
-          .otherwise(lpad(col("id"), 11, "0"))))
-      .withColumn("asset_class", perClass(cls)(identity))
-      .withColumn("instrument", {
+          .otherwise(lpad(col("id"), 11, "0"))).as("trade_id"),
+      perClass(cls)(identity).as("asset_class"), {
         // nested literal array: [class][instrument-slot], both probes O(1)
         val universe = array(assetClasses.map(ac =>
           array(instruments(ac).map(lit): _*)): _*)
         val size = perClass(cls)(ac => instruments(ac).size)
         element_at(element_at(universe, cls),
           (u(s + 2) * size).cast("int") + 1)
-      })
-      .withColumn("side", pick(s + 3, Seq("Buy", "Sell")))
-      .withColumn("quantity", ((u(s + 4) * qSpan).cast("long") + qLo)
-        .cast("double"))
-      .withColumn("price",
-        round((u(s + 5) * pSpan + pLo) * pScale, 0) / pScale)
-      .withColumn("notional_value", round(col("quantity") * col("price"), 2))
-      .withColumn("counterparty", pick(s + 6, counterparties))
-      .withColumn("_u7", u(s + 7))
-      .withColumn("status", statusExpr)
-      .drop("_u7")
-      .withColumn("settlement_venue", pick(s + 8, settlementVenues))
-      .withColumn("trade_date",
-        date_sub(to_date(lit(baseDate)), randint(s + 9, 0, 3).cast("int")))
-      .withColumn("settlement_date",
-        date_add(col("trade_date"),
-          perClass(cls)(settlementDays).cast("int")))
-      .withColumn("brokerage_fee",
-        round(col("notional_value") * uniform(s + 10, 0.0001, 0.0015), 2))
-      .withColumn("clearing_fee",
-        round(col("notional_value") * uniform(s + 11, 0.00005, 0.0003), 2))
-      .withColumn("exchange_fee",
-        round(col("notional_value") * uniform(s + 12, 0.00003, 0.0002), 2))
-      .withColumn("total_fees",
-        round(col("brokerage_fee") + col("clearing_fee") + col("exchange_fee"), 2))
-      .withColumn("priority",
-        when(col("status").contains("Break") || col("notional_value") > 1000000.0,
-          "High").otherwise("Normal"))
-      .withColumn("stp_eligible", !col("status").contains("Break"))
-      .withColumn("timestamp", timestamp_micros(
+      }.as("instrument"),
+      pick(s + 3, Seq("Buy", "Sell")).as("side"),
+      ((u(s + 4) * qSpan).cast("long") + qLo).cast("double").as("quantity"),
+      (round((u(s + 5) * pSpan + pLo) * pScale, 0) / pScale).as("price"),
+      pick(s + 6, counterparties).as("counterparty"),
+      u(s + 7).as("_u7"),
+      pick(s + 8, settlementVenues).as("settlement_venue"),
+      date_sub(to_date(lit(baseDate)), randint(s + 9, 0, 3).cast("int"))
+        .as("trade_date"),
+      perClass(cls)(settlementDays).cast("int").as("_sd"),
+      uniform(s + 10, 0.0001, 0.0015).as("_fb"),
+      uniform(s + 11, 0.00005, 0.0003).as("_fc"),
+      uniform(s + 12, 0.00003, 0.0002).as("_fe"),
+      timestamp_micros(
         // epoch derived in UTC explicitly — java.sql.Timestamp.valueOf reads
         // the JVM default zone, which would shift fixtures across hosts
         lit(java.time.LocalDate.parse(baseDate).atTime(9, 0)
           .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-          + col("id") * 900000L + (u(s + 13) * 600000).cast("long")))
-      .withColumn("processed_by", pick(s + 14, analystNames))
-      .drop("id")
+          + col("id") * 900000L + (u(s + 13) * 600000).cast("long"))
+        .as("timestamp"),
+      pick(s + 14, analystNames).as("processed_by"))
+
+    val priced = drawn.select(col("*"),
+      round(col("quantity") * col("price"), 2).as("notional_value"),
+      statusExpr.as("status"),
+      date_add(col("trade_date"), col("_sd")).as("settlement_date"))
+
+    val feed = priced.select(col("*"),
+      round(col("notional_value") * col("_fb"), 2).as("brokerage_fee"),
+      round(col("notional_value") * col("_fc"), 2).as("clearing_fee"),
+      round(col("notional_value") * col("_fe"), 2).as("exchange_fee"))
+
+    feed.select(
+      col("trade_id"), col("asset_class"), col("instrument"), col("side"),
+      col("quantity"), col("price"), col("notional_value"),
+      col("counterparty"), col("status"), col("settlement_venue"),
+      col("trade_date"), col("settlement_date"), col("brokerage_fee"),
+      col("clearing_fee"), col("exchange_fee"),
+      round(col("brokerage_fee") + col("clearing_fee") + col("exchange_fee"),
+        2).as("total_fees"),
+      when(col("status").contains("Break") ||
+        col("notional_value") > 1000000.0, "High").otherwise("Normal")
+        .as("priority"),
+      (!col("status").contains("Break")).as("stp_eligible"),
+      col("timestamp"), col("processed_by"))
   }
 }

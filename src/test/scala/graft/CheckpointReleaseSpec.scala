@@ -16,6 +16,15 @@ class CheckpointReleaseSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Names of the `rdd-<id>` checkpoint dirs anywhere under `dir`. */
+  private def rddDirsUnder(dir: String): Set[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f +: f.listFiles().toSeq.flatMap(walk)
+      else Seq.empty
+    walk(new java.io.File(dir)).map(_.getName)
+      .filter(_.startsWith("rdd-")).toSet
+  }
+
   test("releaseCheckpoints drops a localCheckpoint's registered RDD") {
     Tables.releaseCheckpoints(spark) // clean slate from earlier suites
     val before = registeredRdds
@@ -75,13 +84,7 @@ class CheckpointReleaseSpec extends SparkSpec {
       "keeps its files") {
     Tables.releaseCheckpoints(spark)
     val dir = tmpDir("reliable-pins")
-    def rddDirs: Set[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f +: f.listFiles().toSeq.flatMap(walk)
-        else Seq.empty
-      walk(new java.io.File(dir)).map(_.getName)
-        .filter(_.startsWith("rdd-")).toSet
-    }
+    def rddDirs: Set[String] = rddDirsUnder(dir)
     withCheckpointDir(dir) {
       val a = Tables.pin(spark.range(100).toDF("id"))
       val aDirs = rddDirs
@@ -101,6 +104,29 @@ class CheckpointReleaseSpec extends SparkSpec {
           "and keep the caller's own checkpoint")
       assert(own.count() === 30)
     }
+  }
+
+  test("a reliable pin released after its checkpoint dir was restored " +
+      "still deletes its own rdd-<id> files; a caller's own reliable " +
+      "checkpoint keeps its files") {
+    Tables.releaseCheckpoints(spark)
+    val dir = tmpDir("moved-pins")
+    def rddDirs: Set[String] = rddDirsUnder(dir)
+    val (pinned, own) = withCheckpointDir(dir) {
+      val p = Tables.pin(spark.range(40).toDF("id"))
+      val pDirs = rddDirs
+      val o = spark.range(20).toDF("id").checkpoint(true)
+      assert(pDirs.size === 1 && (rddDirs -- pDirs).size === 1,
+        s"one rdd-<id> dir per reliable checkpoint: $rddDirs")
+      (pDirs, o)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "the shared context's checkpoint dir must be restored")
+    Tables.releaseCheckpoints(spark)
+    assert((rddDirs intersect pinned).isEmpty,
+      s"the released pin's files outlived the dir change: $pinned")
+    assert(rddDirs.size === 1, "the caller's own checkpoint lost its files")
+    assert(own.count() === 20)
   }
 
   test("Tables.pin is the only pin in src/main: outside Tables.scala no " +

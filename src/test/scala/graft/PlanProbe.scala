@@ -102,6 +102,23 @@ object PlanProbe {
       case _ => false
     }
 
+  /** True when the stage `p` heads, down to the nearest shuffle, only
+    * aggregates, projects, filters and sorts rows: the work a coalesce to
+    * one task over `p` pulls into that task is merging the shuffled rows
+    * of an aggregate, not a window, join or scan. Walks an executed
+    * adaptive plan (query stages, shuffle reads) or a pre-execution one.
+    */
+  def aggregationToShuffle(p: SparkPlan): Boolean = p match {
+    case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike |
+        _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec |
+        _: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec |
+        _: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec => true
+    case _: BaseAggregateExec | _: ProjectExec | _: FilterExec | _: SortExec |
+        _: WholeStageCodegenExec | _: InputAdapter =>
+      aggregationToShuffle(p.children.head)
+    case _ => false
+  }
+
   /** The query's physical plan with an adaptive root unwrapped: under
     * AQE (the session default) `executedPlan` is an
     * `AdaptiveSparkPlanExec` LEAF, so a bare `collect` would see no
