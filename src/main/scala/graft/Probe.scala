@@ -448,7 +448,7 @@ object Probe {
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val exact = Tables.boundedCollect(docsAll
         .select(col("source"),
-          explode(split(trim(col("text")), " ")).as("token"))
+          explode(Tables.tokens(col("text"))).as("token"))
         .groupBy("source").agg(countDistinct("token").as("n")),
         1 << 16, "exact cardinality rows")
         .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -10,6 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  private type Face = (SparkSession, String) => DataFrame
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Reference's flagship question: top-10 counterparty exposure
     * (dashboard.py:164-165) → top-10 users by total event value.
@@ -22,27 +24,42 @@ object SparkEntry {
     * (a root sort of a grouped aggregate over a shuffle runs in one
     * partition).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Face] =
     faces.map { case (name, face) =>
       name -> ((s: SparkSession, dir: String) =>
         org.apache.spark.sql.graft.FinalSort(face(s, dir)))
     }
 
+  /** The operator families, each as (name, its faces, their DuckDB oracle
+    * twins): the one list behind [[faces]], [[oracleSql]] and `Bench`'s
+    * per-family subtotals.
+    */
+  private[graft] def families: Seq[(String, Map[String, Face],
+      Map[String, String])] = Seq(
+    ("events", ops.EventOps.queries, ops.EventOps.oracle),
+    ("relational", ops.RelationalOps.queries, ops.RelationalOps.oracle),
+    ("text", ops.TextOps.queries, ops.TextOps.oracle),
+    ("dedup", ops.DedupOps.queries, ops.DedupOps.oracle),
+    ("similarity", ops.SimilarityOps.queries, ops.SimilarityOps.oracle),
+    ("multimodal", ops.MultimodalOps.queries, ops.MultimodalOps.oracle),
+    ("temporal", ops.TemporalOps.queries, ops.TemporalOps.oracle),
+    ("curation", ops.CurationOps.queries, ops.CurationOps.oracle),
+    ("search", ops.SearchOps.queries, ops.SearchOps.oracle),
+    ("stat", ops.StatOps.queries, ops.StatOps.oracle),
+    ("span", ops.SpanOps.queries, ops.SpanOps.oracle),
+    ("scrub", ops.ScrubOps.queries, ops.ScrubOps.oracle),
+    ("bpe", ops.BpeOps.queries, ops.BpeOps.oracle))
+
   /** The operator groups' own faces, merged, without the catalog rule. */
-  private[graft] def faces: Map[String, (SparkSession, String) => DataFrame] =
-    ops.EventOps.queries ++ ops.RelationalOps.queries ++
-      ops.TextOps.queries ++ ops.DedupOps.queries ++
-      ops.SimilarityOps.queries ++ ops.MultimodalOps.queries ++
-      ops.TemporalOps.queries ++ ops.CurationOps.queries ++
-      ops.SearchOps.queries ++ ops.StatOps.queries ++
-      ops.SpanOps.queries ++ ops.ScrubOps.queries ++ ops.BpeOps.queries
+  private[graft] def faces: Map[String, Face] =
+    families.map(_._2).reduce(_ ++ _)
 
   /** The catalog query a name or prefix stands for: the exact key first,
     * then the `qNN_` boundary match (`q10` is `q10_json_props`, not
     * `q100_…`/`q101_…`), then a unique prefix. No match or an ambiguous
     * prefix is an error.
     */
-  def resolve(prefix: String): (String, (SparkSession, String) => DataFrame) = {
+  def resolve(prefix: String): (String, Face) = {
     val qs = queries
     qs.get(prefix).map(prefix -> _).getOrElse {
       val hits = qs.toSeq.filter(_._1.startsWith(prefix)).sortBy(_._1)
@@ -60,11 +77,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → weaker rows-only check.
     */
-  def oracleSql: Map[String, String] =
-    ops.EventOps.oracle ++ ops.RelationalOps.oracle ++
-      ops.TextOps.oracle ++ ops.DedupOps.oracle ++
-      ops.SimilarityOps.oracle ++ ops.MultimodalOps.oracle ++
-      ops.TemporalOps.oracle ++ ops.CurationOps.oracle ++
-      ops.SearchOps.oracle ++ ops.StatOps.oracle ++
-      ops.SpanOps.oracle ++ ops.ScrubOps.oracle ++ ops.BpeOps.oracle
+  def oracleSql: Map[String, String] = families.map(_._3).reduce(_ ++ _)
 }

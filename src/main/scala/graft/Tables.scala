@@ -111,6 +111,12 @@ object Tables {
   def sizeOrNull(c: Column): Column =
     when(c.isNull, lit(null)).otherwise(size(c))
 
+  /** The Spark-side whitespace tokenizer every text operator shares: trim,
+    * then split on single spaces. The DuckDB oracle twins spell the same
+    * thing as `string_split(trim(text), ' ')`.
+    */
+  def tokens(text: Column): Column = split(trim(text), " ")
+
   /** Deterministic LCG bucket of an id column, overflow-free for EVERY
     * 64-bit id: reduce mod `m` FIRST (floor-mod, so negative ids get a
     * well-defined bucket too), then run the affine step on the bounded

@@ -1,22 +1,70 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types._
 
-/** Registration for the graft native expressions.
-  *
-  * Two paths to the same functions:
-  *  - [[GraftFunctions.ensureRegistered]] — runtime registration into the
-  *    session's function registry; every graft operator calls it, so the
-  *    library works against any plain SparkSession (the driver builds its
-  *    own session without extra config).
-  *  - [[GraftExtensions]] — `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    for users who want the functions available in pure `spark.sql(...)`
-  *    from session start.
+/** The graft native expressions, two ways in:
+  *  - the typed constructors ([[vecDot]], [[pqEncode]], [[bloomAgg]], …),
+  *    each a `Column` built straight from its expression. Every operator
+  *    uses these, so graft writes nothing into the caller's function
+  *    registry and runs on any plain session, a fresh one included.
+  *  - the `graft_*` names ([[builders]]) for SQL text only, registered by
+  *    [[ensureRegistered]] at run time or by [[GraftExtensions]]
+  *    (`spark.sql.extensions`) from session start.
   */
 object GraftFunctions {
+
+  // The typed constructors. minK, topKIdsByScore, topKRowsByScore and
+  // bloomAgg are aggregates. A codebook (cellDists, pqEncode, pqError) is a
+  // plan-time constant the kernel embeds once instead of reading per row.
+  def minhashBandKeys(shingles: Column, bands: Int): Column =
+    column(MinHashBandKeys(expression(shingles), bands))
+  def simhash64(tokenHashes: Column): Column =
+    column(SimHash64(expression(tokenHashes)))
+  def vecDot(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
+  def editLb(a: Column, b: Column): Column =
+    column(EditLowerBound(expression(a), expression(b)))
+  def editHist(text: Column): Column = column(CodePointHist32(expression(text)))
+  def histLb(a: Column, b: Column): Column =
+    column(HistL1LowerBound(expression(a), expression(b)))
+  def codePoints(text: Column): Column = column(CodePoints(expression(text)))
+  def shingleHashes(text: Column, k: Int): Column =
+    column(ShingleHashes(expression(text), k))
+  def winnowPositions(hashes: Column, w: Int): Column =
+    column(WinnowPositions(expression(hashes), w))
+  def bloomContains(filter: Column, key: Column): Column =
+    column(BloomMightContain(expression(filter), expression(key)))
+  def cellDists(v: Column, cells: Array[Array[Double]]): Column =
+    column(CellDistances(expression(v), rows(cells)))
+  def pqEncode(v: Column, codebook: Array[Array[Double]], subDim: Int): Column =
+    column(PqEncode(expression(v), subDim, rows(codebook)))
+  def pqError(v: Column, codebook: Array[Array[Double]], subDim: Int): Column =
+    column(PqError(expression(v), subDim, rows(codebook)))
+  def minK(v: Column, k: Int): Column = aggregate(MinKLongs(expression(v), k))
+  def topKIdsByScore(score: Column, id: Column, k: Int,
+      asc: Boolean): Column =
+    aggregate(TopKIdsByScore(expression(score), expression(id), k, asc))
+  def topKRowsByScore(score: Column, id: Column, k: Int,
+      asc: Boolean): Column =
+    aggregate(TopKRowsByScore(expression(score), expression(id), None, k, asc))
+  def topKRowsByScore(score: Column, id: Column, payload: Column, k: Int,
+      asc: Boolean): Column =
+    aggregate(TopKRowsByScore(expression(score), expression(id),
+      Some(expression(payload)), k, asc))
+  def bloomAgg(key: Column, nBits: Int, k: Int): Column =
+    aggregate(BloomLongs(expression(key), nBits, k))
+
+  private def aggregate(f: TypedImperativeAggregate[_]): Column =
+    column(f.toAggregateExpression())
+  private def rows(cb: Array[Array[Double]]): Seq[Seq[Double]] =
+    cb.map(_.toSeq).toSeq
 
   /** Named-arity guard: wrong-arity SQL calls get "$fn expects N
     * arguments, got M" instead of a bare IndexOutOfBoundsException from a
@@ -55,63 +103,49 @@ object GraftFunctions {
         other.map(_.sql).getOrElse("nothing"))
   }
 
+  /** One SQL call's arguments, read with its function's name in errors. */
+  private final class Args(fn: String, es: Seq[Expression]) {
+    def apply(i: Int): Expression = es(i)
+    def int(i: Int): Int = intArg(fn, es, i)
+    def bool(i: Int): Boolean = boolArg(fn, es, i)
+    def codebook(i: Int): Seq[Seq[Double]] = cbArg(fn, es, i)
+  }
+
+  private def named(fn: String, n: Int)(build: Args => Expression)
+      : (String, Seq[Expression] => Expression) =
+    fn -> (es => arity(fn, es, n)(build(new Args(fn, es))))
+
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_minhash_band_keys" ->
-      (es => arity("graft_minhash_band_keys", es, 2)(
-        MinHashBandKeys(es.head, intArg("graft_minhash_band_keys", es, 1)))),
-    "graft_simhash64" ->
-      (es => arity("graft_simhash64", es, 1)(SimHash64(es.head))),
-    "graft_min_k" ->
-      (es => arity("graft_min_k", es, 2)(
-        MinKLongs(es.head, intArg("graft_min_k", es, 1))
-          .toAggregateExpression())),
-    "graft_topk_ids" ->
-      (es => arity("graft_topk_ids", es, 4)(
-        TopKIdsByScore(es.head, es(1), intArg("graft_topk_ids", es, 2),
-          boolArg("graft_topk_ids", es, 3)).toAggregateExpression())),
+    named("graft_minhash_band_keys", 2)(a => MinHashBandKeys(a(0), a.int(1))),
+    named("graft_simhash64", 1)(a => SimHash64(a(0))),
+    named("graft_min_k", 2)(a =>
+      MinKLongs(a(0), a.int(1)).toAggregateExpression()),
+    named("graft_topk_ids", 4)(a => TopKIdsByScore(a(0), a(1), a.int(2),
+      a.bool(3)).toAggregateExpression()),
     "graft_topk_rows" ->
       (es => {
         // two arities: (score, id, k, asc) or (score, id, payload, k, asc)
         if (es.length != 4 && es.length != 5)
           throw new IllegalArgumentException(
             s"graft_topk_rows expects 4 or 5 arguments, got ${es.length}")
-        val payload = if (es.length == 5) Some(es(2)) else None
+        val a = new Args("graft_topk_rows", es)
         val base = es.length - 2
-        TopKRowsByScore(es.head, es(1), payload,
-          intArg("graft_topk_rows", es, base),
-          boolArg("graft_topk_rows", es, base + 1)).toAggregateExpression()
+        TopKRowsByScore(a(0), a(1), if (es.length == 5) Some(a(2)) else None,
+          a.int(base), a.bool(base + 1)).toAggregateExpression()
       }),
-    "graft_vec_dot" ->
-      (es => arity("graft_vec_dot", es, 2)(VecDot(es.head, es(1)))),
-    "graft_edit_lb" ->
-      (es => arity("graft_edit_lb", es, 2)(EditLowerBound(es.head, es(1)))),
-    "graft_edit_hist" ->
-      (es => arity("graft_edit_hist", es, 1)(CodePointHist32(es.head))),
-    "graft_hist_lb" ->
-      (es => arity("graft_hist_lb", es, 2)(HistL1LowerBound(es.head, es(1)))),
-    "graft_code_points" ->
-      (es => arity("graft_code_points", es, 1)(CodePoints(es.head))),
-    "graft_shingle_hashes" ->
-      (es => arity("graft_shingle_hashes", es, 2)(
-        ShingleHashes(es.head, intArg("graft_shingle_hashes", es, 1)))),
-    "graft_winnow_positions" ->
-      (es => arity("graft_winnow_positions", es, 2)(
-        WinnowPositions(es.head, intArg("graft_winnow_positions", es, 1)))),
-    "graft_bloom_agg" ->
-      (es => arity("graft_bloom_agg", es, 3)(
-        BloomLongs(es.head, intArg("graft_bloom_agg", es, 1),
-          intArg("graft_bloom_agg", es, 2)).toAggregateExpression())),
-    "graft_bloom_contains" ->
-      (es => arity("graft_bloom_contains", es, 2)(
-        BloomMightContain(es.head, es(1)))),
-    "graft_cell_dists" -> (es => arity("graft_cell_dists", es, 2)(
-      CellDistances(es.head, cbArg("graft_cell_dists", es, 1)))),
-    "graft_pq_encode" -> (es => arity("graft_pq_encode", es, 3)(
-      PqEncode(es.head,
-        intArg("graft_pq_encode", es, 2), cbArg("graft_pq_encode", es, 1)))),
-    "graft_pq_error" -> (es => arity("graft_pq_error", es, 3)(
-      PqError(es.head,
-        intArg("graft_pq_error", es, 2), cbArg("graft_pq_error", es, 1)))))
+    named("graft_vec_dot", 2)(a => VecDot(a(0), a(1))),
+    named("graft_edit_lb", 2)(a => EditLowerBound(a(0), a(1))),
+    named("graft_edit_hist", 1)(a => CodePointHist32(a(0))),
+    named("graft_hist_lb", 2)(a => HistL1LowerBound(a(0), a(1))),
+    named("graft_code_points", 1)(a => CodePoints(a(0))),
+    named("graft_shingle_hashes", 2)(a => ShingleHashes(a(0), a.int(1))),
+    named("graft_winnow_positions", 2)(a => WinnowPositions(a(0), a.int(1))),
+    named("graft_bloom_agg", 3)(a =>
+      BloomLongs(a(0), a.int(1), a.int(2)).toAggregateExpression()),
+    named("graft_bloom_contains", 2)(a => BloomMightContain(a(0), a(1))),
+    named("graft_cell_dists", 2)(a => CellDistances(a(0), a.codebook(1))),
+    named("graft_pq_encode", 3)(a => PqEncode(a(0), a.int(2), a.codebook(1))),
+    named("graft_pq_error", 3)(a => PqError(a(0), a.int(2), a.codebook(1))))
 
   /** Extract an array<array<double>> codebook that is a Literal OR any
     * foldable expression (SQL text `array(array(0.1d, …))` is a
@@ -124,10 +158,7 @@ object GraftFunctions {
     * row.
     */
   private def cbArg(fn: String, es: Seq[Expression], i: Int): Seq[Seq[Double]] = {
-    val cbType = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))
-    def fromArrayData(ad: org.apache.spark.sql.catalyst.util.ArrayData) =
+    def fromArrayData(ad: ArrayData) =
       (0 until ad.numElements()).map { r =>
         // a null INNER array (array(array(1.0d), CAST(NULL AS
         // array<double>))) passes the outer sameType/non-null checks —
@@ -139,16 +170,13 @@ object GraftFunctions {
         row.toDoubleArray().toSeq
       }
     es.lift(i) match {
-      case Some(Literal(ad: org.apache.spark.sql.catalyst.util.ArrayData,
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType, _), _))) =>
+      case Some(Literal(ad: ArrayData,
+          ArrayType(ArrayType(DoubleType, _), _))) =>
         fromArrayData(ad)
-      case Some(e) if e.foldable && org.apache.spark.sql.catalyst.types
-          .DataTypeUtils.sameType(e.dataType, cbType) =>
+      case Some(e) if e.foldable && DataTypeUtils.sameType(e.dataType,
+          ArrayType(ArrayType(DoubleType))) =>
         e.eval() match {
-          case ad: org.apache.spark.sql.catalyst.util.ArrayData =>
-            fromArrayData(ad)
+          case ad: ArrayData => fromArrayData(ad)
           case _ => throw new IllegalArgumentException(
             s"$fn: argument ${i + 1} evaluated to null — the codebook " +
               "must be a non-null array<array<double>> constant")

@@ -16,9 +16,9 @@ import org.apache.spark.sql.types._
   * makes a plain UDF slow) — and implements real `doGenCode`, so the
   * kernels stay inside whole-stage codegen (FunctionsSpec runs them with
   * codegen fallback disabled). They are deterministic, null-safe, and
-  * foldable only through the standard Catalyst machinery. Registered via
-  * [[GraftFunctions.ensureRegistered]] (runtime) or [[GraftExtensions]]
-  * (config: spark.sql.extensions=graft.functions.GraftExtensions).
+  * foldable only through the standard Catalyst machinery. Operators build
+  * them as Columns through the typed constructors in [[GraftFunctions]];
+  * SQL text reaches them by their `graft_*` names (see [[GraftFunctions]]).
   */
 object MinHashBandKeys {
   val NumHashes = 64

@@ -26,7 +26,7 @@ object BpeOps {
   /** One corpus pass: (word, freq) over whitespace tokens. */
   def wordFreqOn(docsDf: DataFrame): DataFrame =
     docsDf
-      .select(explode(split(trim(col("text")), " ")).as("word"))
+      .select(explode(Tables.tokens(col("text"))).as("word"))
       .where(length(col("word")) > 0)
       .groupBy("word")
       .agg(count(lit(1)).as("freq"))

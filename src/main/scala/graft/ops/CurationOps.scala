@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.Tables.tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,8 +23,6 @@ object CurationOps {
 
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "embeddings")
-
-  private val toks: Column = split(trim(col("text")), " ")
 
   // ---- q56: n-gram decontamination ----------------------------------------
 
@@ -82,7 +81,8 @@ object CurationOps {
       .orElse(stats.map(_.dupFraction > 0.5))
       .getOrElse(DedupOps.dupFraction(docsDf) > 0.5)
     if (!contracted) {
-      val withSh = docsDf.withColumn("sh", array_distinct(shingles5(toks)))
+      val withSh = docsDf.withColumn("sh",
+        array_distinct(shingles5(tokens(col("text")))))
       val benchNgrams = broadcast(
         withSh.filter(isBenchmark)
           .select(explode(col("sh")).as("ngram")).distinct())
@@ -102,7 +102,7 @@ object CurationOps {
       def distinctTexts(df: DataFrame): DataFrame = df
         .select(col("__tk"), col("text"))
         .groupBy("__tk").agg(first(col("text")).as("text"))
-        .withColumn("sh", array_distinct(shingles5(toks)))
+        .withColumn("sh", array_distinct(shingles5(tokens(col("text")))))
       val benchNgrams = broadcast(
         distinctTexts(keyed.filter(isBenchmark))
           .select(explode(col("sh")).as("ngram")).distinct())
@@ -266,7 +266,6 @@ object CurationOps {
     * the mask for more).
     */
   def sourceOverlapOn(docsDf0: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf0.sparkSession)
     // a NULL source has no overlap identity: it cannot name a bitmask
     // slot (and would NPE the driver-side sort below) — drop such rows
     // up front; provenance-less docs are a q53/q84 audit concern, not an
@@ -296,7 +295,7 @@ object CurationOps {
       case (acc, (s2, i)) => acc.when(col("source") === s2, lit(1L << i))
     }
     val masks = docsDf
-      .withColumn("toks", toks)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n", size(col("toks")))
       .filter(col("n") >= 5)
       .withColumn("tf31",
@@ -447,7 +446,7 @@ object CurationOps {
     }.otherwise(1.0)
     val out = docsDf
       .select(col("doc_id"), col("source"),
-        Tables.sizeOrNull(toks).as("n_toks"),
+        Tables.sizeOrNull(tokens(col("text"))).as("n_toks"),
         factor.as("f"))
       // integer centi-copies: base = cents div 100 whole copies + 1 when
       // hash(doc_id) < cents % 100. Deriving the base from the SAME
@@ -579,7 +578,8 @@ object CurationOps {
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docsDf
-      .select(col("doc_id"), col("source"), Tables.sizeOrNull(toks).as("n_toks"))
+      .select(col("doc_id"), col("source"),
+        Tables.sizeOrNull(tokens(col("text"))).as("n_toks"))
       .withColumn("cum", sum(col("n_toks")).over(w))
       // the pack a doc STARTS in: floor(preceding-tokens / budget)
       .withColumn("pack_id",
@@ -613,7 +613,7 @@ object CurationOps {
   def temperatureMixOn(docsDf: DataFrame, alpha: Double = 0.3): DataFrame =
     temperatureMixFromCounts(
       docsDf.groupBy("source")
-        .agg(sum(Tables.sizeOrNull(toks)).as("n_tokens")), alpha)
+        .agg(sum(Tables.sizeOrNull(tokens(col("text")))).as("n_tokens")), alpha)
 
   /** The update half of q115 over any (source, n_tokens) contraction —
     * one definition for the raw face and the streaming governor (which
@@ -902,7 +902,7 @@ object CurationOps {
     import spark.implicits._
     val d = docsDf
       .withColumn("norm", DedupOps.normText)
-      .withColumn("n_toks", Tables.sizeOrNull(toks)) // the one tokenizer
+      .withColumn("n_toks", Tables.sizeOrNull(tokens(col("text"))))
     val byNorm = Window.partitionBy("norm")
     val evalLcg = Tables.lcgBucket(col("doc_id"), 48271L, 7L, 100L)
     val scored = TextOps.scoredDocsOn(d) // per-row arithmetic only
@@ -1005,7 +1005,7 @@ object CurationOps {
       // sizeOrNull, not raw size: a null-text doc must count NULL toks
       // in the oracle-compared stage sums under EVERY conf (legacy
       // sizeOfNull would read -1 — the r15 self-review finding)
-      .withColumn("n_toks", Tables.sizeOrNull(toks)))
+      .withColumn("n_toks", Tables.sizeOrNull(tokens(col("text")))))
     val quality = staged(TextOps.scoredDocsOn(d)
       .filter(col("score") >= FunnelQualityBar)
       .select(d.columns.map(col): _*))
@@ -1096,7 +1096,7 @@ object CurationOps {
     import org.apache.spark.sql.expressions.Window
     val d = incoming
       .withColumn("norm", DedupOps.normText)
-      .withColumn("n_toks", Tables.sizeOrNull(toks))
+      .withColumn("n_toks", Tables.sizeOrNull(tokens(col("text"))))
     val nov = SpanOps.noveltyAgainstKeys(
       incoming.select("doc_id", "text"), refShingleKeys, FunnelShingleK)
       .select(col("doc_id"), col("n_distinct_shingles"), col("n_novel"))
@@ -1244,7 +1244,7 @@ object CurationOps {
 
   /** One (source, sketch) row per source — the store's row format. */
   private def sourceSketches(docsDf: DataFrame): DataFrame =
-    docsDf.select(col("source"), explode(toks).as("token"))
+    docsDf.select(col("source"), explode(tokens(col("text"))).as("token"))
       .groupBy("source")
       .agg(expr("hll_sketch_agg(token, 14)").as("sketch"))
 
@@ -1495,7 +1495,7 @@ object CurationOps {
   /** `docsDf` needs (doc_id, text, n_chars). */
   def hashSplitOn(docsDf: DataFrame): DataFrame = {
     val agg = withHashSplit(docsDf, "graft-split", Q116Splits)
-      .select(col("split"), Tables.sizeOrNull(toks).as("n_toks"),
+      .select(col("split"), Tables.sizeOrNull(tokens(col("text"))).as("n_toks"),
         col("n_chars"))
       .groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
@@ -1645,7 +1645,7 @@ object CurationOps {
         sum(when(isTargetSource, col("c")).otherwise(lit(0L))).as("n_tgt"))
     val llr = dsirLlr(counts)
     batchDf
-      .select(col("doc_id"), explode(toks).as("token"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
       .join(llr, Seq("token"))
       .groupBy("doc_id")
@@ -1684,7 +1684,7 @@ object CurationOps {
     // batch side apply, so raw ≡ store holds on multi-spaced text too
     val tok = docsDf
       .select(col("doc_id"), isTarget.as("is_target"),
-        explode(toks).as("tok0"))
+        explode(tokens(col("text"))).as("tok0"))
       .filter(length(col("tok0")) > 0)
       .select(col("doc_id"), col("is_target"), featOf(col("tok0")).as("token"))
     val counts = tok.groupBy("token")
@@ -1813,7 +1813,8 @@ object CurationOps {
     * q130, with no collision caveat.
     */
   def heldoutNgramsOn(docsDf: DataFrame): DataFrame =
-    docsDf.select(explode(array_distinct(shingles5(toks))).as("ngram"))
+    docsDf.select(
+      explode(array_distinct(shingles5(tokens(col("text"))))).as("ngram"))
       .distinct()
 
   /** q130's per-doc audit of an EXTERNAL train frame against a reference
@@ -1828,7 +1829,8 @@ object CurationOps {
   def decontaminationAgainstNgrams(trainDf: DataFrame,
       ngrams: DataFrame): DataFrame = {
     val refNgrams = ngrams.select("ngram").distinct()
-    val withSh = trainDf.withColumn("sh", array_distinct(shingles5(toks)))
+    val withSh = trainDf.withColumn("sh",
+      array_distinct(shingles5(tokens(col("text")))))
     val train = withSh.select(col("doc_id"), col("source"),
       Tables.sizeOrNull(col("sh")).as("n_5grams"), col("sh"))
     val shared = train

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,10 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
+  private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
-  }
 
   private[graft] val normText: Column =
     regexp_replace(lower(trim(col("text"))), "\\s+", " ")
@@ -59,7 +58,7 @@ object DedupOps {
   private def tokenizedFrame(docsDf: DataFrame): DataFrame =
     docsDf
       .select(col("doc_id"), col("lang"),
-        array_distinct(split(trim(col("text")), " ")).as("toks"))
+        array_distinct(Tables.tokens(col("text"))).as("toks"))
       .withColumn("n_toks", size(col("toks")))
 
   /** Exact distinct-word Jaccard near-dup pairs (J ≥ 0.9), with a one-probe
@@ -364,7 +363,7 @@ object DedupOps {
     *    (Without these, q39's near-pair count inflated ~20×/~4×.)
     */
   private[ops] def tokFp(t: Column, base: Long, seed: Long): Column =
-    aggregate(call_function("graft_code_points", t), lit(seed),
+    aggregate(GraftFunctions.codePoints(t), lit(seed),
       (acc, c) => (acc * lit(base) + c) % lit(P),
       a => (a * a + lit(base)) % lit(P))
 
@@ -381,11 +380,8 @@ object DedupOps {
     * corpus only perturbs a Jaccard estimate by one shingle).
     */
   private def signatures(docsDf: DataFrame): DataFrame = {
-    // the fingerprint/minhash kernels must resolve when the caller enters
-    // through the DataFrame API (the catalog path registers via docs())
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
-      .withColumn("toks", split(trim(col("text")), " "))
+      .withColumn("toks", Tables.tokens(col("text")))
       .withColumn("n_tokens", size(col("toks")))
       .filter(col("n_tokens") >= 3)
       .withColumn("tfs", transform(col("toks"), t =>
@@ -398,7 +394,7 @@ object DedupOps {
       // native kernel: 64 affine-permutation minima folded to 16 band keys
       // in one primitive pass (graft.functions.MinHashBandKeys)
       .withColumn("bh",
-        call_function("graft_minhash_band_keys", col("shs"), lit(Bands)))
+        GraftFunctions.minhashBandKeys(col("shs"), Bands))
       .select("doc_id", "shs", "bh")
   }
 
@@ -548,7 +544,6 @@ object DedupOps {
     */
   private def editPairsList(d0: DataFrame, maxDist: Int, band: Int,
       screen: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(d0.sparkSession)
     // r16 (guide §1.2 "per-task work"): the counting-filter bound used to
     // run as graft_edit_lb(ta, tb) — re-walking BOTH texts' code points
     // per candidate pair (the join's dominant term: ~5·10⁵ length-passing
@@ -559,7 +554,7 @@ object DedupOps {
     // to edit_lb by construction (FunctionsSpec pins the identity), so
     // the surviving pair set and every dist are unchanged.
     val dh = d0.withColumn("hist",
-      call_function("graft_edit_hist", col("text")))
+      GraftFunctions.editHist(col("text")))
     val confirmed =
       if (screen) {
         val cands = lshCandidates(signatures(d0))
@@ -584,7 +579,7 @@ object DedupOps {
       }
     confirmed
       .filter(abs(col("ca") - col("cb")) <= maxDist)
-      .filter(call_function("graft_hist_lb", col("ha"), col("hb")) <= maxDist)
+      .filter(GraftFunctions.histLb(col("ha"), col("hb")) <= maxDist)
       .withColumn("dist", levenshtein(col("ta"), col("tb"), maxDist))
       .filter(col("dist") >= 0)
       .select(col("a_id"), col("b_id"), col("dist").cast("long").as("dist"))
@@ -609,16 +604,15 @@ object DedupOps {
     * which cancels in every Hamming distance).
     */
   private def simhashed(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
-      .withColumn("toks", array_distinct(split(trim(col("text")), " ")))
+      .withColumn("toks", array_distinct(Tables.tokens(col("text"))))
       // Fingerprint each token once; the 64-bit vote/pack loop is a native
       // kernel (graft.functions.SimHash64) — primitive arrays, no boxed
       // intermediate vote vectors.
       .withColumn("tok_h", transform(col("toks"), t =>
         tokFp(t, 31L, 987654321L) * lit(2147483648L)
           + tokFp(t, 37L, 123456789L)))
-      .withColumn("simhash", call_function("graft_simhash64", col("tok_h")))
+      .withColumn("simhash", GraftFunctions.simhash64(col("tok_h")))
       .select("doc_id", "lang", "simhash")
   }
 
@@ -1151,7 +1145,7 @@ object DedupOps {
     *      arrays, merged by OR, so the build is one ordinary aggregation;
     *   2. the single-row filter broadcasts (like q40's query vector — it
     *      never lands on the driver) and the big train side keeps only
-    *      rows with `graft_bloom_contains(filter, xxhash64(norm))` — a
+    *      rows with `bloomContains(filter, xxhash64(norm))` — a
     *      codegen'd per-row bit test;
     *   3. only the surviving candidates (true matches + ~1% false
     *      positives — the filter has NO false negatives) pay the exact
@@ -1169,7 +1163,6 @@ object DedupOps {
   /** `docsDf` needs (doc_id, source, text). */
   def bloomLeakProfileOn(docsDf: DataFrame,
       nBits: Int = BloomBits, k: Int = BloomK): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     val d = docsDf
       .withColumn("norm", normText)
       .withColumn("split",
@@ -1178,12 +1171,13 @@ object DedupOps {
     val evalNorms = d.filter(col("split") === "eval")
       .select("norm").distinct()
     val filter = broadcast(evalNorms
-      .agg(expr(s"graft_bloom_agg(xxhash64(norm), $nBits, $k)")
+      .agg(GraftFunctions.bloomAgg(xxhash64(col("norm")), nBits, k)
         .as("bloom")))
     val train = d.filter(col("split") === "train")
       .select("source", "norm")
     val candidates = train.crossJoin(filter)
-      .filter(expr("graft_bloom_contains(bloom, xxhash64(norm))"))
+      .filter(GraftFunctions.bloomContains(col("bloom"),
+        xxhash64(col("norm"))))
       .drop("bloom")
     // the confirm join is INNER against the distinct eval norms (row-
     // count-identical to a semi join here) and deliberately NOT a

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions
 import graft.streaming.BatchDirs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -281,7 +282,7 @@ object ScaleOps {
       id: Column, k: Int, idName: String,
       asc: Boolean = false): DataFrame =
     explodeTopK(df, group,
-      call_function("graft_topk_ids", score, id, lit(k), lit(asc)),
+      GraftFunctions.topKIdsByScore(score, id, k, asc),
       r => Seq(r.as(idName)))
 
   /** The shared aggregate→posexplode→rank scaffolding behind both top-k
@@ -289,7 +290,6 @@ object ScaleOps {
     */
   private def explodeTopK(df: DataFrame, group: Seq[String], agg: Column,
       finish: Column => Seq[Column]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     df.groupBy(group.map(col): _*)
       .agg(agg.as("_top"))
       .select(group.map(col) :+
@@ -315,7 +315,7 @@ object ScaleOps {
       id: Column, k: Int, idName: String, scoreName: String,
       asc: Boolean = false): DataFrame =
     explodeTopK(df, group,
-      call_function("graft_topk_rows", score, id, lit(k), lit(asc)),
+      GraftFunctions.topKRowsByScore(score, id, k, asc),
       r => Seq(r.getField("id").as(idName),
         r.getField("score").as(scoreName)))
 
@@ -333,8 +333,7 @@ object ScaleOps {
       scoreName: String, payloadName: String,
       asc: Boolean = false): DataFrame =
     explodeTopK(df, group,
-      call_function("graft_topk_rows", score, id, payload, lit(k),
-        lit(asc)),
+      GraftFunctions.topKRowsByScore(score, id, payload, k, asc),
       r => Seq(r.getField("id").as(idName),
         r.getField("score").as(scoreName),
         r.getField("payload").as(payloadName)))

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.Tables
+import graft.Tables.tokens
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,9 +21,6 @@ object SearchOps {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
-
-  /** Whitespace tokens, the corpus-wide convention (TextOps/DedupOps). */
-  private def toks = split(trim(col("text")), " ")
 
   /** How many (smallest) doc ids a q79 posting row carries. */
   private[ops] val PostingCap = 10
@@ -47,15 +46,14 @@ object SearchOps {
 
   /** `docsDf` needs (doc_id, text). */
   def invertedIndexOn(docsDf: DataFrame, cap: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
-      .select(col("doc_id"), explode(toks).as("token"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy("token", "doc_id")
       .agg(count(lit(1)).as("tf"))
       .groupBy("token")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"),
-        expr(s"array_join(transform(graft_min_k(doc_id, $cap), " +
-          "x -> cast(x AS string)), ',')").as("postings"))
+        array_join(transform(GraftFunctions.minK(col("doc_id"), cap),
+          x => x.cast("string")), ",").as("postings"))
       .orderBy("token")
   }
 
@@ -67,7 +65,7 @@ object SearchOps {
     */
   def invertedIndexWindowedOn(docsDf: DataFrame, cap: Int): DataFrame = {
     val perDoc = docsDf
-      .select(col("doc_id"), explode(toks).as("token"))
+      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy("token", "doc_id")
       .agg(count(lit(1)).as("tf"))
     val lexicon = perDoc.groupBy("token")
@@ -104,7 +102,8 @@ object SearchOps {
   /** `docsDf` needs (doc_id, text). */
   def tokenCooccurrenceOn(docsDf: DataFrame, topK: Int): DataFrame = {
     val tok = docsDf
-      .select(col("doc_id"), explode(array_distinct(toks)).as("t"))
+      .select(col("doc_id"),
+        explode(array_distinct(tokens(col("text")))).as("t"))
     val a = tok.toDF("doc_id", "t1")
     val b = tok.toDF("doc_id", "t2")
     a.join(b, Seq("doc_id"))
@@ -166,9 +165,9 @@ object SearchOps {
     // null-text dl must be NULL, not the legacy conf's -1 (the TextOps
     // sizeOrNull discipline): a -1 would pollute sum_dl where the
     // oracle's len(NULL) skips the row in its sum
-    val d = docsDf.withColumn("dl", Tables.sizeOrNull(toks))
+    val d = docsDf.withColumn("dl", Tables.sizeOrNull(tokens(col("text"))))
     val hits = d
-      .select(col("doc_id"), col("dl"), explode(toks).as("term"))
+      .select(col("doc_id"), col("dl"), explode(tokens(col("text"))).as("term"))
       .filter(col("term").isin(terms: _*))
     val tfAggs = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, 1L).otherwise(0L)).as(s"tf${i + 1}")
@@ -179,7 +178,7 @@ object SearchOps {
       sum(when(col("term") === t, 1L).otherwise(0L)).as(s"df${i + 1}")
     }
     val dfRow = d
-      .select(explode(array_distinct(toks)).as("term"))
+      .select(explode(array_distinct(tokens(col("text")))).as("term"))
       .filter(col("term").isin(terms: _*))
       .agg(dfAggs.head, dfAggs.tail: _*)
     val stats = d.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -215,7 +214,6 @@ object SearchOps {
     * schema is null-free.
     */
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     hybridRrfOn(docs(s, dir), Tables.t(s, dir, "embeddings"), Q81Terms)
   }
 
@@ -230,7 +228,6 @@ object SearchOps {
       queryId: Long = 0L, legK: Int = RrfLegK,
       topK: Int = RrfTopK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     val lex = bm25SearchOn(docsDf, terms, legK)
       .select(col("doc_id"),
         row_number().over(Window.orderBy(col("bm25").desc,
@@ -293,7 +290,7 @@ object SearchOps {
   def bigramLmOn(docsDf: DataFrame, topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val n = size(col("toks"))
-    val bg = docsDf.withColumn("toks", toks)
+    val bg = docsDf.withColumn("toks", tokens(col("text")))
       .filter(n >= 2)
       .select(explode(zip_with(
         slice(col("toks"), lit(1), n - 1),
@@ -337,7 +334,7 @@ object SearchOps {
     */
   private def docBigramsOn(docsDf: DataFrame): DataFrame = {
     val n = size(col("toks"))
-    docsDf.withColumn("toks", toks)
+    docsDf.withColumn("toks", tokens(col("text")))
       .filter(n >= 2)
       .select(col("doc_id"), explode(zip_with(
         slice(col("toks"), lit(1), n - 1),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -24,17 +25,15 @@ object SimilarityOps {
 
   val Dim = 64
 
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
+  private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "embeddings")
-  }
 
   /** Dot product of two array<float|double> columns in double, summed in
     * index order — bit-identical to the oracle's left-associated unrolled
     * SQL sum. Native kernel (graft.functions.VecDot): one primitive loop
     * over ArrayData, no boxed per-element intermediates.
     */
-  def dot(a: Column, b: Column): Column = call_function("graft_vec_dot", a, b)
+  def dot(a: Column, b: Column): Column = GraftFunctions.vecDot(a, b)
 
   /** Unrolled L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -67,7 +66,6 @@ object SimilarityOps {
     * vector (the q40 registration pins (0, 10) for the oracle).
     */
   def annTopKOn(embDf: DataFrame, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val q = broadcast(embDf.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb")))
     embDf.crossJoin(q)
@@ -122,8 +120,6 @@ object SimilarityOps {
       maxExactBlock: Int = MaxExactBlock,
       exact: Boolean = false): DataFrame = {
     val session = embDf.sparkSession
-    // blockCol may reference the graft kernels (lshBlock → vec_dot)
-    graft.functions.GraftFunctions.ensureRegistered(session)
     import session.implicits._
     val blocked = embDf
       .select(blockCol.cast("int").as("label"), col("vec_id"), col("embedding"))
@@ -323,7 +319,6 @@ object SimilarityOps {
 
   /** `embDf` needs (vec_id, label, embedding). */
   def annLshOn(embDf: DataFrame, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val e = embDf.withColumn("sig", signature(col("embedding")))
     val q = broadcast(e.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"), col("sig").as("q_sig")))
@@ -444,7 +439,6 @@ object SimilarityOps {
   def nnDedupOn(embDf: DataFrame, maxExactBlock: Int = MaxExactBlock,
       exact: Boolean = false, maxDupMult: Long = MaxDupMult,
       stats: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     if (!exact && stats.getOrElse(estMaxDupMult(embDf)) > maxDupMult)
       nnDedupContracted(embDf, maxExactBlock)
     else nnDedupDirect(embDf, maxExactBlock, exact)
@@ -576,7 +570,6 @@ object SimilarityOps {
   /** `embDf` needs (vec_id, label, embedding). */
   def annIvfOn(embDf: DataFrame, queryId: Long = 0L, k: Int = 10,
       nProbe: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val e = embDf
     val cent = centroidFrame(e)
     val q = broadcast(e.filter(col("vec_id") === queryId)
@@ -654,7 +647,6 @@ object SimilarityOps {
 
   /** Both snapshots need (label, embedding). */
   def embeddingDriftOn(baseDf: DataFrame, batchDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(baseDf.sparkSession)
     // centroidFrame's contraction with the per-label size read OUT OF the
     // same pass (n = the widest dimension's contributor count — the row
     // count for any non-empty vector), instead of a second corpus scan
@@ -716,7 +708,6 @@ object SimilarityOps {
   def annIvfRecallOn(embDf: DataFrame, k: Int = RecallK,
       pCount: Int = RecallProbes,
       maxProbe: Int = RecallMaxProbe): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     require(maxProbe >= 1 && pCount >= 1 && k >= 1,
       s"annIvfRecallOn: maxProbe, pCount and k must be >= 1, got " +
         s"($maxProbe, $pCount, $k) — an empty sweep grid or probe set " +
@@ -776,7 +767,6 @@ object SimilarityOps {
       centroids: Array[Array[Double]], k: Int = RecallK,
       pCount: Int = RecallProbes,
       maxProbe: Int = RecallMaxProbe): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(validDf.sparkSession)
     require(maxProbe >= 1 && pCount >= 1 && k >= 1,
       s"annIvfRecallWithCells: maxProbe, pCount and k must be >= 1, got " +
         s"($maxProbe, $pCount, $k) — an empty sweep grid or probe set " +
@@ -891,7 +881,7 @@ object SimilarityOps {
     // Plans as ObjectHashAggregate with a map-side partial — the
     // bounded-heap replacement for a salted rank stage
     def topkIds(score: Column, asc: Boolean): Column =
-      call_function("graft_topk_ids", score, col("vec_id"), lit(k), lit(asc))
+      GraftFunctions.topKIdsByScore(score, col("vec_id"), k, asc)
     // conditional scores and scan flags are PRE-computed in this
     // whole-stage-codegen'd project: a TypedImperativeAggregate's
     // children evaluate interpreted per row, so the aggregate inputs
@@ -964,7 +954,6 @@ object SimilarityOps {
   def annLshRecallOn(embDf: DataFrame, k: Int = RecallK,
       pCount: Int = RecallProbes,
       maxRadius: Int = RecallMaxRadius): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     require(maxRadius >= 0 && pCount >= 1 && k >= 1,
       s"annLshRecallOn: maxRadius must be >= 0, pCount and k >= 1, got " +
         s"($maxRadius, $pCount, $k) — an empty sweep grid or probe set " +
@@ -1022,7 +1011,6 @@ object SimilarityOps {
   def annRpRecallOn(embDf: DataFrame, k: Int = RecallK,
       pCount: Int = RecallProbes,
       dimGrid: Seq[Int] = RecallDimGrid): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     require(dimGrid.nonEmpty && dimGrid.forall(d => d >= 1 && d <= Planes)
         && dimGrid.distinct.size == dimGrid.size,
       s"annRpRecallOn: prefix grid must be distinct values in " +
@@ -1126,7 +1114,6 @@ object SimilarityOps {
   def annPqRecallWith(embDf: DataFrame, full: Array[Array[Double]],
       k: Int = RecallK, pCount: Int = RecallProbes,
       subGrid: Seq[Int] = RecallSubGrid): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     require(subGrid.nonEmpty && subGrid.forall(m => m >= 1 && m <= PqSub)
         && subGrid.distinct.size == subGrid.size,
       s"annPqRecallWith: subspace grid must be distinct values in " +
@@ -1144,8 +1131,7 @@ object SimilarityOps {
     }
     val e = embDf.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("enorm"),
-      call_function("graft_pq_encode", col("embedding"),
-        typedLit(full.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
+      GraftFunctions.pqEncode(col("embedding"), full, PqSubDim).as("codes"))
     val probes = e.orderBy("vec_id").limit(pCount)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("enorm").as("qnorm"))
@@ -1195,7 +1181,6 @@ object SimilarityOps {
   def semanticDedupOn(embDf: DataFrame, threshold: Double = 0.995,
       bucketCol: Column =
         shiftrightunsigned(signature(col("embedding")), 8)): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val e = embDf.select(col("vec_id"), col("embedding"),
       bucketCol.cast("long").as("sig"))
     val reps = e.groupBy("sig").agg(min("vec_id").as("rep_id"))
@@ -1272,7 +1257,6 @@ object SimilarityOps {
       exact: Boolean = false,
       maxDupMult: Long = MaxDupMult,
       stats: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     if (!exact && stats.getOrElse(estMaxDupMult(embDf)) > maxDupMult)
       semanticLeakageContracted(embDf, threshold, maxExactBlock)
     else semanticLeakageDirect(embDf, threshold, maxExactBlock, exact)
@@ -1413,7 +1397,6 @@ object SimilarityOps {
   private def lloyd(vecs: DataFrame, k: Int, iters: Int, nSub: Int,
       emptyMsg: String)(
       codes: Array[Array[Double]] => Column): Array[Array[Double]] = {
-    graft.functions.GraftFunctions.ensureRegistered(vecs.sparkSession)
     var cb: Array[Array[Double]] = Tables.boundedCollect(vecs
       .orderBy(Tables.lcgBucket(col("vec_id"), 48271L, 11L, 1000000007L).asc,
         col("vec_id").asc)
@@ -1532,7 +1515,6 @@ object SimilarityOps {
     */
   def assignClusters(embDf: DataFrame,
       centroids: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     // r16: the per-cell struct array comes from the graft_cell_dists
     // kernel instead of the composed array(struct(…)) expression — same
     // structs bit for bit (the kernel replays cellDists' op order; its
@@ -1546,8 +1528,8 @@ object SimilarityOps {
 
   /** [[assignClusters]]' `cluster` column over `embedding`. */
   private def clusterOf(centroids: Array[Array[Double]]): Column =
-    array_min(call_function("graft_cell_dists", col("embedding"),
-      typedLit(centroids.map(_.toSeq).toSeq))).getField("c")
+    array_min(GraftFunctions.cellDists(col("embedding"), centroids))
+      .getField("c")
 
   /** q89: cross-modal curation — the documents table (lexical quality,
     * the q33 composite score) joined with the embeddings table (the same
@@ -1571,7 +1553,6 @@ object SimilarityOps {
   /** `docsDf` needs (doc_id, source, text); `embDf` (vec_id, embedding). */
   def crossmodalCurationOn(docsDf: DataFrame, embDf: DataFrame,
       k: Int = 20): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     val scored = TextOps.scoredDocsOn(docsDf)
       .select(col("doc_id"), col("source"), col("score"))
     val norms = embDf.select(col("vec_id").as("doc_id"),
@@ -1642,7 +1623,6 @@ object SimilarityOps {
 
   /** `embDf` needs (vec_id, label, embedding). */
   def annRpOn(embDf: DataFrame, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val proj = array(planes.map(p =>
       round(dot(col("embedding"), typedLit(p.toSeq)), 6)): _*)
     val e = embDf.select(col("vec_id"), col("label"), proj.as("p"))
@@ -1684,7 +1664,6 @@ object SimilarityOps {
 
   /** `embDf` needs (label, embedding). */
   def embeddingAuditOn(embDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val Dec = org.apache.spark.sql.types.DecimalType(38, 10)
     // a null ELEMENT inside a vector is its own malformation class: the
     // norm kernel (vec_dot) reads it as NULL (corrupt-input discipline),
@@ -1808,7 +1787,6 @@ object SimilarityOps {
 
   private def annPqSearch(embDf: DataFrame, labels: Array[Int],
       full: Array[Array[Double]], queryId: Long, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     // codebook(m)(j) = 8-dim sub-codeword j of subspace m
     val cb: Array[Array[Array[Double]]] = Array.tabulate(PqSub)(m =>
       full.map(_.slice(m * PqSubDim, (m + 1) * PqSubDim)))
@@ -1827,8 +1805,7 @@ object SimilarityOps {
           lit(c.map(v => v * v).sum))
     }
     val coded = embDf.select(col("vec_id"), col("label"),
-      call_function("graft_pq_encode", col("embedding"),
-        typedLit(full.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
+      GraftFunctions.pqEncode(col("embedding"), full, PqSubDim).as("codes"))
     // ADC lookup tables: the SAME distance expressions evaluated once on
     // the query row (asymmetric — the query side is never quantized)
     val q = broadcast(embDf.filter(col("vec_id") === queryId)
@@ -1892,7 +1869,6 @@ object SimilarityOps {
     */
   def pqTrainedCodebook(embDf: DataFrame, k: Int = PqTrainK,
       iters: Int = PqTrainIters): Array[Array[Double]] = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     // persisted across the Lloyd iterations (standard k-means practice:
     // 1 + iters sequential jobs would otherwise re-scan and re-project
     // the corpus each time); MEMORY_AND_DISK so a corpus past executor
@@ -1919,8 +1895,7 @@ object SimilarityOps {
     lloyd(valid, k, iters, nSub = PqSub,
       "pqTrainedCodebook: no valid full-dim vectors to train on " +
         "(empty or fully-corrupt embedding table)")(cb =>
-      call_function("graft_pq_encode", col("embedding"),
-        typedLit(cb.map(_.toSeq).toSeq), lit(PqSubDim)))
+      GraftFunctions.pqEncode(col("embedding"), cb, PqSubDim))
 
   /** q140: trained-PQ ANN — the q123 ADC search running against the
     * [[pqTrainedCodebook]] instead of the label-derived one: train (5
@@ -2007,7 +1982,6 @@ object SimilarityOps {
   def annIvfWithCells(validDf: DataFrame, centroids: Array[Array[Double]],
       queryId: Long = 0L, k: Int = 10, nProbe: Int = 3): DataFrame = {
     val session = validDf.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(session)
     import session.implicits._
     require(centroids.nonEmpty,
       "annIvfWithCells: empty coarse codebook — train with kmeansCentroids")
@@ -2173,14 +2147,13 @@ object SimilarityOps {
       cells: Array[Array[Double]], residCb: Array[Array[Double]],
       queryId: Long, k: Int, nProbe: Int): DataFrame = {
     val session = residFrame.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(session)
     import session.implicits._
     // index side: residual codes + cell, 8 B per vector (built at ingest
     // in production; per call here so the oracle replays it)
     val coded = residFrame
       .select(col("vec_id"), col("label"), col("cluster").as("cell"),
-        call_function("graft_pq_encode", col("residual"),
-          typedLit(residCb.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
+        GraftFunctions.pqEncode(col("residual"), residCb, PqSubDim)
+          .as("codes"))
     val luts: Seq[(Int, Seq[Seq[Double]])] =
       queryVecLocal(residFrame, queryId).map { q =>
         val ring = probeRingLocal(q, cells, nProbe)
@@ -2266,7 +2239,6 @@ object SimilarityOps {
       cells: Array[Array[Double]], residCb: Array[Array[Double]],
       k: Int, pCount: Int, maxProbe: Int): DataFrame = {
     val session = residFrame.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(session)
     import session.implicits._
     require(maxProbe >= 1 && pCount >= 1 && k >= 1,
       s"annIvfPqRecallWith: maxProbe, pCount and k must be >= 1, got " +
@@ -2275,8 +2247,8 @@ object SimilarityOps {
       .select(col("vec_id"), col("embedding"),
         norm(col("embedding")).as("enorm"),
         col("cluster").as("cell"),
-        call_function("graft_pq_encode", col("residual"),
-          typedLit(residCb.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
+        GraftFunctions.pqEncode(col("residual"), residCb, PqSubDim)
+          .as("codes"))
     val probeRows = probeSetLocal(residFrame, pCount)
     val probes = probeRows.toDF("q_id", "q_emb", "qnorm")
     // per-(probe, probed-cell) rows carrying that pair's ADC LUT
@@ -2535,11 +2507,10 @@ object SimilarityOps {
   private def ivfPqEncoded(validDf: DataFrame,
       cells: Array[Array[Double]],
       residCb: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(validDf.sparkSession)
     residualsWith(validDf, cells)
       .select(col("vec_id"), col("label"),
-        call_function("graft_pq_encode", col("residual"),
-          typedLit(residCb.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"),
+        GraftFunctions.pqEncode(col("residual"), residCb, PqSubDim)
+          .as("codes"),
         col("cluster").as("cell"))
   }
 
@@ -2613,7 +2584,6 @@ object SimilarityOps {
 
   /** `embDf` needs (label, embedding). */
   def clusterCohesionOn(embDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val Dec = org.apache.spark.sql.types.DecimalType(38, 10)
     embDf.join(broadcast(centroidFrame(embDf)), "label")
       .select(col("label"),
@@ -2734,7 +2704,6 @@ object SimilarityOps {
 
   /** `embDf` needs (label, embedding). */
   def pqDistortionOn(embDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val (_, full) = pqCodebook(embDf)
     pqDistortionWith(embDf, full)
   }
@@ -2757,11 +2726,10 @@ object SimilarityOps {
     */
   def pqDistortionWith(embDf: DataFrame,
       codebook: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     val Dec = org.apache.spark.sql.types.DecimalType(38, 10)
     embDf.select(col("label"),
-        call_function("graft_pq_error", col("embedding"),
-          typedLit(codebook.map(_.toSeq).toSeq), lit(PqSubDim)).as("err"))
+        GraftFunctions.pqError(col("embedding"), codebook, PqSubDim)
+          .as("err"))
       .groupBy("label")
       .agg(count(lit(1)).as("n"),
         (count(lit(1)) - count(col("err"))).as("n_unencodable"),
@@ -2886,10 +2854,9 @@ object SimilarityOps {
 
   private def pqEncoded(embDf: DataFrame,
       codebook: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(embDf.sparkSession)
     embDf.select(col("vec_id"), col("label"),
-      call_function("graft_pq_encode", col("embedding"),
-        typedLit(codebook.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"))
+      GraftFunctions.pqEncode(col("embedding"), codebook, PqSubDim)
+        .as("codes"))
   }
 
   // ---- persisted trained-codebook store --------------------------------

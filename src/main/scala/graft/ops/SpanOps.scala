@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,7 +59,7 @@ object SpanOps {
 
   private def shingleOcc(docsDf: DataFrame, k: Int): DataFrame =
     docsDf
-      .select(col("doc_id"), split(trim(col("text")), " ").as("toks"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= k)
       .select(col("doc_id"),
         posexplode(expr(shingleKeysExpr(k, "toks"))).as(Seq("pos", "h")))
@@ -219,13 +220,12 @@ object SpanOps {
   def writeBloomStoreFromShingles(s: SparkSession, shinglePath: String,
       bloomPath: String, k: Int = DefaultK, nBits: Int = 1 << 20,
       kHashes: Int = 7): Unit = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     requireShingleK(s, shinglePath, k) // bloom row must record the real k
     // the store already persists fp = xxhash64(h) — read the 8-byte
     // column instead of re-hashing every 16-byte key per refresh
     val b = s.read.parquet(shinglePath)
       .select(col("fp").as("hk"))
-      .agg(expr(s"graft_bloom_agg(hk, $nBits, $kHashes)").as("b"))
+      .agg(GraftFunctions.bloomAgg(col("hk"), nBits, kHashes).as("b"))
       .head().getAs[Array[Byte]]("b")
     publishBloom(s, bloomPath, k, nBits, kHashes,
       if (b == null) graft.functions.Bloom.empty(nBits, kHashes) else b)
@@ -276,12 +276,11 @@ object SpanOps {
     */
   def bloomFilterBytes(corpus: DataFrame, k: Int = DefaultK,
       nBits: Int = 1 << 20, kHashes: Int = 7): Array[Byte] = {
-    graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val b = corpus
-      .select(split(trim(col("text")), " ").as("toks"))
+      .select(Tables.tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= k)
       .select(explode(expr(shingleHash64Expr(k, "toks"))).as("hk"))
-      .agg(expr(s"graft_bloom_agg(hk, $nBits, $kHashes)").as("b"))
+      .agg(GraftFunctions.bloomAgg(col("hk"), nBits, kHashes).as("b"))
       .head().getAs[Array[Byte]]("b")
     if (b == null) graft.functions.Bloom.empty(nBits, kHashes) else b
   }
@@ -379,7 +378,7 @@ object SpanOps {
     val existing = Tables.lcgBucket(col("doc_id"), 48271L, 23L, 100L) < 80L
     val occ = d
       .select(col("doc_id"), existing.as("existing"),
-        split(trim(col("text")), " ").as("toks"))
+        Tables.tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= DefaultK)
       .select(col("doc_id"), col("existing"),
         posexplode(expr(shingleKeysExpr(DefaultK, "toks")))
@@ -429,7 +428,7 @@ object SpanOps {
             "via DedupOps.dedupDecision before rewriting.")
     }
     val toks = docsDf.select(col("doc_id"),
-      split(trim(col("text")), " ").as("toks"))
+      Tables.tokens(col("text")).as("toks"))
     // Per-doc sorted span arrays, then a row-local array rebuild: the
     // span list is doc-bounded, so the only data-sized shuffles are the
     // span pipeline itself plus one doc-keyed join of two doc-count-sized
@@ -500,13 +499,11 @@ object SpanOps {
     * `unicode()`; everything here is a row-local array expression, the
     * corpus never shuffles. */
   def cdcChunksOn(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
-      .select(col("doc_id"), split(trim(col("text")), " ").as("toks"))
-      .withColumn("wh", expr(
-        s"""transform(toks, word -> aggregate(
-           |  graft_code_points(word), 0L, (a, c) -> (a * 31 + c) % $P))"""
-          .stripMargin))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("toks"))
+      .withColumn("wh", transform(col("toks"), word => aggregate(
+        GraftFunctions.codePoints(word), lit(0L),
+        (a, c) => (a * 31 + c) % P)))
       .withColumn("bounds", boundsExpr)
       .select(col("doc_id"), col("toks"), posexplode(expr(
         """transform(sequence(0, size(bounds) - 1), j -> struct(

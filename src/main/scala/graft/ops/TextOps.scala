@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.Tables
+import graft.Tables.tokens
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +20,6 @@ object TextOps {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
-
-  private val tokens: Column = split(trim(col("text")), " ")
 
   /** `size` with EXPLICIT null propagation: under
     * `spark.sql.legacy.sizeOfNull` a null token array reads as −1, which
@@ -51,7 +51,7 @@ object TextOps {
   /** `docsDf` needs (doc_id, lang, text, n_chars). */
   def tokenStatsOn(docsDf: DataFrame): DataFrame =
     docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .select(
         col("doc_id"), col("lang"), col("n_chars"),
         sizeOrNull(col("toks")).as("ws_tokens"),
@@ -72,7 +72,7 @@ object TextOps {
   def langProfileOn(docsDf: DataFrame): DataFrame = {
     val stopArr = array(enStops.map(lit): _*)
     docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       .withColumn("en_hits",
         sizeOrNull(filter(col("toks"), t => array_contains(stopArr, t))))
@@ -103,7 +103,7 @@ object TextOps {
 
   private[ops] def scoredDocsOn(docsDf: DataFrame): DataFrame =
     docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       .withColumn("distinct_ratio",
         size(array_distinct(col("toks"))) / col("n_tokens"))
@@ -146,12 +146,11 @@ object TextOps {
 
   /** `docsDf` needs (doc_id, text, n_chars). */
   def docFingerprintOn(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
       .select(
         col("doc_id"),
         aggregate(
-          call_function("graft_code_points", col("text")),
+          GraftFunctions.codePoints(col("text")),
           lit(0L),
           (acc, x) => (acc * lit(31L) + x) % lit(1000000007L)).as("fingerprint"),
         col("n_chars"))
@@ -180,7 +179,7 @@ object TextOps {
   /** `docsDf` needs (doc_id, text). */
   def shingleProfileOn(docsDf: DataFrame): DataFrame =
     docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       .filter(col("n_tokens") >= 3)
       .withColumn("shingles",
@@ -311,7 +310,7 @@ object TextOps {
   def sourceMixOn(docsDf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     docsDf
-      .withColumn("n_toks", sizeOrNull(tokens))
+      .withColumn("n_toks", sizeOrNull(tokens(col("text"))))
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_toks")).as("n_tokens"))
@@ -361,7 +360,7 @@ object TextOps {
       s"positive, got $temperature")
     val w = Window.partitionBy()
     val cells = docsDf
-      .withColumn("n_toks", sizeOrNull(tokens))
+      .withColumn("n_toks", sizeOrNull(tokens(col("text"))))
       .groupBy("source", "lang")
       .agg(sum(col("n_toks")).as("n_tokens"))
       .withColumn("raw_share", round(
@@ -432,7 +431,7 @@ object TextOps {
       .select(col("source"), col("lang"),
         col("sampling_weight").as("target_share"), col("keep_frac"))
     docsDf
-      .withColumn("n_toks", sizeOrNull(tokens))
+      .withColumn("n_toks", sizeOrNull(tokens(col("text"))))
       .join(broadcast(plan), Seq("source", "lang"), "left")
       .withColumn("keep",
         coalesce(Tables.lcgBucket(col("doc_id"), 48271L, 13L, 1000000L) <
@@ -486,7 +485,7 @@ object TextOps {
     require(budget >= 1,
       s"contextBudgetOn: budget must be >= 1, got $budget")
     docsDf
-      .withColumn("n_toks", sizeOrNull(tokens))
+      .withColumn("n_toks", sizeOrNull(tokens(col("text"))))
       .groupBy("lang")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -551,7 +550,7 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     require(budget >= 1, s"packingPlanOn: budget must be >= 1, got $budget")
     require(shards >= 1, s"packingPlanOn: shards must be >= 1, got $shards")
-    val d = docsDf.withColumn("n_toks", sizeOrNull(tokens))
+    val d = docsDf.withColumn("n_toks", sizeOrNull(tokens(col("text"))))
     val w = Window.partitionBy("lang", "shard").orderBy("doc_id")
     val packed = d.filter(col("n_toks").isNotNull)
       .withColumn("shard",
@@ -660,7 +659,7 @@ object TextOps {
         },
         acc => acc("best"))
     df
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       // guard: sequence(1, 0) would DESCEND ([1, 0]); emit [] for 1-token docs
       .withColumn("bigrams",
@@ -703,7 +702,7 @@ object TextOps {
 
   /** `docsDf` needs (doc_id, text). */
   def vocabStatsOn(docsDf: DataFrame): DataFrame = {
-    val d = docsDf.withColumn("toks", tokens)
+    val d = docsDf.withColumn("toks", tokens(col("text")))
     val total = d.agg(count(lit(1)).as("n_docs"))
     val cf = d.select(explode(col("toks")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cf"))
@@ -797,7 +796,7 @@ object TextOps {
       stride: Int = 24): DataFrame = {
     require(window > 0 && stride > 0 && stride <= window)
     val d = docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       // 1 + ceil((n - window)/stride) via integer-exact floor arithmetic
       .withColumn("n_chunks",
@@ -839,7 +838,7 @@ object TextOps {
   def tfidfKeywordsOn(docsDf: DataFrame, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
     // run-length encode the sorted tokens: run starts / run ends by index
     // (indexes clamped: ANSI element_at faults on out-of-range)
@@ -903,7 +902,6 @@ object TextOps {
     * misattributed sample, which is worse than stopping.
     */
   def groupSampleOn(docsDf: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
       .select(col("source"),
         when(col("doc_id") >= 0L && col("doc_id") < 2147483648L,
@@ -914,7 +912,7 @@ object TextOps {
             lit("packed sample key: "), col("doc_id").cast("string"))))
           .as("e"))
       .groupBy("source")
-      .agg(expr(s"graft_min_k(e, $k)").as("es"))
+      .agg(GraftFunctions.minK(col("e"), k).as("es"))
       .select(col("source"), posexplode(col("es")).as(Seq("pos", "e")))
       .select(col("source"), (col("pos") + 1).cast("long").as("rank"),
         (col("e") % 2147483648L).as("doc_id"))
@@ -948,7 +946,7 @@ object TextOps {
   def zipfFitOn(docsDf: DataFrame): DataFrame = {
     val Dec = org.apache.spark.sql.types.DecimalType(38, 12)
     val freqs = docsDf
-      .select(explode(tokens).as("token"))
+      .select(explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("freq"))
     val ranked = ScaleOps.withGlobalRowNumber(
@@ -997,7 +995,7 @@ object TextOps {
   def shingleNoveltyOn(docsDf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       .filter(col("n_tokens") >= 3)
       .withColumn("shingles", array_distinct(
@@ -1054,7 +1052,7 @@ object TextOps {
     */
   private def tokenCountsOn(docsDf: DataFrame): DataFrame =
     docsDf
-      .select(col("source"), explode(tokens).as("token"))
+      .select(col("source"), explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
 
@@ -1204,9 +1202,8 @@ object TextOps {
     * stream). `docsDf` needs (doc_id, text).
     */
   def winnowSetsOn(docsDf: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docsDf.sparkSession)
     docsDf
-      .withColumn("toks", tokens)
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", sizeOrNull(col("toks")))
       .filter(col("n_tokens") >= WinnowK)
       // ONE pass over the text: prefix hashes + O(1) per shingle span
@@ -1214,13 +1211,13 @@ object TextOps {
       // value-for-value — pinned by FunctionsSpec and the DuckDB oracle,
       // which keeps the naive per-shingle formulation)
       .withColumn("hs",
-        call_function("graft_shingle_hashes", col("text"), lit(WinnowK)))
+        GraftFunctions.shingleHashes(col("text"), WinnowK))
       .withColumn("m", size(col("hs")))
       // monotonic-deque sliding minimum: O(m), zero per-window allocation
       // (vs two slices + two walks per window in the composed form —
       // identical selection incl. the leftmost tie rule, spec-pinned)
       .withColumn("sel",
-        call_function("graft_winnow_positions", col("hs"), lit(WinnowW)))
+        GraftFunctions.winnowPositions(col("hs"), WinnowW))
       .withColumn("fps", array_distinct(
         transform(col("sel"), p => element_at(col("hs"), p.cast("int")))))
   }
@@ -1412,7 +1409,7 @@ object TextOps {
   /** `docsDf` needs (text). */
   def tokenCoverageOn(docsDf: DataFrame): DataFrame = {
     val freqs = docsDf
-      .select(explode(tokens).as("token"))
+      .select(explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("freq"))
     val ranked = ScaleOps.withGlobalRowNumber(
@@ -1518,7 +1515,7 @@ object TextOps {
         .select(col("source"), col(nName), col(vName),
           round(log2(col(nName)) -
             col("_clc").cast("double") / col(nName), 6).as(hName))
-    val d = docsDf.select(col("source"), tokens.as("toks"))
+    val d = docsDf.select(col("source"), tokens(col("text")).as("toks"))
     val uni = d.select(col("source"), explode(col("toks")).as("g"))
       .groupBy("source", "g").agg(count(lit(1)).as("c"))
     val n = size(col("toks"))

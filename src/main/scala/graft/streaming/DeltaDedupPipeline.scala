@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,19 +52,18 @@ object DeltaDedupPipeline {
   def freshDocsBloom(docStream: DataFrame, corpus: DataFrame,
       nBits: Int = 1 << 17, k: Int = 7,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val corpusNorms = corpus
       .select(graft.ops.DedupOps.normText.as("norm"))
       .distinct()
     val filterBytes = corpusNorms
-      .agg(expr(s"graft_bloom_agg(xxhash64(norm), $nBits, $k)").as("b"))
+      .agg(GraftFunctions.bloomAgg(xxhash64(col("norm")), nBits, k).as("b"))
       .head().getAs[Array[Byte]]("b")
     val flagged = docStream
       .withColumn("norm", graft.ops.DedupOps.normText)
       .withWatermark("event_ts", watermarkDelay)
       .withColumn("bf", lit(filterBytes))
       .withColumn("maybe_known",
-        expr("graft_bloom_contains(bf, xxhash64(norm))"))
+        GraftFunctions.bloomContains(col("bf"), xxhash64(col("norm"))))
       .drop("bf")
     val definitelyFresh = flagged.filter(!col("maybe_known"))
     val confirmedFresh = flagged.filter(col("maybe_known"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,18 +62,17 @@ object NoveltyTriagePipeline {
       "scoredAgainstFilter: filterBytes must be a non-empty bloom byte " +
         "array (for an empty corpus pass an all-zero array of nBits/8 " +
         "bytes — every shingle then scores novel)")
-    graft.functions.GraftFunctions.ensureRegistered(docStream.sparkSession)
     docStream
-      .withColumn("toks", split(trim(col("text")), " "))
+      .withColumn("toks", graft.Tables.tokens(col("text")))
       .withColumn("shs",
         when(size(col("toks")) >= k,
           array_distinct(expr(shingleHashExpr(k, "toks"))))
           .otherwise(typedLit(Seq.empty[Long])))
       .withColumn("bf", lit(filterBytes))
       .withColumn("n_shingles", size(col("shs")).cast("long"))
-      .withColumn("n_novel", expr(
-        "aggregate(shs, 0L, (acc, h) -> " +
-          "acc + IF(graft_bloom_contains(bf, h), 0L, 1L))"))
+      .withColumn("n_novel", aggregate(col("shs"), lit(0L), (acc, h) =>
+        acc + when(GraftFunctions.bloomContains(col("bf"), h), 0L)
+          .otherwise(1L)))
       .withColumn("novelty_ratio",
         when(col("n_shingles") > 0,
           round(col("n_novel") / col("n_shingles"), 6)))

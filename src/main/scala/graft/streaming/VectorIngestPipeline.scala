@@ -63,7 +63,6 @@ object VectorIngestPipeline {
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     val dim = codebook.head.length
     BatchDirs.runKeyed(embStream, checkpointDir, trigger) { (batch, batchId) =>
-      graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
       // generation guard: a restart fed a codebook that isn't the store's
       // encoding generation (the hand-passed-array drift the scaladoc
       // warns about) must fail the stream loud — its codes would be
@@ -134,7 +133,6 @@ object VectorIngestPipeline {
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     val dim = cells.head.length
     BatchDirs.runKeyed(embStream, checkpointDir, trigger) { (batch, batchId) =>
-      graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
       SimilarityOps.requireIvfPqFingerprints(batch.sparkSession,
         storeDir, cells, residCb, "runIvfPqIngest")
       val flagged = batch.withColumn("reject_reason", rejectReason(dim))

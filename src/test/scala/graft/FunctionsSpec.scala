@@ -680,6 +680,50 @@ class FunctionsSpec extends SparkSpec {
   private def sqlStr(s: String): String =
     "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
+  test("each typed constructor builds the expression its SQL name " +
+      "resolves to, and answers the same") {
+    val cb = Array(Array(0.5, -1.0), Array(2.0, 0.25))
+    val cbSql = "array(array(0.5d, -1.0d), array(2.0d, 0.25d))"
+    val df = Seq(
+      (Seq(11L, 22L, 33L), "a b c d", 1.0, 7L, Seq(1.0, 2.0)),
+      (Seq(5L, 4L), "x  y", 3.0, 8L, Seq(-1.0, 0.5)))
+      .toDF("hs", "text", "score", "id", "v")
+      .withColumn("bf", GraftFunctions.bloomAgg(col("id"), 64, 3)
+        .over(org.apache.spark.sql.expressions.Window.partitionBy()))
+    val G = GraftFunctions
+    val pairs = Seq(
+      G.minhashBandKeys(col("hs"), 16) -> "graft_minhash_band_keys(hs, 16)",
+      G.simhash64(col("hs")) -> "graft_simhash64(hs)",
+      G.minK(col("id"), 3) -> "graft_min_k(id, 3)",
+      G.topKIdsByScore(col("score"), col("id"), 1, true) ->
+        "graft_topk_ids(score, id, 1, true)",
+      G.topKRowsByScore(col("score"), col("id"), 2, false) ->
+        "graft_topk_rows(score, id, 2, false)",
+      G.topKRowsByScore(col("score"), col("id"), col("text"), 2, false) ->
+        "graft_topk_rows(score, id, text, 2, false)",
+      G.vecDot(col("v"), col("v")) -> "graft_vec_dot(v, v)",
+      G.editLb(col("text"), lit("a b")) -> "graft_edit_lb(text, 'a b')",
+      G.editHist(col("text")) -> "graft_edit_hist(text)",
+      G.histLb(G.editHist(col("text")), G.editHist(lit("a b"))) ->
+        "graft_hist_lb(graft_edit_hist(text), graft_edit_hist('a b'))",
+      G.codePoints(col("text")) -> "graft_code_points(text)",
+      G.shingleHashes(col("text"), 2) -> "graft_shingle_hashes(text, 2)",
+      G.winnowPositions(col("hs"), 2) -> "graft_winnow_positions(hs, 2)",
+      G.bloomAgg(col("id"), 64, 3) -> "graft_bloom_agg(id, 64, 3)",
+      G.bloomContains(col("bf"), col("id")) ->
+        "graft_bloom_contains(bf, id)",
+      G.cellDists(col("v"), cb) -> s"graft_cell_dists(v, $cbSql)",
+      G.pqEncode(col("v"), cb, 1) -> s"graft_pq_encode(v, $cbSql, 1)",
+      G.pqError(col("v"), cb, 1) -> s"graft_pq_error(v, $cbSql, 1)")
+    for ((typed, sql) <- pairs) {
+      val a = df.select(typed.as("k"))
+      val b = df.select(expr(sql).as("k"))
+      assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed),
+        s"$sql:\n${a.queryExecution.analyzed}\nvs\n${b.queryExecution.analyzed}")
+      assert(a.collect() === b.collect(), sql)
+    }
+  }
+
   test("GraftExtensions injection path registers every graft function") {
     import org.apache.spark.sql.SparkSession
     // `spark.sql.extensions` is a STATIC conf — on a shared SparkContext

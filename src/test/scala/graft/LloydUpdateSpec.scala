@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.GraftFunctions
 import graft.ops.SimilarityOps
 import graft.ops.SimilarityOps.{PqSub, PqSubDim}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -83,7 +84,6 @@ class LloydUpdateSpec extends SparkSpec {
 
   /** [[SimilarityOps.pqTrainedCodebook]] with the reference update. */
   private def refPq(embDf: DataFrame, k: Int, iters: Int): Codebook = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val valid = embDf
       .filter(col("embedding").isNotNull &&
         size(col("embedding")) === SimilarityOps.Dim &&
@@ -92,8 +92,7 @@ class LloydUpdateSpec extends SparkSpec {
         col("embedding").cast("array<double>").as("embedding"))
     (0 until iters).foldLeft(init(valid, k)) { (cb, _) =>
       pqCells(valid.select(
-        call_function("graft_pq_encode", col("embedding"),
-          typedLit(cb.map(_.toSeq).toSeq), lit(PqSubDim)).as("codes"),
+        GraftFunctions.pqEncode(col("embedding"), cb, PqSubDim).as("codes"),
         col("embedding")), cb)
     }
   }

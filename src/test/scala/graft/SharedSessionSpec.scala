@@ -1,13 +1,19 @@
 package graft
 
-import graft.ops.SimilarityOps
+import graft.ops.{ScaleOps, SimilarityOps}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.col
 
 /** graft as a library inside a shared, long-lived session: the engine
   * must not rewrite the session conf that other queries on the same
   * session plan under (the reference runs a dashboard poll beside live
   * ingest in one process). The trained vector faces run many short
   * bounded jobs, exactly where scoping AQE or the reducer count around
-  * each one is tempting, so they are the faces run here.
+  * each one is tempting, so they are the faces run here. Nor may it
+  * write into the session's function registry: the graft kernels are
+  * Columns built straight from their expressions, so every operator
+  * answers on a fresh session that registered nothing.
   */
 class SharedSessionSpec extends SparkSpec {
 
@@ -112,5 +118,55 @@ class SharedSessionSpec extends SparkSpec {
       assert(lines.size == n,
         s"$file must contain exactly $what:\n${lines.mkString("\n")}")
     }
+  }
+
+  private def functions(s: SparkSession): Set[FunctionIdentifier] =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .functionRegistry.listFunction().toSet
+
+  test("the public kernel helpers answer on a fresh session") {
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val v = Seq((1L, Seq(3.0, 4.0), Seq(4.0, 3.0)),
+        (2L, Seq(1.0, 0.0), Seq(0.0, 0.0)))
+      .toDF("id", "a", "b")
+    val rows = v.orderBy("id").select(
+      SimilarityOps.dot(col("a"), col("b")),
+      SimilarityOps.norm(col("a")),
+      SimilarityOps.cosine(col("a"), col("b"))).collect()
+    assert(rows.map(_.toSeq) === Array(Seq(24.0, 5.0, 0.96),
+      Seq(0.0, 1.0, null)))
+    val top = ScaleOps.topKIdsPerGroup(v.withColumn("g", col("id") % 1L),
+      Seq("g"), SimilarityOps.norm(col("a")), col("id"), 1, "top_id")
+      .collect()
+    assert(top.map(r => (r.getInt(1), r.getLong(2))) === Array((1, 1L)))
+  }
+
+  test("one face per kernel family, run on a fresh session, leaves its " +
+      "function registry unchanged") {
+    val fresh = spark.newSession()
+    val before = functions(fresh)
+    for (q <- Seq("q123", "q38", "q79", "q90", "q112", "q121")) {
+      val (name, face) = SparkEntry.resolve(q)
+      face(fresh, sfDir).collect()
+      val added = functions(fresh) -- before
+      assert(added.isEmpty,
+        s"$name wrote into the session's function registry: " +
+          added.map(_.funcName).toSeq.sorted.mkString(", "))
+    }
+  }
+
+  test("no operator reaches a graft kernel by its SQL name: outside " +
+      "functions/ no code line registers the names, calls one through " +
+      "call_function or names one in SQL text") {
+    assume(SourceLint.root.isDirectory, "spec must run from the repo root")
+    val offenders = (SourceLint.codeHits(
+        Seq("ensureRegistered(", "call_function(\"graft_")) ++
+      SourceLint.codeHits("\\bgraft_[a-z0-9_]+\\(".r))
+      .map(_._2).distinct
+      .filterNot(_.startsWith("src/main/scala/graft/functions/"))
+    assert(offenders.isEmpty,
+      "a kernel reached by name outside graft.functions:\n" +
+        offenders.mkString("\n"))
   }
 }
